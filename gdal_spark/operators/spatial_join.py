@@ -22,6 +22,10 @@ points of that polygon at once.
 
 from __future__ import annotations
 
+import math
+import struct
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType
@@ -29,7 +33,6 @@ from pyspark.sql.window import Window
 
 from .. import geom
 from ..grid import EARTH_RADIUS, ORIGIN_SHIFT
-import math
 
 
 # ---------------------------------------------------------------------------
@@ -63,22 +66,58 @@ def col_point_cell(x, y, zoom: int, tile_size: int = 256):
     return col_cell(zoom, tx, ty)
 
 
+def sql_double(v: float) -> str:
+    """``v`` as a Spark SQL DOUBLE literal (bit-exact, like ``F.lit(v)``)."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return f"CAST('{v}' AS DOUBLE)"
+
+
+def tile_coord_sql(m: str, zoom: int, tile_size: int = 256) -> str:
+    """SQL twin of the tile math in ``col_point_cell``: the tile index of
+    the Mercator coordinate ``m`` (SQL) at ``zoom``, clamped to the grid.
+    SQL text costs one driver-to-JVM call where the ``functions`` form
+    costs several per function."""
+    ir = 2 * math.pi * EARTH_RADIUS / tile_size
+    res = ir / (2.0**zoom)
+    t = (
+        f"CAST(ceil((({m} + {sql_double(ORIGIN_SHIFT)}) / {sql_double(res)})"
+        f" / {sql_double(tile_size)}) - 1 AS BIGINT)"
+    )
+    return f"greatest(CAST(0 AS BIGINT), least(CAST({(1 << zoom) - 1} AS BIGINT), {t}))"
+
+
+def _cell_sql(zoom: int, tx: str, ty: str) -> str:
+    """SQL twin of ``col_cell``."""
+    return (
+        f"shiftleft(CAST({zoom} AS BIGINT), {Z_SHIFT})"
+        f" | shiftleft(CAST({tx} AS BIGINT), {X_SHIFT}) | CAST({ty} AS BIGINT)"
+    )
+
+
+def point_cell_sql(x: str, y: str, zoom: int) -> str:
+    """SQL twin of ``col_point_cell`` over the SQL operands ``x``, ``y``."""
+    return _cell_sql(zoom, tile_coord_sql(x, zoom), tile_coord_sql(y, zoom))
+
+
+def sql_ident(name: str) -> str:
+    """Column ``name`` as SQL text resolving like ``F.col(name)``: dots
+    separate nested fields, backticks quote."""
+    if "`" in name:
+        return name
+    return "`" + name.replace(".", "`.`") + "`"
+
+
 def with_envelope_cells(df: DataFrame, zoom: int, out: str = "cell") -> DataFrame:
     """Explode each row into the cells covering its (minx..maxy) envelope —
     the distributed replacement for the reference's R-tree/quadtree index
     (SURVEY.md §4 "spatial index scan")."""
-    ir = 2 * math.pi * EARTH_RADIUS / 256
-    res = ir / (2.0**zoom)
-    n1 = F.lit((1 << zoom) - 1).cast("long")
-
-    def m2t(m):
-        t = (F.ceil(((m + ORIGIN_SHIFT) / res) / 256.0) - 1).cast("long")
-        return F.greatest(F.lit(0).cast("long"), F.least(n1, t))
-
+    x0, x1, y0, y1 = (tile_coord_sql(c, zoom) for c in ("minx", "maxx", "miny", "maxy"))
     return (
-        df.withColumn("_cx", F.explode(F.sequence(m2t(F.col("minx")), m2t(F.col("maxx")))))
-        .withColumn("_cy", F.explode(F.sequence(m2t(F.col("miny")), m2t(F.col("maxy")))))
-        .withColumn(out, col_cell(zoom, F.col("_cx"), F.col("_cy")))
+        df.withColumn("_cx", F.expr(f"explode(sequence({x0}, {x1}))"))
+        .withColumn("_cy", F.expr(f"explode(sequence({y0}, {y1}))"))
+        .withColumn(out, F.expr(_cell_sql(zoom, "_cx", "_cy")))
         .drop("_cx", "_cy")
     )
 
@@ -91,8 +130,6 @@ def with_envelope_cells(df: DataFrame, zoom: int, out: str = "cell") -> DataFram
 @F.pandas_udf(BooleanType())
 def _pip_udf(xs: pd.Series, ys: pd.Series, wkbs: pd.Series) -> pd.Series:
     """Exact point-in-polygon, vectorized per distinct polygon per batch."""
-    import numpy as np
-
     out = np.zeros(len(xs), dtype=bool)
     if len(xs) == 0:
         return pd.Series(out)
@@ -147,21 +184,16 @@ def point_in_polygon_join(
     distinct point rows with identical coordinates then collapse to one.
     Pass ``point_key`` whenever point identity matters.
     """
-    px, py = F.col(x), F.col(y)
-    env_pred = (
-        (px >= F.col("minx"))
-        & (px <= F.col("maxx"))
-        & (py >= F.col("miny"))
-        & (py <= F.col("maxy"))
-    )
+    px, py = sql_ident(x), sql_ident(y)
+    env_pred = f"{px} >= minx AND {px} <= maxx AND {py} >= miny AND {py} <= maxy"
 
     polys = polygons
     if cell_zoom is not None:
-        points = points.withColumn("_pcell", col_point_cell(px, py, cell_zoom))
+        points = points.withColumn("_pcell", F.expr(point_cell_sql(px, py, cell_zoom)))
         polys = with_envelope_cells(polys, cell_zoom, out="_pcell2")
-        cond = (F.col("_pcell") == F.col("_pcell2")) & env_pred
+        cond = F.expr(f"_pcell = _pcell2 AND {env_pred}")
     else:
-        cond = env_pred
+        cond = F.expr(env_pred)
         if broadcast_polys:
             polys = F.broadcast(polys)
 
@@ -211,34 +243,39 @@ def _refine(df: DataFrame, x: str, y: str, envelope_fast_accept: bool) -> DataFr
     # runs the ray-cast only for the non-rectangle groups — a separate
     # is_rect UDF OR'd in SQL would still evaluate the ray-cast for every
     # row (Spark evaluates Python UDFs in a pre-filter projection node).
-    return df.where(_pip_or_rect_udf(F.col(x), F.col(y), F.col("wkb")))
+    return df.where(_pip_or_rect_udf(x, y, "wkb"))
 
 
 def _wkb_is_rect(bb: bytes) -> bool:
+    """True when the WKB is a single-ring polygon equal to its envelope:
+    a closed 5-point ring through the four envelope corners along
+    axis-aligned edges."""
     try:
         g = geom.parse_wkb(bb)
-        if g.kind == geom.WKB_POLYGON and len(g.parts) == 1:
-            r = g.parts[0]
-            if len(r) == 5:
-                xs = sorted(set(r[:, 0].tolist()))
-                ys = sorted(set(r[:, 1].tolist()))
-                if len(xs) != 2 or len(ys) != 2:
-                    return False
-                # every edge must be axis-aligned (exactly one coord
-                # changes): a bowtie like (0,0)(2,2)(0,2)(2,0) has the
-                # same vertex SET as a rectangle but diagonal edges —
-                # fast-accepting its envelope would be wrong
-                d = np.diff(r, axis=0)
-                return bool(np.all((d[:, 0] == 0) != (d[:, 1] == 0)))
-    except Exception:
-        pass
-    return False
+    except (ValueError, IndexError, struct.error):
+        return False
+    if g.kind != geom.WKB_POLYGON or len(g.parts) != 1:
+        return False
+    r = g.parts[0]
+    if len(r) != 5 or not np.array_equal(r[0], r[4]):
+        return False
+    xs = np.unique(r[:4, 0])
+    ys = np.unique(r[:4, 1])
+    if len(xs) != 2 or len(ys) != 2:
+        return False
+    corners = {(x, y) for x in xs.tolist() for y in ys.tolist()}
+    if {tuple(p) for p in r[:4].tolist()} != corners:
+        return False
+    # every edge must be axis-aligned (exactly one coord changes): a
+    # bowtie like (0,0)(2,2)(0,2)(2,0) has the same vertex SET as a
+    # rectangle but diagonal edges — fast-accepting its envelope would
+    # be wrong
+    d = np.diff(r, axis=0)
+    return bool(np.all((d[:, 0] == 0) != (d[:, 1] == 0)))
 
 
 @F.pandas_udf(BooleanType())
 def _pip_or_rect_udf(xs: pd.Series, ys: pd.Series, wkbs: pd.Series) -> pd.Series:
-    import numpy as np
-
     out = np.zeros(len(xs), dtype=bool)
     if len(xs) == 0:
         return pd.Series(out)
