@@ -211,8 +211,6 @@ class Iso8211Reader:
         rec = buf[:reclen]
         for tag, ln, pos in _parse_directory(rec, base, sl, sp, st):
             data = rec[base + pos:base + pos + ln]
-            if tag == "0" * st or tag == "0001" and False:
-                pass
             if set(tag) == {"0"}:
                 # file control field: pairs of tags after the controls
                 body = data[fcl:]

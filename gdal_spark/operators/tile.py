@@ -16,25 +16,26 @@ Pipeline (SURVEY.md §3.3 mapping):
    digit (gdal2tiles.py:2964-3006, 1334-1394); other sources take the exact
    per-tile warp (the gdalalg_raster_tile.cpp:647-649 per-tile
    WarpRegionToBuffer formulation).
-4. **compose** — groupBy(z, tx, ty).applyInPandas: mosaic fragments in
+4. **compose** — a (z, tx, ty) hash repartition into ``defaultParallelism``
+   partitions, then groupBy(z, tx, ty).applyInPandas: mosaic fragments in
    image_id order (gdalbuildvrt placement, apps/gdalbuildvrt_lib.cpp),
    append alpha (gdal2tiles.py:2815), encode PNG, GDAL checksum
    (alg/gdalchecksum.cpp) + lineage columns. The tile-key shuffle **is**
    the mosaic.
-5. **overviews** — groupBy(parent tile).applyInPandas: place <=4 children
-   in a 2x2 buffer by (x%2, y-parity) (gdal2tiles.py:1536-1550), 2:1
-   average downsample with exact edge weights (gcore/overview.cpp), iterate
-   z-1 .. tminz.
+5. **overviews** — the same grouping keyed by the parent tile, children
+   in (tx, ty) order: place <=4 children in a 2x2 buffer by (x%2,
+   y-parity) (gdal2tiles.py:1536-1550), 2:1 average downsample with exact
+   edge weights (gcore/overview.cpp), iterate z-1 .. tminz.
 
 Scale notes: fragments, not whole images, cross the shuffle (<= ts*ts*c
-bytes each); hot low-zoom cells are handled by AQE skew-join plus the
-deliberate partial-composition structure (fragments of one tile can be
-pre-composed per shuffle partition before the final merge when
-``salt_partials`` is set).
+bytes each). The compose shuffle has an explicit partition count, so AQE
+cannot coalesce it: fragments are small PNGs, and a size-driven coalesce
+would put the whole CPU-bound mosaic into one task.
 """
 
 from __future__ import annotations
 
+import logging
 import math
 
 import numpy as np
@@ -49,6 +50,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _MERC = MercatorGrid()
+
+log = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -383,9 +386,29 @@ def _compose_group(pdf, tile_size: int):
     )
 
 
+def _compose_by_key(rows, keys, order, kernel, caller: str):
+    """``kernel`` once per ``keys`` group, returning TILE_SCHEMA rows.
+
+    The key-hash repartition has an explicit count, one task per core:
+    fragments are small PNGs, and AQE would otherwise coalesce their
+    shuffle by bytes into a single task. Each partition is sorted by
+    ``keys`` then ``order``; the grouped stage reuses that partitioning
+    and sort, so ``kernel`` sees each group's rows in ``order``."""
+    n = rows.sparkSession.sparkContext.defaultParallelism
+    log.info("%s: %d partitions from defaultParallelism", caller, n)
+    return (
+        rows.repartition(n, *keys)
+        .sortWithinPartitions(*keys, *order)
+        .groupBy(*keys)
+        .applyInPandas(kernel, schema=TILE_SCHEMA)
+    )
+
+
 def compose_tiles(fragments, tile_size: int = 256):
-    return fragments.groupBy("z", "tx", "ty").applyInPandas(
-        lambda pdf: _compose_group(pdf, tile_size), schema=TILE_SCHEMA
+    """Mosaic fragments into one tile per (z, tx, ty)."""
+    return _compose_by_key(
+        fragments, ("z", "tx", "ty"), (),
+        lambda pdf: _compose_group(pdf, tile_size), "compose_tiles",
     )
 
 
@@ -464,8 +487,9 @@ def overview_tiles(tiles, tile_size: int = 256):
         .withColumn("ptx", (F.col("tx") / 2).cast("long"))
         .withColumn("pty", (F.col("ty") / 2).cast("long"))
     )
-    return parents.groupBy("z", "ptx", "pty").applyInPandas(
-        lambda pdf: _overview_group(pdf, tile_size), schema=TILE_SCHEMA
+    return _compose_by_key(
+        parents, ("z", "ptx", "pty"), ("tx", "ty"),
+        lambda pdf: _overview_group(pdf, tile_size), "overview_tiles",
     )
 
 

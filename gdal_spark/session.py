@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the image workload.
 
-Local sandbox runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
-builder is driven by spark-submit conf. Design notes:
+Local sandbox runs ``local[$SPARK_GRAFT_CPUS]`` with a
+``$SPARK_GRAFT_DRIVER_MEM`` heap, both sized from the host when unset; on a
+real cluster the same builder is driven by spark-submit conf. Design notes:
 
 - AQE on (adaptive coalescing + skew-join): the z0 hot-cell skew the
   fixtures deliberately produce (FIXTURES.md §1) is handled by explicit
@@ -19,7 +20,21 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of MemAvailable (at least
+    1 GB): in local mode the driver JVM shares the host with one Python
+    worker per core, and a heap larger than the host gets the JVM killed."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    return f"{max(1024, kb // 2 // 1024)}m"
 
 
 def get_spark(
@@ -44,16 +59,17 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # pixel-group stages are CPU-bound per GROUP, not per byte: the
-        # 64MB default advisory size would coalesce a 350MB tile shuffle
-        # to ~6 partitions and cap parallelism regardless of cores
+        # grouped pandas stages are CPU-bound per group, not per byte: the
+        # 64MB default advisory size would coalesce a few-hundred-MB
+        # shuffle into a handful of tasks (the tile compose sets its own
+        # partition count and does not depend on this)
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         # ContextCleaner reclaims shuffle files / broadcasts / checkpoint
         # state only when driver GC collects their referents; with a large
         # heap GC may not run for the whole session, so accumulated state

@@ -4,7 +4,10 @@ Mirrors the reference test shape: per-tile GDAL checksums + tile-grid
 alignment (autotest/pyscripts/test_gdal2tiles.py:85-124) and caption
 passthrough through every shuffle (FIXTURES.md per-row invariant)."""
 
+import logging
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,9 +15,15 @@ from gdal_spark import codecs, fixtures
 from gdal_spark.checksum import image_checksums
 from gdal_spark.grid import MercatorGrid
 from gdal_spark.operators.tile import (
+    FRAGMENT_SCHEMA,
+    TILE_SCHEMA,
+    _compose_group,
+    _overview_group,
     assign_tiles,
+    compose_tiles,
     cut_base_tiles,
     native_zoom_col,
+    overview_tiles,
     tile_pyramid,
     tile_pyramid_direct,
 )
@@ -202,6 +211,132 @@ class TestMosaicCompose:
         ).collect()[0]
         assert agg.t > 0
         assert agg.mx >= 2  # at least one mosaic tile with 2+ sources
+
+
+# compose/overview vs a driver-side pandas groupby over the same kernels
+GROUP_TS = 16
+
+
+def _fragment(rng, z, tx, ty, image_id, c=3, opaque=True):
+    px = rng.integers(0, 256, (GROUP_TS, GROUP_TS, c), dtype=np.uint8)
+    mask = np.where(rng.random((GROUP_TS, GROUP_TS)) < 0.5, 255, 0).astype(np.uint8)
+    alpha = b"" if opaque else codecs.encode_png(mask, level=1)
+    return (z, tx, ty, image_id, codecs.encode_png(px, level=1), alpha, c)
+
+
+def _group_fragments():
+    """Five tiles, fewer than the test session's cores: one with seven
+    fragments (spans several Arrow batches of two), single-fragment RGB
+    and gray tiles, a gray fragment inside an RGB tile, and a z=0 tile."""
+    rng = np.random.default_rng(7)
+    rows = [
+        _fragment(rng, 5, 10, 10, f"img{i}", opaque=i % 3 == 0)
+        for i in (6, 2, 4, 0, 5, 1, 3)
+    ]
+    rows += [
+        _fragment(rng, 5, 10, 11, "img9"),
+        _fragment(rng, 5, 11, 10, "img8", c=1),
+        _fragment(rng, 5, 11, 11, "img12", opaque=False),
+        _fragment(rng, 5, 11, 11, "img10", c=1, opaque=False),
+        _fragment(rng, 5, 11, 11, "img11"),
+        _fragment(rng, 0, 0, 0, "img13"),
+    ]
+    rng.shuffle(rows)
+    return rows
+
+
+def _by_group(pdf, keys, order, kernel):
+    return pd.concat(
+        [kernel(g.sort_values(order)) for _k, g in pdf.groupby(keys, sort=True)],
+        ignore_index=True,
+    )
+
+
+def _tile_rows(rows):
+    return {
+        (int(r["z"]), int(r["tx"]), int(r["ty"])): (
+            bytes(r["png"]), int(r["checksum"]), list(r["checksums"]),
+            int(r["n_src"]), list(r["src_ids"]),
+        )
+        for r in rows
+    }
+
+
+@pytest.fixture(params=[2, None], ids=["batch2", "default_batch"])
+def arrow_batch(spark, request):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if request.param is not None:
+        spark.conf.set(key, str(request.param))
+    yield
+    spark.conf.set(key, old)
+
+
+class TestComposeGrouping:
+    def test_compose_matches_pandas_groupby(self, spark, arrow_batch):
+        rows = _group_fragments()
+        frags = spark.createDataFrame(rows, FRAGMENT_SCHEMA).repartition(3)
+        got = _tile_rows(compose_tiles(frags, GROUP_TS).collect())
+        pdf = pd.DataFrame(rows, columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"])
+        want = _by_group(
+            pdf, ["z", "tx", "ty"], ["image_id"], lambda g: _compose_group(g, GROUP_TS)
+        )
+        assert got == _tile_rows(want.to_dict("records"))
+        assert got[(5, 10, 10)][3:] == (7, [f"img{i}" for i in range(7)])
+
+    def test_overview_matches_pandas_groupby(self, spark, arrow_batch):
+        pdf = pd.DataFrame(
+            _group_fragments(), columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"]
+        )
+        children = _by_group(
+            pdf, ["z", "tx", "ty"], ["image_id"], lambda g: _compose_group(g, GROUP_TS)
+        )
+        tiles = spark.createDataFrame(children, TILE_SCHEMA).repartition(3)
+        got = _tile_rows(overview_tiles(tiles, GROUP_TS).collect())
+        parents = children[children["z"] > 0].assign(
+            ptx=children["tx"] // 2, pty=children["ty"] // 2
+        )
+        want = _by_group(
+            parents, ["z", "ptx", "pty"], ["tx", "ty"],
+            lambda g: _overview_group(g, GROUP_TS),
+        )
+        assert got == _tile_rows(want.to_dict("records"))
+        assert set(got) == {(4, 5, 5)} and got[(4, 5, 5)][3] == 12
+
+    def test_empty_input(self, spark):
+        frags = spark.createDataFrame([], FRAGMENT_SCHEMA)
+        assert compose_tiles(frags, GROUP_TS).collect() == []
+
+    def test_compose_stage_runs_one_task_per_core(self, spark, caplog):
+        """Fragments are small PNGs, so a size-driven AQE coalesce would
+        run the whole compose as one task; the explicit partition
+        count keeps one task per core."""
+        sc = spark.sparkContext
+        n = sc.defaultParallelism
+        assert n > 1
+        imgs = fixtures.images_df(spark, 4, tier="t2", partitions=2).persist()
+        imgs.count()
+        group = "test_compose_parallelism"
+        sc.setJobGroup(group, "compose parallelism")
+        try:
+            with caplog.at_level(logging.INFO, logger="gdal_spark.operators.tile"):
+                tiles = tile_pyramid_direct(imgs, levels_below=1).select("z").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            imgs.unpersist()
+        assert tiles
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(sid)
+            for jid in tracker.getJobIdsForGroup(group)
+            for sid in tracker.getJobInfo(jid).stageIds
+        ]
+        # the cut runs one task per image partition (2), the compose n
+        assert max(s.numTasks for s in stages if s is not None) == n
+        assert f"compose_tiles: {n} partitions from defaultParallelism" in [
+            r.getMessage() for r in caplog.records
+        ]
 
 
 class TestWarpTranslateDF:
