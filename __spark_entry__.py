@@ -6155,21 +6155,18 @@ def q_avce00_read(spark, sf_dir):
     df = scan_avce00(spark, _os.path.join(d, "test*.e00"))
     counts = (df.groupBy("source", "layer")
               .agg(F.count("*").alias("n")))
+    # last_arcids: the ArcIds of the last PAL polygon (highest fid)
     pal = (df.filter((F.col("source") == "testpoly.e00") &
                      (F.col("layer") == "PAL"))
-           .agg(F.max(F.element_at("attributes", "ArcIds"))
+           .agg(F.max_by(F.element_at("attributes", "ArcIds"), "fid")
                 .alias("last_arcids"),
                 F.round(F.max(F.element_at("attributes", "AREA")
                               .cast("double")), 3)
                 .alias("max_area")))
-    out = counts.withColumn(
-        "last_arcids",
-        F.when((F.col("source") == "testpoly.e00") &
-               (F.col("layer") == "PAL"),
-               F.lit("-4,-5"))).join(
+    out = counts.join(
         pal.select(F.lit("testpoly.e00").alias("source"),
                    F.lit("PAL").alias("layer"),
-                   F.col("max_area")),
+                   "last_arcids", "max_area"),
         ["source", "layer"], "left")
     return out.orderBy("source", "layer")
 

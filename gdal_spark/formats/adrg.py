@@ -34,7 +34,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 from .iso8211 import Iso8211Reader
 
 TILE = 128
@@ -157,61 +157,33 @@ def parse_adrg(gen_buf: bytes, img_buf: bytes, which: int = 0):
 def scan_adrg(spark, path_glob: str):
     """Glob of .GEN files -> images-table rows (3 bands per
     distribution rectangle), one task per GEN/IMG pair."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "band int, zna int, nam string, source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            gen = f.read()
+        base = os.path.dirname(r.path)
+        stem = os.path.basename(r.path)
+        rows = []
+        for wi, d in enumerate(parse_gen(gen)):
+            img_path = None
+            for cand in os.listdir(base):
+                if cand.lower() == d["bad"].lower():
+                    img_path = os.path.join(base, cand)
+                    break
+            if img_path is None:
+                continue
+            with open(img_path, "rb") as f:
+                img = f.read()
+            rgb, gt, _ = parse_adrg(gen, img, wi)
+            srid = 4326 if d["zna"] not in (9, 18) else 0
+            rows += [raster_row(f"{stem}:{wi}#{b}", rgb[:, :, b], gt,
+                                srid, band=b, zna=d["zna"], nam=d["nam"],
+                                source=stem)
+                     for b in range(3)]
+        return rows
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    gen = f.read()
-                descs = parse_gen(gen)
-                base = os.path.dirname(r.path)
-                stem = os.path.basename(r.path)
-                for wi, d in enumerate(descs):
-                    img_path = None
-                    for cand in os.listdir(base):
-                        if cand.lower() == d["bad"].lower():
-                            img_path = os.path.join(base, cand)
-                            break
-                    if img_path is None:
-                        continue
-                    with open(img_path, "rb") as f:
-                        img = f.read()
-                    rgb, gt, _ = parse_adrg(gen, img, wi)
-                    for b in range(3):
-                        rows.append({
-                            "image_id": f"{stem}:{wi}#{b}",
-                            "bytes": codecs.encode_raw(
-                                np.ascontiguousarray(rgb[:, :, b])),
-                            "w": rgb.shape[1], "h": rgb.shape[0],
-                            "fmt": "raw",
-                            "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                            "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                            "srid": 4326 if d["zna"] not in (9, 18)
-                            else 0,
-                            "band": b, "zna": d["zna"],
-                            "nam": d["nam"], "source": stem,
-                        })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -48,7 +48,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, local_path, raster_row, scan_files, write_files
 
 NO_DATA_INT = -2147483647
 NO_DATA_FLOAT = -3.4028234663852886e38
@@ -323,79 +323,36 @@ def format_aig(arr: np.ndarray, gt) -> dict[str, bytes]:
 def scan_aig(spark, path_glob: str, srid: int = 0):
     """Glob of coverage DIRECTORIES -> images-table rows, one task
     per coverage."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(p for p in _glob.glob(pat) if os.path.isdir(p))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, proj string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr, gt, nodata, proj = parse_aig(r.path)
-                rows.append({
-                    "image_id": os.path.basename(r.path.rstrip("/")),
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(srid), "nodata": nodata, "proj": proj,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "proj"],
-            )
+    def read(r):
+        arr, gt, nodata, proj = parse_aig(r.path)
+        return [raster_row(os.path.basename(r.path.rstrip("/")), arr, gt,
+                           int(srid), nodata, proj=proj)]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    # a wildcard keeps only directories; a literal path is taken as-is
+    pat = local_path(path_glob)
+    paths = glob_paths(path_glob,
+                       keep=lambda p: p == pat or os.path.isdir(p))
+    return scan_files(spark, paths, read, schema)
 
 
 def write_aig(df, out_dir: str) -> list[str]:
     """Images-table rows -> one coverage directory per row, written
     by the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        if arr.ndim == 3:
+            arr = arr[:, :, 0]
+        if not np.issubdtype(arr.dtype, np.floating):
+            arr = arr.astype(np.int32)
+        cov = os.path.join(out_dir, r.image_id)
+        os.makedirs(cov, exist_ok=True)
+        for name, payload in format_aig(arr, gt).items():
+            with open(os.path.join(cov, name), "wb") as f:
+                f.write(payload)
+        return cov
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if arr.ndim == 3:
-                    arr = arr[:, :, 0]
-                if not np.issubdtype(arr.dtype, np.floating):
-                    arr = arr.astype(np.int32)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                cov = os.path.join(out_dir, r.image_id)
-                os.makedirs(cov, exist_ok=True)
-                for name, payload in format_aig(arr, gt).items():
-                    with open(os.path.join(cov, name), "wb") as f:
-                        f.write(payload)
-                names.append(cov)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -38,9 +38,7 @@ from __future__ import annotations
 import os
 import struct
 
-import numpy as np
-
-from ._util import local_path
+from ._util import glob_paths, scan_files
 
 
 def _wkb_point(x, y):
@@ -338,37 +336,16 @@ def e00_features(text: str):
 
 def scan_avce00(spark, path_glob: str):
     """Glob of .e00 exports -> feature rows, one task per file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("layer string, fid int, geometry binary, "
               "attributes map<string,string>, source string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, encoding="latin-1") as f:
-                    text = f.read()
-                stem = os.path.basename(r.path)
-                for ft in e00_features(text):
-                    rows.append({
-                        "layer": ft["layer"], "fid": ft["fid"],
-                        "geometry": ft["wkb"],
-                        "attributes": ft["attrs"],
-                        "source": stem,
-                    })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
+    def read(r):
+        with open(r.path, encoding="latin-1") as f:
+            text = f.read()
+        stem = os.path.basename(r.path)
+        return [{"layer": ft["layer"], "fid": ft["fid"],
+                 "geometry": ft["wkb"], "attributes": ft["attrs"],
+                 "source": stem}
+                for ft in e00_features(text)]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -36,7 +36,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 from .gif import _pal_str, pal_from_str
 
 
@@ -263,86 +263,35 @@ def format_bsb(arr: np.ndarray, palette: np.ndarray,
 def scan_bsb(spark, path_glob: str, srid: int = 4326):
     """Glob of .kap files -> images-table rows (index band +
     palette + GCP metadata), one task per file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, palette string, gcps string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                arr, palette, gcps, meta = parse_bsb(buf)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": 0.0, "gt1": 1.0, "gt2": 0.0,
-                    "gt3": 0.0, "gt4": 0.0, "gt5": -1.0,
-                    "srid": int(srid), "nodata": None,
-                    "palette": _pal_str(palette),
-                    "gcps": ";".join(
-                        "%g,%g,%g,%g" % g for g in gcps),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "palette", "gcps"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        arr, palette, gcps, meta = parse_bsb(buf)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, (0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+                           int(srid), palette=_pal_str(palette),
+                           gcps=";".join("%g,%g,%g,%g" % g for g in gcps))]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def write_bsb(df, out_dir: str) -> list[str]:
     """Images-table rows (uint8 index band >= 1 + palette column)
     -> one .kap per row, written by the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        if arr.ndim == 3:
+            arr = arr[:, :, 0]
+        palette = getattr(r, "palette", None)
+        pal = (pal_from_str(palette) if isinstance(palette, str)
+               else np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1))
+        path = os.path.join(out_dir, f"{r.image_id}.kap")
+        with open(path, "wb") as f:
+            f.write(format_bsb(arr.astype(np.uint8), pal))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_pal = "palette" in df.columns
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if arr.ndim == 3:
-                    arr = arr[:, :, 0]
-                pal = (pal_from_str(r.palette)
-                       if has_pal and isinstance(r.palette, str)
-                       else np.stack(
-                           [np.arange(256, dtype=np.uint8)] * 3,
-                           axis=1))
-                path = os.path.join(out_dir, f"{r.image_id}.kap")
-                with open(path, "wb") as f:
-                    f.write(format_bsb(arr.astype(np.uint8), pal))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

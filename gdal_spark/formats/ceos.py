@@ -24,7 +24,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 
 CRT_IMAGE_FDR = 0x3FC01212
 
@@ -98,50 +98,24 @@ def read_ceos_window(buf: bytes, band: int, y0: int, ny: int,
 def scan_ceos(spark, path_glob: str, max_lines: int = 0):
     """Glob of CEOS imagery files -> images-table rows (one per
     band); max_lines caps materialization for truncated tapes."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, band int, declared_lines int, "
               "source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.basename(r.path)
+        h = parse_ceos_header(buf)
+        avail = max(
+            0, (len(buf) - h["fdr_len"]) //
+            (h["bands"] * h["rec_len"]))
+        ny = min(h["lines"], avail + 1)
+        if max_lines:
+            ny = min(ny, max_lines)
+        return [raster_row(f"{stem}#{b}", read_ceos_window(buf, b, 0, ny),
+                           None, None, band=b,
+                           declared_lines=h["lines"], source=stem)
+                for b in range(1, h["bands"] + 1)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.basename(r.path)
-                h = parse_ceos_header(buf)
-                avail = max(
-                    0, (len(buf) - h["fdr_len"]) //
-                    (h["bands"] * h["rec_len"]))
-                ny = min(h["lines"], avail + 1)
-                if max_lines:
-                    ny = min(ny, max_lines)
-                for b in range(1, h["bands"] + 1):
-                    arr = read_ceos_window(buf, b, 0, ny)
-                    rows.append({
-                        "image_id": f"{stem}#{b}",
-                        "bytes": codecs.encode_raw(arr),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw", "band": b,
-                        "declared_lines": h["lines"],
-                        "source": stem,
-                    })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

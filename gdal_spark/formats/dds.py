@@ -32,7 +32,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 
 DDPF_ALPHAPIXELS = 0x1
 DDPF_FOURCC = 0x4
@@ -265,40 +265,15 @@ def format_dds(rgba: np.ndarray, compression: str = "NONE") -> bytes:
 def scan_dds(spark, path_glob: str):
     """Glob of .dds files -> RGBA images-table rows, one task per
     file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, compression string, source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.basename(r.path)
+        rgba, comp = parse_dds(buf)
+        return [raster_row(stem, rgba, None, None, compression=comp,
+                           source=stem)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.basename(r.path)
-                rgba, comp = parse_dds(buf)
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(rgba),
-                    "w": rgba.shape[1], "h": rgba.shape[0],
-                    "fmt": "raw", "compression": comp,
-                    "source": stem,
-                })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

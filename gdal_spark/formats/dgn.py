@@ -48,7 +48,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, scan_files
 from .vicar import _vax_d
 
 DGNT_LINE = 3
@@ -265,49 +265,23 @@ def scan_dgn(spark, path_glob: str):
     """Glob of .dgn files -> DataFrame (fid, geometry WKB, Type,
     Level, GraphicGroup, ColorIndex, Weight, Style, Text, source),
     one task per file — the reference layer's field set."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("fid bigint, geometry binary, Type int, Level int, "
               "GraphicGroup int, ColorIndex int, Weight int, "
               "Style int, Text string, source string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                for i, ft in enumerate(parse_dgn(buf)):
-                    rows.append({
-                        "fid": i,
-                        "geometry": ft["wkb"],
-                        "Type": ft["type"], "Level": ft["level"],
-                        "GraphicGroup": ft["graphic_group"],
-                        "ColorIndex": ft["color"],
-                        "Weight": ft["weight"], "Style": ft["style"],
-                        "Text": ft["text"], "source": stem,
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["fid", "geometry", "Type", "Level",
-                         "GraphicGroup", "ColorIndex", "Weight",
-                         "Style", "Text", "source"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [{"fid": i, "geometry": ft["wkb"],
+                 "Type": ft["type"], "Level": ft["level"],
+                 "GraphicGroup": ft["graphic_group"],
+                 "ColorIndex": ft["color"],
+                 "Weight": ft["weight"], "Style": ft["style"],
+                 "Text": ft["text"], "source": stem}
+                for i, ft in enumerate(parse_dgn(buf))]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 __all__ = ["parse_dgn", "scan_dgn"]

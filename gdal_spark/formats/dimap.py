@@ -35,7 +35,7 @@ import xml.etree.ElementTree as ET
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, local_path, raster_row, scan_files
 from .gtiff import parse_gtiff
 
 
@@ -249,90 +249,38 @@ def read_til(til_path: str):
 def scan_dimap(spark, path_glob: str):
     """Glob of DIMAP metadata files or product dirs -> images-table
     rows (one row per band)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, band int, nbands int, srid int, "
               "profile string, processing_level string, "
               "source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        arr, info = read_dimap(r.path)
+        stem = os.path.basename(r.path.rstrip("/"))
+        return [raster_row(f"{stem}#{b}", arr[:, :, b], None,
+                           info.get("srid", 0), band=b,
+                           nbands=arr.shape[2],
+                           profile=info.get("METADATA_PROFILE", ""),
+                           processing_level=info.get(
+                               "PROCESSING_LEVEL", ""),
+                           source=stem)
+                for b in range(arr.shape[2])]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr, info = read_dimap(r.path)
-                stem = os.path.basename(r.path.rstrip("/"))
-                for b in range(arr.shape[2]):
-                    rows.append({
-                        "image_id": f"{stem}#{b}",
-                        "bytes": codecs.encode_raw(
-                            np.ascontiguousarray(arr[:, :, b])),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw", "band": b,
-                        "nbands": arr.shape[2],
-                        "srid": info.get("srid", 0),
-                        "profile": info.get("METADATA_PROFILE", ""),
-                        "processing_level":
-                            info.get("PROCESSING_LEVEL", ""),
-                        "source": stem,
-                    })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def scan_til(spark, path_glob: str):
     """Glob of .til files -> images-table rows."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, sat_id string, cloud_cover string, "
               "source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        arr, md = read_til(r.path)
+        stem = os.path.basename(r.path)
+        return [raster_row(stem, arr, None, None,
+                           sat_id=md.get("satId", ""),
+                           cloud_cover=md.get("cloudCover", ""),
+                           source=stem)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr, md = read_til(r.path)
-                stem = os.path.basename(r.path)
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(
-                        np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0],
-                    "fmt": "raw",
-                    "sat_id": md.get("satId", ""),
-                    "cloud_cover": md.get("cloudCover", ""),
-                    "source": stem,
-                })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -45,8 +45,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -213,19 +212,10 @@ def scan_dted(spark, path_glob: str):
             rows = []
             for r in pdf.itertuples(index=False):
                 arr, gt, srid, nodata = parse_dted(bytes(r.content))
-                rows.append({
-                    "image_id": os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0", "gt1",
-                         "gt2", "gt3", "gt4", "gt5", "srid", "nodata"],
-            )
+                rows.append(raster_row(
+                    os.path.splitext(os.path.basename(r.path))[0],
+                    arr, gt, srid, nodata))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -237,24 +227,13 @@ def scan_dted(spark, path_glob: str):
 def write_dted(df, out_dir: str, suffix: str = "dt0"):
     """One DTED cell per row, written by the task that holds the row
     (the distributed many-files layout shared by the .tif/.asc sinks)."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
     has_srid = "srid" in df.columns
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                srid = int(r.srid) if has_srid and r.srid is not None else 4326
-                path = os.path.join(out_dir, f"{r.image_id}.{suffix}")
-                with open(path, "wb") as f:
-                    f.write(format_dted(arr, gt, srid=srid))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
+    def dump_row(r, arr, gt, nd, out_dir):
+        srid = int(r.srid) if has_srid and r.srid is not None else 4326
+        path = os.path.join(out_dir, f"{r.image_id}.{suffix}")
+        with open(path, "wb") as f:
+            f.write(format_dted(arr, gt, srid=srid))
+        return path
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

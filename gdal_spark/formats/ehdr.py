@@ -37,7 +37,8 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import (glob_paths, local_path, raster_row, scan_files,
+                    write_files)
 from .envi import OUT_SCHEMA, decode_envi
 
 
@@ -181,19 +182,12 @@ def scan_ehdr(spark, path_glob: str):
     """Glob of EHdr data files (.bil/.flt/.bsq/...; not the .hdr) ->
     images-table rows; driver reads only the header texts, one task
     per cube (the ENVI scan shape)."""
-    import glob as _glob
-
-    import pandas as pd
+    import json
 
     from .. import codecs
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    paths = [p for p in paths
-             if not p.endswith((".hdr", ".prj", ".clr", ".stx"))]
-    if not paths:
-        raise FileNotFoundError(path_glob)
+    paths = glob_paths(path_glob, keep=lambda p: not p.endswith(
+        (".hdr", ".prj", ".clr", ".stx")))
     tasks = []
     for p in paths:
         with open(header_path_for(p)) as f:
@@ -202,54 +196,30 @@ def scan_ehdr(spark, path_glob: str):
         srid = _srid_from_prj(p)
         signed8 = (hdr.get("pixeltype", "").upper() == "SIGNEDINT"
                    and envi["data type"] == "1")
-        import json
-
         tasks.append((p, json.dumps(envi), int(signed8),
                       gt[0], gt[1], gt[2], gt[3], gt[4], gt[5],
                       int(srid),
                       float(nodata) if nodata is not None else None))
+    task_ddl = ("path string, envi string, signed8 int, gt0 double, "
+                "gt1 double, gt2 double, gt3 double, gt4 double, "
+                "gt5 double, srid int, nodata double")
 
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, envi string, signed8 int, gt0 double, gt1 double, "
-        "gt2 double, gt3 double, gt4 double, gt5 double, srid int, "
-        "nodata double",
-    )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, _g, _s, _n = decode_envi(f.read(), json.loads(r.envi))
+        if r.signed8 and arr.dtype == np.uint8:
+            arr = arr.view(np.int8)
+        if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
+            arr = arr.astype(np.float64)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        nodata = (None if r.nodata is None or
+                  (isinstance(r.nodata, float) and np.isnan(r.nodata))
+                  else float(r.nodata))
+        gt = tuple(getattr(r, f"gt{i}") for i in range(6))
+        return [raster_row(stem, arr, gt, int(r.srid), nodata)]
 
-    def read_cubes(batches):
-        import json as _json
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                envi = _json.loads(r.envi)
-                with open(r.path, "rb") as f:
-                    arr, _g, _s, _n = decode_envi(f.read(), envi)
-                if r.signed8 and arr.dtype == np.uint8:
-                    arr = arr.view(np.int8)
-                if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
-                    arr = arr.astype(np.float64)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": r.gt0, "gt1": r.gt1, "gt2": r.gt2,
-                    "gt3": r.gt3, "gt4": r.gt4, "gt5": r.gt5,
-                    "srid": int(r.srid),
-                    "nodata": (None if r.nodata is None or
-                               (isinstance(r.nodata, float)
-                                and np.isnan(r.nodata))
-                               else float(r.nodata)),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt",
-                         "gt0", "gt1", "gt2", "gt3", "gt4", "gt5",
-                         "srid", "nodata"],
-            )
-
-    return tdf.mapInPandas(read_cubes, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=(task_ddl, tasks))
 
 
 def write_ehdr(df, out_dir: str, layout: str = "bil") -> list[str]:
@@ -257,86 +227,70 @@ def write_ehdr(df, out_dir: str, layout: str = "bil") -> list[str]:
     that holds the row. Float32 rows get the GridFloat spelling the
     reference emits (PIXELTYPE FLOAT); the header carries the
     reference's CreateCopy key set."""
-    import pandas as pd
-
-    from .. import codecs
-
     if layout not in ("bil", "bip", "bsq"):
         raise ValueError(f"layout {layout!r}")
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                a = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if a.ndim == 2:
-                    a = a[:, :, None]
-                hh, ww, nb = a.shape
-                dt = a.dtype
-                if dt == np.int8:
-                    ptype, nbits = "SIGNEDINT", 8
-                elif dt.kind == "f":
-                    a = a.astype(np.float32)
-                    dt = a.dtype
-                    ptype, nbits = "FLOAT", 32
-                elif dt.kind == "i":
-                    a = a.astype(np.int32 if dt.itemsize > 2
-                                 else np.int16)
-                    dt = a.dtype
-                    ptype, nbits = "SIGNEDINT", dt.itemsize * 8
-                else:
-                    a = a.astype({1: np.uint8, 2: np.uint16}
-                                 .get(dt.itemsize, np.uint32))
-                    dt = a.dtype
-                    ptype, nbits = "UNSIGNEDINT", dt.itemsize * 8
-                a = a.astype(dt.newbyteorder("<"))
-                if layout == "bil":
-                    cube = a.transpose(0, 2, 1)
-                elif layout == "bsq":
-                    cube = a.transpose(2, 0, 1)
-                else:
-                    cube = a
-                gt = [float(getattr(r, f"gt{i}")) for i in range(6)]
-                ext = ".flt" if ptype == "FLOAT" and nb == 1 else ".bil"
-                base = os.path.join(out_dir, str(r.image_id))
-                with open(base + ext, "wb") as f:
-                    f.write(np.ascontiguousarray(cube).tobytes())
-                rowbytes = ww * dt.itemsize
-                hdr = [
-                    "BYTEORDER      I",
-                    f"LAYOUT         {layout.upper()}",
-                    f"NROWS          {hh}",
-                    f"NCOLS          {ww}",
-                    f"NBANDS         {nb}",
-                    f"NBITS          {nbits}",
-                    f"BANDROWBYTES   {rowbytes}",
-                    f"TOTALROWBYTES  {rowbytes * (nb if layout == 'bil' else 1)}",
-                    f"PIXELTYPE      {ptype}",
-                    f"ULXMAP         {gt[0] + gt[1] / 2!r}",
-                    f"ULYMAP         {gt[3] + gt[5] / 2!r}",
-                    f"XDIM           {gt[1]!r}",
-                    f"YDIM           {-gt[5]!r}",
-                ]
-                nd = getattr(r, "nodata", None)
-                if nd is not None and not pd.isna(nd):
-                    hdr.append(f"NODATA         {float(nd)!r}")
-                with open(base + ".hdr", "w") as f:
-                    f.write("\n".join(hdr) + "\n")
-                srid = int(getattr(r, "srid", 0) or 0)
-                if srid:
-                    try:
-                        from ..crs_wkt import export_wkt
+    def dump_row(r, a, gt, nd, out_dir):
+        if a.ndim == 2:
+            a = a[:, :, None]
+        hh, ww, nb = a.shape
+        dt = a.dtype
+        if dt == np.int8:
+            ptype, nbits = "SIGNEDINT", 8
+        elif dt.kind == "f":
+            a = a.astype(np.float32)
+            dt = a.dtype
+            ptype, nbits = "FLOAT", 32
+        elif dt.kind == "i":
+            a = a.astype(np.int32 if dt.itemsize > 2
+                         else np.int16)
+            dt = a.dtype
+            ptype, nbits = "SIGNEDINT", dt.itemsize * 8
+        else:
+            a = a.astype({1: np.uint8, 2: np.uint16}
+                         .get(dt.itemsize, np.uint32))
+            dt = a.dtype
+            ptype, nbits = "UNSIGNEDINT", dt.itemsize * 8
+        a = a.astype(dt.newbyteorder("<"))
+        if layout == "bil":
+            cube = a.transpose(0, 2, 1)
+        elif layout == "bsq":
+            cube = a.transpose(2, 0, 1)
+        else:
+            cube = a
+        ext = ".flt" if ptype == "FLOAT" and nb == 1 else ".bil"
+        base = os.path.join(out_dir, str(r.image_id))
+        with open(base + ext, "wb") as f:
+            f.write(np.ascontiguousarray(cube).tobytes())
+        rowbytes = ww * dt.itemsize
+        hdr = [
+            "BYTEORDER      I",
+            f"LAYOUT         {layout.upper()}",
+            f"NROWS          {hh}",
+            f"NCOLS          {ww}",
+            f"NBANDS         {nb}",
+            f"NBITS          {nbits}",
+            f"BANDROWBYTES   {rowbytes}",
+            f"TOTALROWBYTES  {rowbytes * (nb if layout == 'bil' else 1)}",
+            f"PIXELTYPE      {ptype}",
+            f"ULXMAP         {gt[0] + gt[1] / 2!r}",
+            f"ULYMAP         {gt[3] + gt[5] / 2!r}",
+            f"XDIM           {gt[1]!r}",
+            f"YDIM           {-gt[5]!r}",
+        ]
+        if nd is not None:
+            hdr.append(f"NODATA         {float(nd)!r}")
+        with open(base + ".hdr", "w") as f:
+            f.write("\n".join(hdr) + "\n")
+        srid = int(getattr(r, "srid", 0) or 0)
+        if srid:
+            try:
+                from ..crs_wkt import export_wkt
 
-                        with open(base + ".prj", "w") as f:
-                            f.write(export_wkt(srid))
-                    except ValueError:
-                        pass
-                names.append(base + ext)
-            yield pd.DataFrame({"path": names})
+                with open(base + ".prj", "w") as f:
+                    f.write(export_wkt(srid))
+            except ValueError:
+                pass
+        return base + ext
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -40,9 +40,8 @@ import os
 import re
 
 import numpy as np
-import pandas as pd
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 from .. import codecs
 
 OUT_SCHEMA = (
@@ -258,81 +257,39 @@ def scan_envi(spark, path_glob: str):
     images-table rows. The driver reads only the paired .hdr texts
     (tiny), then fans out exactly one task per data file; the task
     reads + deinterleaves its own cube."""
-    import glob as _glob
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    paths = [p for p in paths if not p.endswith(".hdr")]
-    if not paths:
-        raise FileNotFoundError(path_glob)
     tasks = []
-    for p in paths:
+    for p in glob_paths(path_glob, keep=lambda p: not p.endswith(".hdr")):
         with open(header_path_for(p)) as f:
             tasks.append((p, f.read()))
 
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, hdr string",
-    )
+    def read(r):
+        hdr = parse_envi_header(r.hdr)
+        with open(r.path, "rb") as f:
+            arr, gt, srid, nodata = decode_envi(f.read(), hdr)
+        if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
+            arr = arr.astype(np.float64)
+        stem = os.path.basename(r.path)
+        stem = os.path.splitext(stem)[0] if "." in stem else stem
+        return [raster_row(stem, arr, gt, srid, nodata)]
 
-    def read_cubes(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                hdr = parse_envi_header(r.hdr)
-                with open(r.path, "rb") as f:
-                    arr, gt, srid, nodata = decode_envi(f.read(), hdr)
-                if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
-                    arr = arr.astype(np.float64)
-                stem = os.path.basename(r.path)
-                stem = os.path.splitext(stem)[0] if "." in stem else stem
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0", "gt1",
-                         "gt2", "gt3", "gt4", "gt5", "srid", "nodata"],
-            )
-
-    return tdf.mapInPandas(read_cubes, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=("path string, hdr string", tasks))
 
 
 def write_envi(df, out_dir: str, interleave: str = "bsq"):
     """One .img + .hdr pair per row, written by the task that holds the
     row (the distributed many-files layout shared by the other raster
     sinks)."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
-    has_srid = "srid" in df.columns
+    def dump_row(r, arr, gt, nd, out_dir):
+        srid = getattr(r, "srid", None)
+        srid = int(srid) if srid is not None else 0
+        cube, hdr = format_envi(arr, gt, srid=srid, nodata=nd,
+                                interleave=interleave)
+        path = os.path.join(out_dir, f"{r.image_id}.img")
+        with open(path, "wb") as f:
+            f.write(cube)
+        with open(path[:-4] + ".hdr", "w") as f:
+            f.write(hdr)
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = (float(r.nodata) if has_nodata and r.nodata is not None
-                      and not pd.isna(r.nodata) else None)
-                srid = int(r.srid) if has_srid and r.srid is not None else 0
-                cube, hdr = format_envi(arr, gt, srid=srid, nodata=nd,
-                                        interleave=interleave)
-                path = os.path.join(out_dir, f"{r.image_id}.img")
-                with open(path, "wb") as f:
-                    f.write(cube)
-                with open(path[:-4] + ".hdr", "w") as f:
-                    f.write(hdr)
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

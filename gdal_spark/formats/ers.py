@@ -37,7 +37,7 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _find_ci
 
 _CELLTYPES = {
@@ -266,91 +266,38 @@ def format_ers(arr: np.ndarray, gt=None, nodata=None,
 def scan_ers(spark, path_glob: str, srid: int = 0):
     """Glob of .ers headers -> images-table rows, one task per
     header (the raw companion is read by the task)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, proj string, stats string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "r", encoding="latin-1") as f:
-                    text = f.read()
-                stem = os.path.basename(r.path)
-                stem = stem[:stem.rfind(".")] if "." in stem else stem
-                data_path = _find_ci(os.path.dirname(r.path), stem)
-                with open(data_path, "rb") as f:
-                    data = f.read()
-                arr, gt, nodata, proj, stats = parse_ers(text, data)
-                if gt is None:
-                    gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(srid), "nodata": nodata,
-                    "proj": proj, "stats": stats,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "proj", "stats"],
-            )
+    def read(r):
+        with open(r.path, "r", encoding="latin-1") as f:
+            text = f.read()
+        stem = os.path.basename(r.path)
+        stem = stem[:stem.rfind(".")] if "." in stem else stem
+        data_path = _find_ci(os.path.dirname(r.path), stem)
+        with open(data_path, "rb") as f:
+            data = f.read()
+        arr, gt, nodata, proj, stats = parse_ers(text, data)
+        if gt is None:
+            gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
+        return [raster_row(stem, arr, gt, int(srid), nodata, proj=proj,
+                           stats=stats)]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def write_ers(df, out_dir: str) -> list[str]:
     """Images-table rows -> one .ers + companion pair per row,
     written by the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        header, data = format_ers(arr, gt, nodata=nd)
+        path = os.path.join(out_dir, f"{r.image_id}.ers")
+        with open(path, "w", encoding="ascii") as f:
+            f.write(header)
+        with open(os.path.join(out_dir, r.image_id), "wb") as f:
+            f.write(data)
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = None
-                if (has_nodata and r.nodata is not None
-                        and not pd.isna(r.nodata)):
-                    nd = float(r.nodata)
-                header, data = format_ers(arr, gt, nodata=nd)
-                path = os.path.join(out_dir, f"{r.image_id}.ers")
-                with open(path, "w", encoding="ascii") as f:
-                    f.write(header)
-                with open(os.path.join(out_dir, r.image_id), "wb") as f:
-                    f.write(data)
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

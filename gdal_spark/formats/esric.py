@@ -38,7 +38,7 @@ import zipfile
 
 import numpy as np
 
-from ._util import local_path
+from ._util import local_path, raster_row, scan_files
 
 BSZ = 128
 WEB_MERC_ORIGIN = 20037508.342787
@@ -164,6 +164,32 @@ def _decode_tile(payload: bytes, tsz: int):
     return arr[:tsz, :tsz].astype(np.uint8)
 
 
+def _bundle_canvas(src, conf, lod: int, by: int, bx: int):
+    """RGBA pixels of the bundle whose top-left tile is (by, bx): the
+    bundle is read once and every tile is sliced from that buffer;
+    missing tiles (or a missing bundle) stay zero."""
+    tsz = conf["tsz"]
+    nt = 1 << lod
+    span = min(BSZ, nt - by), min(BSZ, nt - bx)
+    canvas = np.zeros((span[0] * tsz, span[1] * tsz, 4), np.uint8)
+    data = src.read(f"{conf['layout']}/L{lod:02d}/"
+                    f"R{by:04x}C{bx:04x}.bundle")
+    idx = _read_bundle_index(data)
+    if idx is None:
+        return canvas
+    for ty in range(span[0]):
+        for tx in range(span[1]):
+            v = int(idx[ty * BSZ + tx])
+            size = v >> 40
+            off = v & 0xFFFFFFFFFF
+            if size == 0:
+                continue
+            tile = _decode_tile(data[off:off + size], tsz)
+            canvas[ty * tsz:ty * tsz + tile.shape[0],
+                   tx * tsz:tx * tsz + tile.shape[1], :] = tile
+    return canvas
+
+
 def read_esric_level(path: str, lod: int):
     """Cache path (dir with conf.xml / .tar / .tpkx) + LOD ->
     ((n, n, 4) uint8 RGBA world grid, gt)."""
@@ -176,24 +202,9 @@ def read_esric_level(path: str, lod: int):
     res = conf["lods"].get(lod)
     for by in range(0, ntiles, BSZ):
         for bx in range(0, ntiles, BSZ):
-            rel = (f"{conf['layout']}/L{lod:02d}/"
-                   f"R{by:04x}C{bx:04x}.bundle")
-            idx = _read_bundle_index(src.read(rel))
-            if idx is None:
-                continue
-            for ty in range(min(BSZ, ntiles - by)):
-                for tx in range(min(BSZ, ntiles - bx)):
-                    v = int(idx[ty * BSZ + tx])
-                    size = v >> 40
-                    off = v & 0xFFFFFFFFFF
-                    if size == 0:
-                        continue
-                    data = src.read(rel)[off:off + size]
-                    tile = _decode_tile(data, tsz)
-                    y0 = (by + ty) * tsz
-                    x0 = (bx + tx) * tsz
-                    out[y0:y0 + tile.shape[0],
-                        x0:x0 + tile.shape[1], :] = tile
+            canvas = _bundle_canvas(src, conf, lod, by, bx)
+            out[by * tsz:by * tsz + canvas.shape[0],
+                bx * tsz:bx * tsz + canvas.shape[1], :] = canvas
     ox, oy = conf["origin"]
     if res is None:
         res = 2 * WEB_MERC_ORIGIN / n
@@ -203,8 +214,6 @@ def read_esric_level(path: str, lod: int):
 
 def scan_esric(spark, path: str, lod: int):
     """Cache + LOD -> RGBA images-table rows, ONE TASK PER BUNDLE."""
-    import pandas as pd
-
     src = _Source(local_path(path))
     conf = _parse_conf(src)
     ntiles = 1 << lod
@@ -212,63 +221,24 @@ def scan_esric(spark, path: str, lod: int):
     for by in range(0, ntiles, BSZ):
         for bx in range(0, ntiles, BSZ):
             tasks.append((path, lod, by, bx))
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, lod int, by int, bx int")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "source string")
 
-    def read_bundles(batches):
-        from .. import codecs
+    def read(r):
+        s = _Source(local_path(r.path))
+        c = _parse_conf(s)
+        tsz = c["tsz"]
+        canvas = _bundle_canvas(s, c, r.lod, r.by, r.bx)
+        res = c["lods"].get(r.lod,
+                            2 * WEB_MERC_ORIGIN / ((1 << r.lod) * tsz))
+        ox, oy = c["origin"]
+        gt = (ox + r.bx * tsz * res, res, 0.0,
+              oy - r.by * tsz * res, 0.0, -res)
+        return [raster_row(f"L{r.lod:02d}R{r.by:04x}C{r.bx:04x}", canvas,
+                           gt, 3857,
+                           source=os.path.basename(r.path.rstrip("/")))]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                s = _Source(local_path(r.path))
-                c = _parse_conf(s)
-                tsz = c["tsz"]
-                nt = 1 << r.lod
-                span = min(BSZ, nt - r.by), min(BSZ, nt - r.bx)
-                rel = (f"{c['layout']}/L{r.lod:02d}/"
-                       f"R{r.by:04x}C{r.bx:04x}.bundle")
-                data = s.read(rel)
-                idx = _read_bundle_index(data)
-                canvas = np.zeros((span[0] * tsz, span[1] * tsz, 4),
-                                  np.uint8)
-                if idx is not None:
-                    for ty in range(span[0]):
-                        for tx in range(span[1]):
-                            v = int(idx[ty * BSZ + tx])
-                            size = v >> 40
-                            off = v & 0xFFFFFFFFFF
-                            if size == 0:
-                                continue
-                            tile = _decode_tile(
-                                data[off:off + size], tsz)
-                            canvas[ty * tsz:ty * tsz +
-                                   tile.shape[0],
-                                   tx * tsz:tx * tsz +
-                                   tile.shape[1], :] = tile
-                res = c["lods"].get(r.lod,
-                                    2 * WEB_MERC_ORIGIN /
-                                    (nt * tsz))
-                ox, oy = c["origin"]
-                gt0 = ox + r.bx * tsz * res
-                gt3 = oy - r.by * tsz * res
-                rows.append({
-                    "image_id":
-                        f"L{r.lod:02d}R{r.by:04x}C{r.bx:04x}",
-                    "bytes": codecs.encode_raw(canvas),
-                    "w": canvas.shape[1], "h": canvas.shape[0],
-                    "fmt": "raw",
-                    "gt0": gt0, "gt1": res, "gt2": 0.0,
-                    "gt3": gt3, "gt4": 0.0, "gt5": -res,
-                    "srid": 3857,
-                    "source": os.path.basename(r.path.rstrip("/")),
-                })
-            cols = [c2.split()[0] for c2 in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_bundles, schema=schema)
+    return scan_files(spark, None, read, schema,
+                      tasks=("path string, lod int, by int, bx int", tasks))

@@ -37,7 +37,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 BLOCK = 2880
 DEG2RAD = np.pi / 180.0
@@ -293,88 +293,36 @@ def format_fits(arr: np.ndarray, gt=None, nodata=None,
 def scan_fits(spark, path_glob: str, srid: int = 0):
     """Glob of .fits files -> images-table rows, one task per file;
     every image HDU becomes a row (``stem#n`` past the first)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, scale double, offset double, "
               "proj string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                for i, (arr, gt, nodata, scale, offset, proj,
-                        extname) in enumerate(parse_fits(buf)):
-                    if gt is None:
-                        gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-                    rows.append({
-                        "image_id": stem if i == 0 else f"{stem}#{i}",
-                        "bytes": codecs.encode_raw(arr),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw",
-                        "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                        "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                        "srid": int(srid), "nodata": nodata,
-                        "scale": scale, "offset": offset,
-                        "proj": proj,
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "scale", "offset", "proj"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        rows = []
+        for i, (arr, gt, nodata, scale, offset, proj,
+                extname) in enumerate(parse_fits(buf)):
+            if gt is None:
+                gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
+            rows.append(raster_row(stem if i == 0 else f"{stem}#{i}", arr,
+                                   gt, int(srid), nodata, scale=scale,
+                                   offset=offset, proj=proj))
+        return rows
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def write_fits(df, out_dir: str) -> list[str]:
     """Images-table rows -> one single-HDU .fits per row, written by
     the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.fits")
+        with open(path, "wb") as f:
+            f.write(format_fits(arr, gt, nodata=nd))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = None
-                if (has_nodata and r.nodata is not None
-                        and not pd.isna(r.nodata)):
-                    nd = float(r.nodata)
-                path = os.path.join(out_dir, f"{r.image_id}.fits")
-                with open(path, "wb") as f:
-                    f.write(format_fits(arr, gt, nodata=nd))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

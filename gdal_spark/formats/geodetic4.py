@@ -37,9 +37,9 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
-from .rawgrids import _generic_scan, _generic_write
+from .rawgrids import IMG_SCHEMA, _file_rows
 
 _ILWIS_TYPES = {"BYTE": "u1", "INT": "i2", "LONG": "i4",
                 "FLOAT": "f4", "REAL": "f8"}
@@ -151,7 +151,8 @@ def scan_ilwis(spark, path_glob: str, srid: int = 0):
                 grf = ""
         return parse_ilwis(mpr, data, grf)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_ilwis(df, out_dir: str) -> list[str]:
@@ -171,7 +172,7 @@ def write_ilwis(df, out_dir: str) -> list[str]:
             f.write(grf)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 def parse_ngsgeoid(buf: bytes):
@@ -342,7 +343,8 @@ def scan_ngsgeoid(spark, path_glob: str, srid: int = 4326):
         with open(path, "rb") as f:
             return parse_ngsgeoid(f.read())
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_ngsgeoid(df, out_dir: str) -> list[str]:
@@ -354,7 +356,7 @@ def write_ngsgeoid(df, out_dir: str) -> list[str]:
             f.write(format_ngsgeoid(arr.astype(np.float32), gt))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 def scan_loslas(spark, path_glob: str, srid: int = 4326):
@@ -362,7 +364,8 @@ def scan_loslas(spark, path_glob: str, srid: int = 4326):
         with open(path, "rb") as f:
             return parse_loslas(f.read())
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_loslas(df, out_dir: str, ext: str = "los") -> list[str]:
@@ -374,7 +377,7 @@ def write_loslas(df, out_dir: str, ext: str = "los") -> list[str]:
             f.write(format_loslas(arr.astype(np.float32), gt))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 def scan_sigdem(spark, path_glob: str, srid: int = 0):
@@ -382,7 +385,8 @@ def scan_sigdem(spark, path_glob: str, srid: int = 0):
         with open(path, "rb") as f:
             return parse_sigdem(f.read())
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_sigdem(df, out_dir: str, scale: float = 1000.0) -> list[str]:
@@ -394,4 +398,4 @@ def write_sigdem(df, out_dir: str, scale: float = 1000.0) -> list[str]:
             f.write(format_sigdem(arr, gt, scale=scale))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)

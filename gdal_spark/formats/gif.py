@@ -36,7 +36,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 
 def _skip_subblocks(buf: bytes, off: int) -> int:
@@ -321,92 +321,38 @@ def scan_gif(spark, path_glob: str, srid: int = 0):
     """Glob of .gif files -> images-table rows (index band +
     palette column, GCE transparent index as nodata), one task per
     file. World files are NOT consulted (use formats.sidecar)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, palette string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                arr, palette, transparent, _ = parse_gif(buf)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": 0.0, "gt1": 1.0, "gt2": 0.0,
-                    "gt3": 0.0, "gt4": 0.0, "gt5": -1.0,
-                    "srid": int(srid),
-                    "nodata": (None if transparent is None
-                               else float(transparent)),
-                    "palette": _pal_str(palette),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "palette"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        arr, palette, transparent, _ = parse_gif(buf)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(
+            stem, arr, (0.0, 1.0, 0.0, 0.0, 0.0, -1.0), int(srid),
+            None if transparent is None else float(transparent),
+            palette=_pal_str(palette))]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def write_gif(df, out_dir: str, interlace: bool = False) -> list[str]:
     """Images-table rows (uint8 single band; optional palette
     column) -> one .gif per row, written by the task that holds the
     row. nodata becomes the GCE transparent index."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        if arr.ndim == 3:
+            arr = arr[:, :, 0]
+        palette = getattr(r, "palette", None)
+        pal = pal_from_str(palette) if isinstance(palette, str) else None
+        path = os.path.join(out_dir, f"{r.image_id}.gif")
+        with open(path, "wb") as f:
+            f.write(format_gif(arr.astype(np.uint8), pal,
+                               transparent=None if nd is None else int(nd),
+                               interlace=interlace))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
-    has_pal = "palette" in df.columns
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if arr.ndim == 3:
-                    arr = arr[:, :, 0]
-                pal = (pal_from_str(r.palette)
-                       if has_pal and isinstance(r.palette, str)
-                       else None)
-                nd = None
-                if (has_nodata and r.nodata is not None
-                        and not pd.isna(r.nodata)):
-                    nd = int(r.nodata)
-                path = os.path.join(out_dir, f"{r.image_id}.gif")
-                with open(path, "wb") as f:
-                    f.write(format_gif(arr.astype(np.uint8), pal,
-                                       transparent=nd,
-                                       interlace=interlace))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

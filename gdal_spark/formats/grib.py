@@ -57,7 +57,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 
 NODATA = 9999.0
 
@@ -739,6 +739,67 @@ def index_grib(buf: bytes):
     return out
 
 
+# a wgrib text preamble (bulletin headers) may precede a message; the
+# seek index looks this far past the previous message for "GRIB"
+_GRIB_SEARCH = 1 << 16
+
+
+def _index_grib_file(f):
+    """:func:`index_grib` over an open binary file by seeking: reads the
+    16 header bytes at each offset and skips by the message's total
+    length. Where those bytes do not start a message, "GRIB" is looked
+    for in the next ``_GRIB_SEARCH`` bytes only."""
+    n = f.seek(0, 2)
+    out = []
+    off = 0
+    while off + 16 <= n:
+        f.seek(off)
+        head = f.read(16)
+        i = off
+        if head[:4] != b"GRIB":
+            f.seek(off)
+            j = f.read(_GRIB_SEARCH).find(b"GRIB")
+            if j < 0 or off + j + 16 > n:
+                break
+            i = off + j
+            f.seek(i)
+            head = f.read(16)
+        ed = head[7]
+        if ed == 2:
+            tl = struct.unpack(">Q", head[8:16])[0]
+        elif ed == 1:
+            tl = int.from_bytes(head[4:7], "big")
+        else:
+            off = i + 4
+            continue
+        if tl <= 0:
+            off = i + 4
+            continue
+        out.append((i, tl, ed))
+        off = i + tl
+    return out
+
+
+def _grib2_field_count(f, start: int, total_len: int) -> int:
+    """Fields the GRIB2 message at ``start`` decodes to: one per
+    section 7, found by the section-length walk of
+    :func:`_parse_grib2_message` reading only the 5-byte section
+    heads."""
+    p, end, count = start + 16, start + total_len, 0
+    while p < end - 4:
+        f.seek(p)
+        head = f.read(5)
+        if head[:4] == b"7777":
+            break
+        slen = int.from_bytes(head[:4], "big")
+        if slen == 0:
+            break
+        if head[4:5] == b"\x07":
+            count += 1
+        p += slen
+    return count
+
+
 def parse_grib(buf: bytes):
     """Whole-file decode -> list of field dicts (arr, gt, metadata);
     the distributed scan uses index_grib + per-message decode."""
@@ -766,71 +827,37 @@ GRIB_SCHEMA = ("image_id string, bytes binary, w int, h int, "
 def scan_grib(spark, path_glob: str):
     """Glob of GRIB1/GRIB2 files -> images-table rows, ONE TASK PER
     MESSAGE: the driver reads only each message's fixed-size header
-    to plan byte ranges."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
+    and section heads to plan byte ranges and band numbers."""
     tasks = []
-    for path in paths:
-        with open(path, "rb") as f:
-            head = f.read()
+    for path in glob_paths(path_glob):
         band0 = 0
-        for off, tl, ed in index_grib(head):
-            tasks.append((path, off, tl, ed, band0))
-            band0 += 1
+        with open(path, "rb") as f:
+            for off, tl, ed in _index_grib_file(f):
+                tasks.append((path, off, tl, ed, band0))
+                band0 += _grib2_field_count(f, off, tl) if ed == 2 else 1
     if not tasks:
         raise ValueError(f"no GRIB messages under {path_glob}")
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, off bigint, tl bigint, ed int, band0 int")
 
-    def read_msgs(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            f.seek(r.off)
+            msg = f.read(r.tl)
+        stem = os.path.basename(r.path)
+        if r.ed == 2:
+            fields = _parse_grib2_message(msg, 0, r.tl, stem, int(r.band0))
+        else:
+            fields = _parse_grib1_message(msg, 0, r.tl, int(r.band0))
+        return [raster_row(
+            f"{stem}#{ft['band']}", ft["arr"].astype(np.float64), ft["gt"],
+            ft["srid"], ft["nodata"], band=ft["band"],
+            edition=ft["edition"], discipline=ft["discipline"],
+            pdtn=ft["pdtn"], drtn=ft["drtn"], gdtn=ft["gdtn"],
+            category=ft["category"], parameter=ft["parameter"],
+            ref_time=ft["ref_time"], valid_time=ft["valid_time"],
+            forecast_seconds=ft["forecast_seconds"], source=stem)
+            for ft in fields]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    f.seek(r.off)
-                    msg = f.read(r.tl)
-                stem = os.path.basename(r.path)
-                if r.ed == 2:
-                    fields = _parse_grib2_message(msg, 0, r.tl, stem,
-                                                  int(r.band0))
-                else:
-                    fields = _parse_grib1_message(msg, 0, r.tl,
-                                                  int(r.band0))
-                for ft in fields:
-                    arr = ft["arr"].astype(np.float64)
-                    gt = ft["gt"]
-                    rows.append({
-                        "image_id": f"{stem}#{ft['band']}",
-                        "bytes": codecs.encode_raw(arr),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw",
-                        "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                        "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                        "srid": ft["srid"],
-                        "nodata": ft["nodata"],
-                        "band": ft["band"],
-                        "edition": ft["edition"],
-                        "discipline": ft["discipline"],
-                        "pdtn": ft["pdtn"], "drtn": ft["drtn"],
-                        "gdtn": ft["gdtn"],
-                        "category": ft["category"],
-                        "parameter": ft["parameter"],
-                        "ref_time": ft["ref_time"],
-                        "valid_time": ft["valid_time"],
-                        "forecast_seconds": ft["forecast_seconds"],
-                        "source": stem,
-                    })
-            cols = [c.split()[0] for c in GRIB_SCHEMA.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_msgs, schema=GRIB_SCHEMA)
+    return scan_files(
+        spark, None, read, GRIB_SCHEMA,
+        tasks=("path string, off bigint, tl bigint, ed int, band0 int",
+               tasks))

@@ -36,7 +36,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 NODATA = 1.701410009187828e38
 _GRID_TAG = 0x44495247  # 'GRID'
@@ -175,81 +175,34 @@ def scan_gsg(spark, path_glob: str, srid: int = 0):
     """Glob of Surfer .grd files (any of the three containers) ->
     images-table rows, one task per file. Surfer grids carry no CRS;
     pass ``srid`` when known."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt = parse_gsg(f.read())
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, int(srid), NODATA)]
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt = parse_gsg(f.read())
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(srid), "nodata": NODATA,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
-
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    return scan_files(spark, glob_paths(path_glob), read, OUT_SCHEMA)
 
 
 def write_gsg(df, out_dir: str, container: str = "gsbg") -> list[str]:
     """Images-table rows -> one .grd per row in the chosen container
     (``gsag`` / ``gsbg`` / ``gs7bg``), written by the task that holds
     the row."""
-    import pandas as pd
-
-    from .. import codecs
-
     if container not in ("gsag", "gsbg", "gs7bg"):
         raise ValueError(f"unknown Surfer container {container!r}")
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.grd")
-                if container == "gsag":
-                    data = format_gsag(arr, gt).encode("ascii")
-                elif container == "gsbg":
-                    data = format_gsbg(arr, gt)
-                else:
-                    data = format_gs7bg(arr, gt)
-                with open(path, "wb") as f:
-                    f.write(data)
-                names.append(path)
-            yield pd.DataFrame({"path": names})
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.grd")
+        if container == "gsag":
+            data = format_gsag(arr, gt).encode("ascii")
+        elif container == "gsbg":
+            data = format_gsbg(arr, gt)
+        else:
+            data = format_gs7bg(arr, gt)
+        with open(path, "wb") as f:
+            f.write(data)
+        return path
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -23,7 +23,7 @@ import sqlite3
 
 import numpy as np
 
-from ._util import local_path
+from ._util import local_path, raster_row, scan_files
 
 
 def gti_locations(index_path: str):
@@ -95,42 +95,20 @@ def read_gti(index_path: str):
 def scan_gti(spark, index_path: str):
     """Index -> images-table rows, ONE TASK PER REFERENCED RASTER
     (compose with operators.mosaic for the distributed path)."""
-    import pandas as pd
+    from .gtiff import parse_gtiff
 
     paths = gti_locations(index_path)
     if not paths:
         raise ValueError("GTI: empty index")
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, source string")
 
-    def read_files(batches):
-        from .. import codecs
-        from .gtiff import parse_gtiff
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt, srid, nodata = parse_gtiff(f.read())
+        stem = os.path.basename(r.path)
+        return [raster_row(stem, arr, gt, srid, nodata, source=stem)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt, srid, nodata = parse_gtiff(f.read())
-                stem = os.path.basename(r.path)
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(
-                        np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0],
-                    "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                    "source": stem,
-                })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, paths, read, schema)

@@ -66,7 +66,8 @@ import zlib
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
+from ._util import (glob_paths, raster_row, scan_files, schema_columns,
+                    write_files)
 from .. import codecs
 
 OUT_SCHEMA = (
@@ -958,6 +959,7 @@ def format_gtiff(arr: np.ndarray, gt, srid: int = 0,
 
 def scan_gtiff(spark, path_glob: str):
     """Glob of .tif files -> images-table rows (one task per file)."""
+    cols = schema_columns(OUT_SCHEMA)
 
     def parse(batches):
         for pdf in batches:
@@ -969,19 +971,9 @@ def scan_gtiff(spark, path_glob: str):
                     arr = arr.astype(
                         np.float64 if arr.dtype.kind in "uif" else arr.dtype
                     )
-                rows.append({
-                    "image_id": os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0", "gt1",
-                         "gt2", "gt3", "gt4", "gt5", "srid", "nodata"],
-            )
+                stem = os.path.splitext(os.path.basename(r.path))[0]
+                rows.append(raster_row(stem, arr, gt, srid, nodata))
+            yield pd.DataFrame(rows, columns=cols)
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -1036,17 +1028,10 @@ def scan_gtiff_windowed(spark, path_glob: str, level: int = 0,
     Window rows are named ``{stem}_w{k:03d}`` when a file splits
     (single-window files keep the plain stem, drop-in compatible with
     :func:`scan_gtiff`)."""
-    import glob as _glob
     import json
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-
     tasks = []
-    for path in paths:
+    for path in glob_paths(path_glob):
         stem = os.path.splitext(os.path.basename(path))[0]
         with open(path, "rb") as f:
             levels, _gt, srid, nodata = gtiff_levels(f)
@@ -1091,43 +1076,24 @@ def scan_gtiff_windowed(spark, path_glob: str, level: int = 0,
 
     # one slice per window: exactly one task per planned byte span
     # (repartition's round-robin can clump — same fix as the FGB scan)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, image_id string, lvl string, gt0 double, "
-        "gt1 double, gt2 double, gt3 double, gt4 double, gt5 double, "
-        "srid int, nodata double",
-    )
+    task_ddl = ("path string, image_id string, lvl string, gt0 double, "
+                "gt1 double, gt2 double, gt3 double, gt4 double, "
+                "gt5 double, srid int, nodata double")
 
-    def read_windows(batches):
-        import json as _json
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                lvl = _json.loads(r.lvl)
-                with open(r.path, "rb") as f:
-                    arr = read_gtiff_window(f, lvl, 0, 0,
-                                            lvl["w"], lvl["h"])
-                if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
-                    arr = arr.astype(
-                        np.float64 if arr.dtype.kind in "uif" else arr.dtype
-                    )
-                rows.append({
-                    "image_id": r.image_id,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": r.gt0, "gt1": r.gt1, "gt2": r.gt2,
-                    "gt3": r.gt3, "gt4": r.gt4, "gt5": r.gt5,
-                    "srid": r.srid,
-                    "nodata": None if pd.isna(r.nodata) else float(r.nodata),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0", "gt1",
-                         "gt2", "gt3", "gt4", "gt5", "srid", "nodata"],
+    def read(r):
+        lvl = json.loads(r.lvl)
+        with open(r.path, "rb") as f:
+            arr = read_gtiff_window(f, lvl, 0, 0, lvl["w"], lvl["h"])
+        if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
+            arr = arr.astype(
+                np.float64 if arr.dtype.kind in "uif" else arr.dtype
             )
+        gt = tuple(getattr(r, f"gt{i}") for i in range(6))
+        nodata = None if pd.isna(r.nodata) else float(r.nodata)
+        return [raster_row(r.image_id, arr, gt, r.srid, nodata)]
 
-    return tdf.mapInPandas(read_windows, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=(task_ddl, tasks))
 
 
 def write_gtiff(df, out_dir: str, compression: str = "deflate",
@@ -1138,32 +1104,16 @@ def write_gtiff(df, out_dir: str, compression: str = "deflate",
     same distributed many-files layout as the AAIGrid sink).
     ``overviews`` embeds COG-style reduced-resolution IFDs;
     ``bigtiff`` as in :func:`format_gtiff` (default IF_SAFER auto)."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
-    has_srid = "srid" in df.columns
+    def dump_row(r, arr, gt, nd, out_dir):
+        srid = getattr(r, "srid", None)
+        path = os.path.join(out_dir, f"{r.image_id}.tif")
+        with open(path, "wb") as f:
+            f.write(format_gtiff(
+                arr, gt, srid=int(srid) if srid is not None else 0,
+                nodata=nd, compression=compression, predictor=predictor,
+                tile_size=tile_size, overviews=overviews,
+                bigtiff=bigtiff, jpeg_quality=jpeg_quality,
+            ))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = (float(r.nodata) if has_nodata and r.nodata is not None
-                      and not pd.isna(r.nodata) else None)
-                srid = int(r.srid) if has_srid and r.srid is not None else 0
-                path = os.path.join(out_dir, f"{r.image_id}.tif")
-                with open(path, "wb") as f:
-                    f.write(format_gtiff(
-                        arr, gt, srid=srid, nodata=nd,
-                        compression=compression, predictor=predictor,
-                        tile_size=tile_size, overviews=overviews,
-                        bigtiff=bigtiff, jpeg_quality=jpeg_quality,
-                    ))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

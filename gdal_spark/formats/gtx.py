@@ -31,7 +31,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 NODATA = -88.8888
 
@@ -79,77 +79,29 @@ def format_gtx(arr: np.ndarray, gt) -> bytes:
 def scan_gtx(spark, path_glob: str):
     """Glob of .gtx files -> images-table rows (srid 4326, nodata
     -88.8888), one task per file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt = parse_gtx(f.read())
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, 4326, NODATA)]
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt = parse_gtx(f.read())
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 4326, "nodata": NODATA,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
-
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    return scan_files(spark, glob_paths(path_glob), read, OUT_SCHEMA)
 
 
 def write_gtx(df, out_dir: str) -> list[str]:
     """Images-table rows -> one .gtx per row, written by the task
     that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        if arr.dtype != np.float64:
+            arr = arr.astype(np.float32)
+        path = os.path.join(out_dir, f"{r.image_id}.gtx")
+        with open(path, "wb") as f:
+            f.write(format_gtx(arr, gt))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if arr.dtype != np.float64:
-                    arr = arr.astype(np.float32)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.gtx")
-                with open(path, "wb") as f:
-                    f.write(format_gtx(arr, gt))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)
 
 
 class VerticalShift:

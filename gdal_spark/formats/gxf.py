@@ -45,8 +45,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -325,22 +324,10 @@ def scan_gxf(spark, path_glob: str, srid: int = 0):
                 arr, gt, nodata, _info = parse_gxf(
                     bytes(r.content).decode("ascii", "replace")
                 )
-                rows.append({
-                    "image_id":
-                        os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid,
-                    "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
+                rows.append(raster_row(
+                    os.path.splitext(os.path.basename(r.path))[0],
+                    arr, gt, srid, nodata))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -351,28 +338,11 @@ def scan_gxf(spark, path_glob: str, srid: int = 0):
 
 def write_gxf(df, out_dir: str, nodata: float | None = -1e12):
     """One .gxf file per row, task-written (the AAIGrid sink shape)."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata_col = "nodata" in df.columns
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.gxf")
+        with open(path, "w") as f:
+            f.write(format_gxf(arr, gt, nd,
+                               title=str(r.image_id)))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = nodata
-                if (has_nodata_col and r.nodata is not None
-                        and not pd.isna(r.nodata)):
-                    nd = float(r.nodata)
-                path = os.path.join(out_dir, f"{r.image_id}.gxf")
-                with open(path, "w") as f:
-                    f.write(format_gxf(arr, gt, nd,
-                                       title=str(r.image_id)))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row, nodata=nodata)

@@ -56,7 +56,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 # EPT pixel-type order (the dictionary's e13 enum order)
 _EPT = ["u1", "u2", "u4", "u8", "s8", "u16", "s16", "u32", "s32",
@@ -431,51 +431,18 @@ def scan_hfa(spark, path_glob: str):
     """Glob of .img files -> images-table rows, one task per file
     (the GeoTIFF scan shape; HFA block tables live inside the file,
     so the file is the unit)."""
-    import glob as _glob
-
-    import pandas as pd
-
     from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p,) for p in paths], len(paths)),
-        "path string",
-    )
-
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt, srid, nodata, _st = parse_hfa(f.read())
-                if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
-                    arr = arr.astype(np.float64)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(
-                        np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(srid), "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt",
-                         "gt0", "gt1", "gt2", "gt3", "gt4", "gt5",
-                         "srid", "nodata"],
-            )
-
     from .envi import OUT_SCHEMA
 
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt, srid, nodata, _st = parse_hfa(f.read())
+        if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
+            arr = arr.astype(np.float64)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, int(srid), nodata)]
+
+    return scan_files(spark, glob_paths(path_glob), read, OUT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -621,28 +588,12 @@ def format_hfa(arr: np.ndarray, gt, srid: int = 0) -> bytes:
 
 def write_hfa(df, out_dir: str) -> list[str]:
     """One .img per row, written by the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        if arr.ndim == 3:
+            arr = arr[:, :, 0]
+        path = os.path.join(out_dir, f"{r.image_id}.img")
+        with open(path, "wb") as f:
+            f.write(format_hfa(arr, gt))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if arr.ndim == 3:
-                    arr = arr[:, :, 0]
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.img")
-                with open(path, "wb") as f:
-                    f.write(format_hfa(arr, gt))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -40,7 +40,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 
 NODATA = -9999.0
 
@@ -225,48 +225,19 @@ def parse_iris(buf: bytes):
 def scan_iris(spark, path_glob: str):
     """Glob of IRIS product files -> images-table rows, one task
     per product."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, product string, units string, "
               "source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.basename(r.path)
+        arr, gt, info = parse_iris(buf)
+        return [raster_row(stem, arr, gt, 0, NODATA,
+                           product=info["product_name"],
+                           units=info["units"], source=stem)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.basename(r.path)
-                arr, gt, info = parse_iris(buf)
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0],
-                    "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 0, "nodata": NODATA,
-                    "product": info["product_name"],
-                    "units": info["units"],
-                    "source": stem,
-                })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -26,9 +26,9 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
-from .rawgrids import _generic_scan, _generic_write
+from .rawgrids import IMG_SCHEMA, _file_rows
 
 _ISCE_TYPES = {
     "BYTE": "u1", "CHAR": "u1", "SHORT": "i2", "INT": "i4",
@@ -132,7 +132,8 @@ def scan_isce(spark, path_glob: str, srid: int = 0):
                         else np.float64)
         return arr, gt, nodata, meta
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_isce(df, out_dir: str) -> list[str]:
@@ -145,7 +146,7 @@ def write_isce(df, out_dir: str) -> list[str]:
             f.write(xml)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 def parse_rraster(grd_text: str, gri: bytes):
@@ -254,7 +255,8 @@ def scan_rraster(spark, path_glob: str, srid: int = 0):
             gri = f.read()
         return parse_rraster(grd, gri)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_rraster(df, out_dir: str) -> list[str]:
@@ -269,4 +271,4 @@ def write_rraster(df, out_dir: str) -> list[str]:
             f.write(gri)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)

@@ -38,7 +38,7 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _find_ci, parse_label
 
 NULL1 = 0.0
@@ -233,81 +233,33 @@ def format_isis2(arr: np.ndarray, gt=None, target: str = "MARS") -> bytes:
 def scan_isis2(spark, path_glob: str, srid: int = 0):
     """Glob of ISIS2 .cub labels -> images-table rows, one task per
     label (detached ^QUBE companions read by the task)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, scale double, offset double, "
               "proj string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                arr, gt, nodata, scale, offset, proj = parse_isis2(
-                    buf, label_path=r.path)
-                if gt is None:
-                    gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(srid), "nodata": nodata,
-                    "scale": scale, "offset": offset, "proj": proj,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "scale", "offset", "proj"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        arr, gt, nodata, scale, offset, proj = parse_isis2(
+            buf, label_path=r.path)
+        if gt is None:
+            gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, int(srid), nodata, scale=scale,
+                           offset=offset, proj=proj)]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def write_isis2(df, out_dir: str, target: str = "MARS") -> list[str]:
     """Images-table rows -> one attached BSQ .cub per row, written by
     the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.cub")
+        with open(path, "wb") as f:
+            f.write(format_isis2(arr, gt, target=target))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.cub")
-                with open(path, "wb") as f:
-                    f.write(format_isis2(arr, gt, target=target))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

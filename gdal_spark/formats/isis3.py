@@ -37,10 +37,8 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _atof, _clean, _find_ci, _kw, parse_label
 
 OUT_SCHEMA = (
@@ -237,69 +235,27 @@ def format_isis3(arr: np.ndarray, gt, target: str = "Mars",
 def scan_isis3(spark, path_glob: str):
     """Glob of .cub/.lbl ISIS3 labels -> images-table rows (one task
     per label, detached/GeoTIFF companions read by the task)."""
-    import glob as _glob
+    def read(r):
+        with open(r.path, "rb") as f:
+            label = f.read()
+        arr, gt, nodata, scale, offset, mapping, _ = \
+            parse_isis3(label, label_path=r.path)
+        return [raster_row(
+            os.path.splitext(os.path.basename(r.path))[0], arr, gt, 0,
+            nodata, scale=scale, offset=offset,
+            proj=mapping["projection"] + "|" + mapping["target"])]
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(paths, len(paths)), "string"
-    ).toDF("path")
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    label = f.read()
-                arr, gt, nodata, scale, offset, mapping, _ = \
-                    parse_isis3(label, label_path=p)
-                rows.append({
-                    "image_id":
-                        os.path.splitext(os.path.basename(p))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 0,
-                    "nodata": nodata,
-                    "scale": scale, "offset": offset,
-                    "proj": (mapping["projection"] + "|"
-                             + mapping["target"]),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "scale", "offset", "proj"],
-            )
-
-    return tdf.mapInPandas(parse, schema=OUT_SCHEMA)
+    return scan_files(spark, glob_paths(path_glob), read, OUT_SCHEMA)
 
 
 def write_isis3(df, out_dir: str, ptype: str = "Real",
                 target: str = "Mars"):
     """One attached .cub per row, task-written."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.cub")
+        with open(path, "wb") as f:
+            f.write(format_isis3(np.squeeze(arr), gt,
+                                 target=target, ptype=ptype))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.cub")
-                with open(path, "wb") as f:
-                    f.write(format_isis3(np.squeeze(arr), gt,
-                                         target=target, ptype=ptype))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

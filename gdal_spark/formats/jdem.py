@@ -31,8 +31,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -162,22 +161,10 @@ def scan_jdem(spark, path_glob: str):
             rows = []
             for r in pdf.itertuples(index=False):
                 arr, gt, _mesh = parse_jdem(bytes(r.content))
-                rows.append({
-                    "image_id":
-                        os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 4301,
-                    "nodata": None,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
+                rows.append(raster_row(
+                    os.path.splitext(os.path.basename(r.path))[0],
+                    arr, gt, 4301, None))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -188,23 +175,11 @@ def scan_jdem(spark, path_glob: str):
 
 def write_jdem(df, out_dir: str):
     """One .mem file per row, task-written."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.mem")
+        with open(path, "wb") as f:
+            f.write(format_jdem(np.squeeze(arr), gt,
+                                mesh=str(r.image_id)[:6]))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.mem")
-                with open(path, "wb") as f:
-                    f.write(format_jdem(np.squeeze(arr), gt,
-                                        mesh=str(r.image_id)[:6]))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -32,9 +32,9 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
-from .rawgrids import _generic_scan
+from .rawgrids import IMG_SCHEMA, _file_rows
 
 
 def parse_ndf_header(text: str) -> dict[str, str]:
@@ -102,7 +102,8 @@ def scan_ndf(spark, path_glob: str, srid: int = 0):
                 files.append(f.read())
         return parse_ndf(text, files)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 _FAST_KEYS = {
@@ -199,7 +200,8 @@ def scan_fast(spark, path_glob: str, srid: int = 0):
                 files.append(b"")
         return parse_fast(text, files)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def format_ndf(arr: np.ndarray, gt, band_name: str = "BAND"):
@@ -242,8 +244,6 @@ def format_ndf(arr: np.ndarray, gt, band_name: str = "BAND"):
 def write_ndf(df, out_dir: str) -> list[str]:
     """Images-table rows -> one .H1 header + BANDn.I8 files per
     row, task-per-row."""
-    from .rawgrids import _generic_write
-
     def dumper(r, arr, gt, nd, out_dir):
         hdr, bands = format_ndf(arr.astype(np.uint8), gt,
                                 band_name=r.image_id + "_B")
@@ -256,4 +256,4 @@ def write_ndf(df, out_dir: str) -> list[str]:
                 f.write(data)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)

@@ -35,8 +35,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -205,22 +204,10 @@ def scan_leveller(spark, path_glob: str):
                 arr, gt, scale, offset, _wkt, _v = parse_leveller(
                     bytes(r.content)
                 )
-                rows.append({
-                    "image_id":
-                        os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 0, "nodata": None,
-                    "scale": scale, "offset": offset,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "scale", "offset"],
-            )
+                rows.append(raster_row(
+                    os.path.splitext(os.path.basename(r.path))[0],
+                    arr, gt, 0, None, scale=scale, offset=offset))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -231,26 +218,15 @@ def scan_leveller(spark, path_glob: str):
 
 def write_leveller(df, out_dir: str):
     """One .ter per row, task-written (version-7 layout)."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
     has_scale = "scale" in df.columns
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                scale = float(r.scale) if has_scale else 1.0
-                offset = float(r.offset) if has_scale else 0.0
-                path = os.path.join(out_dir, f"{r.image_id}.ter")
-                with open(path, "wb") as f:
-                    f.write(format_leveller(np.squeeze(arr), gt,
-                                            scale, offset))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
+    def dump_row(r, arr, gt, nd, out_dir):
+        scale = float(r.scale) if has_scale else 1.0
+        offset = float(r.offset) if has_scale else 0.0
+        path = os.path.join(out_dir, f"{r.image_id}.ter")
+        with open(path, "wb") as f:
+            f.write(format_leveller(np.squeeze(arr), gt,
+                                    scale, offset))
+        return path
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -49,9 +49,8 @@ import re
 import struct
 
 import numpy as np
-import pandas as pd
 
-from ._util import local_path
+from ._util import glob_paths, local_path, scan_files
 from .. import geom
 
 _TOKEN = re.compile(r'"(?:[^"]|"")*"|[^\s,]+')
@@ -414,13 +413,7 @@ def scan_mif(spark, path_glob: str):
     """Glob of .mif files -> (geometry binary<WKB>, <typed attrs...>);
     one task per .mif/.mid pair, schema from the first header (read
     driver-side — headers only, never feature data)."""
-    import glob as _glob
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
+    paths = glob_paths(path_glob)
     with open(paths[0]) as f:
         hdr, _ = parse_mif_header(f.read())
     cols = hdr["columns"]
@@ -428,28 +421,20 @@ def scan_mif(spark, path_glob: str):
         f", `{name}` {_spark_type(t)}" for name, t in cols
     )
     names = ["geometry"] + [c[0] for c in cols]
-
     tasks = [(p, mid_path_for(p) or "") for p in paths]
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, mid string",
-    )
 
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path) as f:
-                    mif_text = f.read()
-                mid_text = None
-                if r.mid:
-                    with open(r.mid) as f:
-                        mid_text = f.read()
-                for rec in parse_mif(mif_text, mid_text)[1]:
-                    rows.append([rec.get(c) for c in names])
-            yield pd.DataFrame(rows, columns=names)
+    def read(r):
+        with open(r.path) as f:
+            mif_text = f.read()
+        mid_text = None
+        if r.mid:
+            with open(r.mid) as f:
+                mid_text = f.read()
+        return [[rec.get(c) for c in names]
+                for rec in parse_mif(mif_text, mid_text)[1]]
 
-    return tdf.mapInPandas(parse, schema=schema)
+    return scan_files(spark, None, read, schema,
+                      tasks=("path string, mid string", tasks))
 
 
 def _mif_coords(arr) -> list[str]:

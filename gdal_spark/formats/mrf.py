@@ -36,7 +36,7 @@ import zlib
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, local_path, raster_row, scan_files
 
 _EXT = {"NONE": ".til", "PNG": ".ppg", "PPNG": ".ppg",
         "JPEG": ".pjg", "JPNG": ".pjg", "DEFLATE": ".pzp",
@@ -300,46 +300,16 @@ def read_mrf(mrf_path: str):
 def scan_mrf(spark, path_glob: str):
     """Glob of .mrf files -> images-table rows, one task per
     dataset."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "compression string, source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        arr, gt, meta = read_mrf(r.path)
+        name = (os.path.basename(os.path.dirname(r.path)) + "/"
+                + os.path.basename(r.path))
+        return [raster_row(name, arr, gt, 0,
+                           compression=meta["compression"], source=name)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr, gt, meta = read_mrf(r.path)
-                stem = os.path.basename(r.path)
-                par = os.path.basename(os.path.dirname(r.path))
-                rows.append({
-                    "image_id": f"{par}/{stem}",
-                    "bytes": codecs.encode_raw(
-                        np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0],
-                    "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 0,
-                    "compression": meta["compression"],
-                    "source": f"{par}/{stem}",
-                })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -46,7 +46,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
+from ._util import raster_row, schema_columns, write_files
 from .. import codecs
 
 OUT_SCHEMA = (
@@ -452,19 +452,8 @@ def scan_netcdf(spark, path_glob: str, variable: str | None = None):
                     )
                     if many_b:
                         iid = f"{iid}_b{band}"
-                    rows.append({
-                        "image_id": iid,
-                        "bytes": codecs.encode_raw(arr),
-                        "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                        "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                        "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                        "srid": srid, "nodata": nodata,
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0", "gt1",
-                         "gt2", "gt3", "gt4", "gt5", "srid", "nodata"],
-            )
+                    rows.append(raster_row(iid, arr, gt, srid, nodata))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -475,27 +464,13 @@ def scan_netcdf(spark, path_glob: str, variable: str | None = None):
 
 def write_netcdf(df, out_dir: str):
     """One .nc per row, written by the task that holds the row."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
     has_srid = "srid" in df.columns
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = (float(r.nodata) if has_nodata and r.nodata is not None
-                      and not pd.isna(r.nodata) else None)
-                srid = int(r.srid) if has_srid and r.srid is not None else 0
-                path = os.path.join(out_dir, f"{r.image_id}.nc")
-                with open(path, "wb") as f:
-                    f.write(format_netcdf(arr, gt, srid=srid, nodata=nd))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
+    def dump_row(r, arr, gt, nd, out_dir):
+        srid = int(r.srid) if has_srid and r.srid is not None else 0
+        path = os.path.join(out_dir, f"{r.image_id}.nc")
+        with open(path, "wb") as f:
+            f.write(format_netcdf(arr, gt, srid=srid, nodata=nd))
+        return path
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -51,7 +51,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 _SHIFT_BANDS = 4
 _VELOCITY_BANDS = 6
@@ -208,20 +208,10 @@ def scan_ntv2(spark, path_glob: str):
     (file, subgrid) with the multi-band float32 offset raster; srid
     4326 (NTv2 grids live on geographic coordinates). One task per
     subgrid."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
     tasks = []
-    for p in paths:
+    for p in glob_paths(path_glob):
         with open(p, "rb") as f:
             head = f.read(64)
         if not head[:8].upper().startswith(b"NUM_OREC"):
@@ -232,71 +222,33 @@ def scan_ntv2(spark, path_glob: str):
             f.seek(2 * recsize + 8)
             nf = struct.unpack(bo + "i", f.read(4))[0]
         tasks += [(p, i) for i in range(nf)]
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, grid int",
-    )
 
-    def read_grids(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    _meta, grids = parse_ntv2(f.read())
-                g = grids[int(r.grid)]
-                arr = g["arr"]
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                name = (stem if len(grids) == 1
-                        else f"{stem}:{g['name']}")
-                rows.append({
-                    "image_id": name,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": g["gt"][0], "gt1": g["gt"][1],
-                    "gt2": g["gt"][2], "gt3": g["gt"][3],
-                    "gt4": g["gt"][4], "gt5": g["gt"][5],
-                    "srid": 4326, "nodata": None,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            _meta, grids = parse_ntv2(f.read())
+        g = grids[int(r.grid)]
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        name = stem if len(grids) == 1 else f"{stem}:{g['name']}"
+        return [raster_row(name, g["arr"], g["gt"], 4326)]
 
-    return tdf.mapInPandas(read_grids, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=("path string, grid int", tasks))
 
 
 def write_ntv2(df, out_dir: str) -> list[str]:
     """Images-table rows carrying (h, w, 4) float32 offset rasters ->
     one single-subgrid .gsb per row, written by the task that holds
     the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        arr = np.asarray(arr, dtype=np.float32)
+        path = os.path.join(out_dir, f"{r.image_id}.gsb")
+        with open(path, "wb") as f:
+            f.write(format_ntv2(
+                [{"name": str(r.image_id)[:8].upper(),
+                  "gt": gt, "arr": arr}]))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                arr = np.asarray(arr, dtype=np.float32)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.gsb")
-                with open(path, "wb") as f:
-                    f.write(format_ntv2(
-                        [{"name": str(r.image_id)[:8].upper(),
-                          "gt": gt, "arr": arr}]))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)
 
 
 class GridShift:

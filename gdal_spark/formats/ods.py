@@ -53,7 +53,7 @@ from xml.sax.saxutils import escape, quoteattr
 
 import pandas as pd
 
-from ._util import local_path
+from ._util import glob_paths, local_path
 from .xlsx import (
     DATE, DATETIME, INTEGER, INTEGER64, REAL, STRING, TIME,
     Sheet, _INT_RE, _SPARK_TYPES, _detect_header, _promote, _tag,
@@ -296,13 +296,7 @@ def scan_ods(spark, path_glob: str, sheet: str | None = None,
     """Glob of .ods files -> one DataFrame over the named sheet (or the
     first); schema probed from the FIRST file driver-side, one task per
     (file, sheet) thereafter — the XLSX scan shape."""
-    import glob as _glob
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
+    paths = glob_paths(path_glob)
     with open(paths[0], "rb") as f:
         sheets = parse_ods(f.read(), headers=headers,
                            field_types=field_types)

@@ -48,7 +48,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 SYS_BLOCK_SIZE = 8192
 
@@ -505,76 +505,30 @@ def format_pcidsk(bands, gt=None, geosys="METRE") -> bytes:
 def write_pcidsk(df, out_dir: str) -> list:
     """Images-table rows -> one .pix per row (uint8 single band),
     written by the task holding the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.pix")
+        with open(path, "wb") as f:
+            f.write(format_pcidsk([arr], gt))
+        return path
 
-    os.makedirs(local_path(out_dir), exist_ok=True)
-
-    def write_files(batches):
-        from .. import codecs
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_raw(bytes(r.bytes))
-                gt = (r.gt0, r.gt1, r.gt2, r.gt3, r.gt4, r.gt5)
-                path = os.path.join(local_path(out_dir),
-                                    f"{r.image_id}.pix")
-                with open(path, "wb") as f:
-                    f.write(format_pcidsk([arr], gt))
-                out.append({"path": path})
-            yield pd.DataFrame(out, columns=["path"])
-
-    return [r.path for r in
-            df.mapInPandas(write_files, "path string").collect()]
+    return write_files(df, out_dir, dump_row)
 
 
 def scan_pcidsk(spark, path_glob: str, srid: int = 0):
     """Glob of .pix files -> images-table rows (one row per band),
     one task per file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "band int, geosys string, source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.basename(r.path)
+        bands, gt, geosys = parse_pcidsk(buf)
+        return [raster_row(f"{stem}#{bi}", arr, gt, int(srid), band=bi,
+                           geosys=geosys, source=stem)
+                for bi, arr in enumerate(bands)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.basename(r.path)
-                bands, gt, geosys = parse_pcidsk(buf)
-                for bi, arr in enumerate(bands):
-                    rows.append({
-                        "image_id": f"{stem}#{bi}",
-                        "bytes": codecs.encode_raw(
-                            np.ascontiguousarray(arr)),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw",
-                        "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                        "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                        "srid": int(srid), "band": bi,
-                        "geosys": geosys, "source": stem,
-                    })
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt",
-                               "gt0", "gt1", "gt2", "gt3", "gt4",
-                               "gt5", "srid", "band", "geosys",
-                               "source"])
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -45,10 +45,8 @@ import re
 import struct
 
 import numpy as np
-import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -584,82 +582,32 @@ def scan_pds(spark, path_glob: str,
     """Glob of PDS3 labels (.img attached or .lbl detached) ->
     images-table rows; one task per label, detached companions read by
     the task."""
-    import glob as _glob
+    def read(r):
+        with open(r.path, "rb") as f:
+            label = f.read()
+        arr, gt, nodata, scale, offset, proj = parse_pds(
+            label, label_path=r.path,
+            sample_offset_shift=sample_offset_shift,
+            line_offset_shift=line_offset_shift,
+            sample_offset_mult=sample_offset_mult,
+            line_offset_mult=line_offset_mult,
+        )
+        return [raster_row(
+            os.path.splitext(os.path.basename(r.path))[0], arr, gt, 0,
+            nodata, scale=scale, offset=offset,
+            proj=proj["projection"] + "|" + proj["target"])]
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(paths, len(paths)), "string"
-    ).toDF("path")
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    label = f.read()
-                arr, gt, nodata, scale, offset, proj = parse_pds(
-                    label, label_path=p,
-                    sample_offset_shift=sample_offset_shift,
-                    line_offset_shift=line_offset_shift,
-                    sample_offset_mult=sample_offset_mult,
-                    line_offset_mult=line_offset_mult,
-                )
-                if arr.ndim == 3:
-                    arr2 = arr
-                else:
-                    arr2 = arr
-                rows.append({
-                    "image_id":
-                        os.path.splitext(os.path.basename(p))[0],
-                    "bytes": codecs.encode_raw(arr2),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 0,
-                    "nodata": nodata,
-                    "scale": scale, "offset": offset,
-                    "proj": proj["projection"] + "|" + proj["target"],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "scale", "offset", "proj"],
-            )
-
-    return tdf.mapInPandas(parse, schema=OUT_SCHEMA)
+    return scan_files(spark, glob_paths(path_glob), read, OUT_SCHEMA)
 
 
 def write_pds(df, out_dir: str, dtype: str = "f4",
               target: str = "MARS"):
     """One attached .img per row, task-written."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.img")
+        with open(path, "wb") as f:
+            f.write(format_pds(np.squeeze(arr), gt, nodata=nd,
+                               target=target, dtype=dtype))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = None
-                if (has_nodata and r.nodata is not None
-                        and not pd.isna(r.nodata)):
-                    nd = float(r.nodata)
-                path = os.path.join(out_dir, f"{r.image_id}.img")
-                with open(path, "wb") as f:
-                    f.write(format_pds(np.squeeze(arr), gt, nodata=nd,
-                                       target=target, dtype=dtype))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

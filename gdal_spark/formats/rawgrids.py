@@ -49,7 +49,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _find_ci
 
 IMG_SCHEMA = ("image_id string, bytes binary, w int, h int, "
@@ -58,77 +58,18 @@ IMG_SCHEMA = ("image_id string, bytes binary, w int, h int, "
               "nodata double, meta string")
 
 
-def _generic_scan(spark, path_glob, reader, srid=0):
-    import glob as _glob
+def _file_rows(reader, srid):
+    """``reader(path) -> (arr, gt-or-None, nodata, meta)`` as a
+    :func:`scan_files` read function: one row per file, keyed by the
+    file stem."""
+    def read(r):
+        arr, gt, nodata, meta = reader(r.path)
+        if gt is None:
+            gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, int(srid), nodata, meta=meta)]
 
-    import pandas as pd
-
-    from .. import codecs
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
-
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr, gt, nodata, meta = reader(r.path)
-                if gt is None:
-                    gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(srid), "nodata": nodata, "meta": meta,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "meta"],
-            )
-
-    return tdf.mapInPandas(read_files, schema=IMG_SCHEMA)
-
-
-def _generic_write(df, out_dir, dumper):
-    """dumper(row, arr, gt, nodata, out_dir) -> written path."""
-    import pandas as pd
-
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_nodata = "nodata" in df.columns
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = None
-                if (has_nodata and r.nodata is not None
-                        and not pd.isna(r.nodata)):
-                    nd = float(r.nodata)
-                names.append(dumper(r, arr, gt, nd, out_dir))
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return read
 
 
 # ---------------------------------------------------------------------------
@@ -227,7 +168,8 @@ def scan_roipac(spark, path_glob: str, srid: int = 0):
                 .astype(np.float32)
         return arr, gt, nodata, meta
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_roipac(df, out_dir: str) -> list[str]:
@@ -245,7 +187,7 @@ def write_roipac(df, out_dir: str) -> list[str]:
             f.write(rsc)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -325,7 +267,8 @@ def scan_byn(spark, path_glob: str, srid: int = 4326):
             arr, gt, nodata, bscale = parse_byn(f.read())
         return arr, gt, nodata, repr(bscale)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_byn(df, out_dir: str) -> list[str]:
@@ -339,7 +282,7 @@ def write_byn(df, out_dir: str) -> list[str]:
                                           else np.int32), gt))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -435,7 +378,8 @@ def scan_lan(spark, path_glob: str, srid: int = 0):
         with open(path, "rb") as f:
             return parse_lan(f.read())
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_lan(df, out_dir: str) -> list[str]:
@@ -445,7 +389,7 @@ def write_lan(df, out_dir: str) -> list[str]:
             f.write(format_lan(arr, gt))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -527,7 +471,8 @@ def scan_snodas(spark, path_glob: str, srid: int = 4326):
             data = f.read()
         return parse_snodas(hdr, data)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_snodas(df, out_dir: str) -> list[str]:
@@ -544,7 +489,7 @@ def write_snodas(df, out_dir: str) -> list[str]:
             f.write(data)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -647,7 +592,8 @@ def scan_lcp(spark, path_glob: str, srid: int = 0):
         with open(path, "rb") as f:
             return parse_lcp(f.read())
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_lcp(df, out_dir: str) -> list[str]:
@@ -657,4 +603,4 @@ def write_lcp(df, out_dir: str) -> list[str]:
             f.write(format_lcp(arr, gt))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)

@@ -47,9 +47,9 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
-from .rawgrids import IMG_SCHEMA, _generic_scan, _generic_write
+from .rawgrids import IMG_SCHEMA, _file_rows
 
 __all__ = [
     "parse_mff", "format_mff", "scan_mff", "write_mff",
@@ -58,8 +58,6 @@ __all__ = [
     "parse_ctg", "format_ctg", "scan_ctg", "write_ctg",
     "parse_eir", "format_eir", "scan_eir", "write_eir",
 ]
-
-_ = (IMG_SCHEMA,)  # re-exported family schema
 
 
 # ---------------------------------------------------------------------------
@@ -205,7 +203,8 @@ def scan_mff(spark, path_glob: str, srid: int = 0):
                 .astype(np.float32)
         return arr, gt, nodata, meta
 
-    return _generic_scan(spark, path_glob, wrap, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(wrap, srid), IMG_SCHEMA)
 
 
 def write_mff(df, out_dir: str) -> list[str]:
@@ -220,7 +219,7 @@ def write_mff(df, out_dir: str) -> list[str]:
                 f.write(data)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -342,7 +341,8 @@ def scan_paux(spark, path_glob: str, srid: int = 0):
             raw = f.read()
         return parse_paux(aux, raw)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_paux(df, out_dir: str) -> list[str]:
@@ -356,7 +356,7 @@ def write_paux(df, out_dir: str) -> list[str]:
             f.write(data)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -425,7 +425,8 @@ def scan_doq2(spark, path_glob: str, srid: int = 0):
             arr, gt, nodata, meta = parse_doq2(f.read())
         return arr, gt, nodata, meta.get("QUADRANGLE_NAME", "")
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -518,7 +519,8 @@ def scan_ctg(spark, path_glob: str, srid: int = 0):
         with open(path, "rb") as f:
             return parse_ctg(f.read())
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_ctg(df, out_dir: str) -> list[str]:
@@ -528,7 +530,7 @@ def write_ctg(df, out_dir: str) -> list[str]:
             f.write(format_ctg(arr.astype(np.int32), gt))
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)
 
 
 # ---------------------------------------------------------------------------
@@ -624,7 +626,8 @@ def scan_eir(spark, path_glob: str, srid: int = 0):
             raw = f.read()
         return parse_eir(hdr, raw)
 
-    return _generic_scan(spark, path_glob, reader, srid)
+    return scan_files(spark, glob_paths(path_glob),
+                      _file_rows(reader, srid), IMG_SCHEMA)
 
 
 def write_eir(df, out_dir: str) -> list[str]:
@@ -638,4 +641,4 @@ def write_eir(df, out_dir: str) -> list[str]:
             f.write(data)
         return path
 
-    return _generic_write(df, out_dir, dumper)
+    return write_files(df, out_dir, dumper)

@@ -50,7 +50,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, local_path, raster_row, scan_files
 
 GRD_NODATA = -1.0e37
 GSC_NODATA = -1.0000000150474662199e+30
@@ -484,49 +484,17 @@ _IMG_SCHEMA = ("image_id string, bytes binary, w int, h int, "
                "nodata double, band int, source string")
 
 
-def _scan(spark, paths, reader):
-    import pandas as pd
+def _band_rows(reader):
+    """``reader(path) -> [(arr, gt, nodata), ...]`` as a
+    :func:`scan_files` read function: one row per band, keyed
+    ``<file name>#<band>``."""
+    def read(r):
+        stem = os.path.basename(r.path.rstrip("/"))
+        return [raster_row(f"{stem}#{bi}", arr, gt, 0, nodata,
+                           band=bi, source=stem)
+                for bi, (arr, gt, nodata) in enumerate(reader(r.path))]
 
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
-
-    def read_files(batches):
-        from .. import codecs
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for bi, (arr, gt, nodata) in enumerate(
-                        reader(r.path)):
-                    stem = os.path.basename(r.path.rstrip("/"))
-                    rows.append({
-                        "image_id": f"{stem}#{bi}",
-                        "bytes": codecs.encode_raw(
-                            np.ascontiguousarray(arr)),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw",
-                        "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                        "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                        "srid": 0, "nodata": nodata, "band": bi,
-                        "source": stem,
-                    })
-            cols = [c.split()[0] for c in _IMG_SCHEMA.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=_IMG_SCHEMA)
-
-
-def _glob(path_glob):
-    import glob as _g
-
-    pat = local_path(path_glob)
-    paths = (sorted(_g.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    return paths
+    return read
 
 
 def scan_nwt_grd(spark, path_glob, bands="all"):
@@ -539,7 +507,8 @@ def scan_nwt_grd(spark, path_glob, bands="all"):
         return [(r, gt, None), (g, gt, None), (b, gt, None),
                 (z, gt, GRD_NODATA)]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)
 
 
 def scan_nwt_grc(spark, path_glob):
@@ -549,7 +518,8 @@ def scan_nwt_grc(spark, path_glob):
         arr, gt = parse_nwt_grc(buf)
         return [(arr, gt, None)]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)
 
 
 def scan_mff2(spark, path_glob):
@@ -559,7 +529,8 @@ def scan_mff2(spark, path_glob):
         gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
         return [(b, gt, None) for b in bands]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)
 
 
 def scan_gsc(spark, path_glob):
@@ -568,7 +539,8 @@ def scan_gsc(spark, path_glob):
             arr, gt = parse_gsc(f.read())
         return [(arr, gt, GSC_NODATA)]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)
 
 
 def scan_genbin(spark, path_glob):
@@ -581,7 +553,8 @@ def scan_genbin(spark, path_glob):
         bands, gt = parse_genbin(hdr, data)
         return [(b, gt, None) for b in bands]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)
 
 
 def scan_nsidcbin(spark, path_glob):
@@ -591,7 +564,8 @@ def scan_nsidcbin(spark, path_glob):
                                      name=os.path.basename(path))
         return [(arr, gt, None)]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)
 
 
 # ----------------------------------------------------------- NOAA_B
@@ -640,4 +614,5 @@ def scan_noaa_b(spark, path_glob):
             arr, gt, info = parse_noaa_b(f.read())
         return [(arr, gt, None)]
 
-    return _scan(spark, _glob(path_glob), reader)
+    return scan_files(spark, glob_paths(path_glob), _band_rows(reader),
+                      _IMG_SCHEMA)

@@ -38,7 +38,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 
 NO_PRED = 0xFFFF
 TABSIZE = 4096
@@ -293,48 +293,18 @@ def parse_rmf(buf: bytes):
 def scan_rmf(spark, path_glob: str):
     """Glob of .rsw/.mtw files -> images-table rows (one per
     band)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, band int, source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        stem = os.path.basename(r.path)
+        bands, gt, info = parse_rmf(buf)
+        return [raster_row(f"{stem}#{b}", arr, gt, info["epsg"],
+                           info["nodata"], band=b, source=stem)
+                for b, arr in enumerate(bands)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                stem = os.path.basename(r.path)
-                bands, gt, info = parse_rmf(buf)
-                for b, arr in enumerate(bands):
-                    rows.append({
-                        "image_id": f"{stem}#{b}",
-                        "bytes": codecs.encode_raw(
-                            np.ascontiguousarray(arr)),
-                        "w": arr.shape[1], "h": arr.shape[0],
-                        "fmt": "raw",
-                        "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                        "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                        "srid": info["epsg"],
-                        "nodata": info["nodata"], "band": b,
-                        "source": stem,
-                    })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

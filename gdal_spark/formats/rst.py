@@ -29,7 +29,7 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 _DTYPES = {"byte": "u1", "integer": "<i2", "real": "<f4"}
 _DTYPE_NAMES = {np.dtype(np.uint8): "byte", np.dtype(np.int16): "integer",
@@ -158,85 +158,36 @@ def scan_rst(spark, path_glob: str):
     """Glob of .rst files -> images-table rows (rgb24 as (h, w, 3)
     RGB cubes), one task per file; the driver reads only the tiny
     .rdc texts."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    paths = [p for p in paths if p.lower().endswith(".rst")]
-    if not paths:
-        raise FileNotFoundError(path_glob)
     tasks = []
-    for p in paths:
-        rdc_path = os.path.splitext(p)[0] + ".rdc"
-        with open(rdc_path) as f:
+    for p in glob_paths(path_glob,
+                        keep=lambda p: p.lower().endswith(".rst")):
+        with open(os.path.splitext(p)[0] + ".rdc") as f:
             tasks.append((p, f.read()))
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, rdc string",
-    )
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt, srid, nodata = decode_rst(
-                        f.read(), parse_rdc(r.rdc))
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt, srid, nodata = decode_rst(f.read(), parse_rdc(r.rdc))
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, srid, nodata)]
 
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=("path string, rdc string", tasks))
 
 
 def write_rst(df, out_dir: str) -> list[str]:
     """Images-table rows -> one .rst + .rdc pair per row, written by
     the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        data, rdc = format_rst(
+            arr, gt, srid=int(getattr(r, "srid", 0) or 0),
+            nodata=nd, title=str(r.image_id))
+        base = os.path.join(out_dir, str(r.image_id))
+        with open(base + ".rst", "wb") as f:
+            f.write(data)
+        with open(base + ".rdc", "w") as f:
+            f.write(rdc)
+        return base + ".rst"
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = getattr(r, "nodata", None)
-                nd = None if nd is None or pd.isna(nd) else float(nd)
-                data, rdc = format_rst(
-                    arr, gt, srid=int(getattr(r, "srid", 0) or 0),
-                    nodata=nd, title=str(r.image_id))
-                base = os.path.join(out_dir, str(r.image_id))
-                with open(base + ".rst", "wb") as f:
-                    f.write(data)
-                with open(base + ".rdc", "w") as f:
-                    f.write(rdc)
-                names.append(base + ".rst")
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -48,7 +48,7 @@ from __future__ import annotations
 import os
 import struct
 
-from ._util import local_path
+from ._util import glob_paths, local_path, scan_files
 from .iso8211 import Iso8211Reader
 from .s57_catalog import ATTR_TYPES, ATTRIBUTES, OBJECT_CLASSES
 
@@ -419,62 +419,44 @@ def _cell_groups(paths, discover_updates=True):
 def scan_s57(spark, path_glob: str, apply_updates: bool = True):
     """Glob of ENC cells (.000) -> features DataFrame, ONE TASK PER
     CELL; update cells next to their base are applied in-task."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    groups = _cell_groups(paths)
+    groups = _cell_groups(glob_paths(path_glob))
     if not groups:
         raise FileNotFoundError(f"no base cells in {path_glob}")
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(b, ";".join(u)) for b, u in groups], len(groups)),
-        "base string, updates string")
 
-    def read_cells(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.base, "rb") as f:
-                    buf = f.read()
-                ub = []
-                if apply_updates and r.updates:
-                    for up in r.updates.split(";"):
-                        with open(up, "rb") as f:
-                            ub.append(f.read())
-                stem = os.path.basename(r.base)
-                info, feats = parse_s57(buf, updates=ub)
-                rows.append({
-                    "layer": "DSID", "rcid": int(info.get("RCID", 0)),
-                    "prim": 255, "grup": 0, "objl": 0,
-                    "rver": 0, "agen": int(info.get("AGEN", 0) or 0),
-                    "fidn": 0, "fids": 0, "lnam": "",
-                    "attributes": {k: str(v) for k, v in info.items()
-                                   if v is not None},
-                    "natf": {}, "geometry": None, "source": stem,
-                })
-                for ft in feats:
-                    rows.append({
-                        "layer": ft["layer"], "rcid": ft["rcid"],
-                        "prim": ft["prim"], "grup": ft["grup"],
-                        "objl": ft["objl"], "rver": ft["rver"],
-                        "agen": ft["agen"], "fidn": ft["fidn"],
-                        "fids": ft["fids"], "lnam": ft["lnam"],
-                        "attributes": ft["attrs"], "natf": ft["natf"],
-                        "geometry": ft["wkb"], "source": stem,
-                    })
-            yield pd.DataFrame(
-                rows, columns=["layer", "rcid", "prim", "grup",
-                               "objl", "rver", "agen", "fidn",
-                               "fids", "lnam", "attributes", "natf",
-                               "geometry", "source"])
+    def read(r):
+        with open(r.base, "rb") as f:
+            buf = f.read()
+        ub = []
+        if apply_updates and r.updates:
+            for up in r.updates.split(";"):
+                with open(up, "rb") as f:
+                    ub.append(f.read())
+        stem = os.path.basename(r.base)
+        info, feats = parse_s57(buf, updates=ub)
+        rows = [{
+            "layer": "DSID", "rcid": int(info.get("RCID", 0)),
+            "prim": 255, "grup": 0, "objl": 0,
+            "rver": 0, "agen": int(info.get("AGEN", 0) or 0),
+            "fidn": 0, "fids": 0, "lnam": "",
+            "attributes": {k: str(v) for k, v in info.items()
+                           if v is not None},
+            "natf": {}, "geometry": None, "source": stem,
+        }]
+        for ft in feats:
+            rows.append({
+                "layer": ft["layer"], "rcid": ft["rcid"],
+                "prim": ft["prim"], "grup": ft["grup"],
+                "objl": ft["objl"], "rver": ft["rver"],
+                "agen": ft["agen"], "fidn": ft["fidn"],
+                "fids": ft["fids"], "lnam": ft["lnam"],
+                "attributes": ft["attrs"], "natf": ft["natf"],
+                "geometry": ft["wkb"], "source": stem,
+            })
+        return rows
 
-    return tdf.mapInPandas(read_cells, S57_SCHEMA)
+    tasks = [(b, ";".join(u)) for b, u in groups]
+    return scan_files(spark, None, read, S57_SCHEMA,
+                      tasks=("base string, updates string", tasks))
 
 
 # ------------------------------------------------------------- writer

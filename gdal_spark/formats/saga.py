@@ -31,7 +31,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 _DTYPES = {
     "BIT": "u1", "BYTE_UNSIGNED": "u1", "BYTE": "u1",
@@ -130,95 +130,46 @@ def format_saga(arr: np.ndarray, gt, nodata=None, name: str = ""):
 def scan_saga(spark, path_glob: str):
     """Glob of .sdat files -> images-table rows; the driver reads
     only the tiny .sgrd/.prj texts, one task per grid."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .ehdr import _srid_from_prj
     from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    paths = [p for p in paths if p.lower().endswith(".sdat")]
-    if not paths:
-        raise FileNotFoundError(path_glob)
     tasks = []
-    for p in paths:
+    for p in glob_paths(path_glob,
+                        keep=lambda p: p.lower().endswith(".sdat")):
         with open(os.path.splitext(p)[0] + ".sgrd") as f:
             tasks.append((p, f.read(), _srid_from_prj(p)))
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, hdr string, srid int",
-    )
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt, nodata = decode_saga(
-                        f.read(), parse_sgrd(r.hdr))
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": int(r.srid), "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt, nodata = decode_saga(f.read(), parse_sgrd(r.hdr))
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, int(r.srid), nodata)]
 
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=("path string, hdr string, srid int", tasks))
 
 
 def write_saga(df, out_dir: str) -> list[str]:
     """Images-table rows -> one .sdat + .sgrd (+ .prj when the srid
     exports) per row, written by the task that holds the row."""
-    import pandas as pd
-
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
+    def dump_row(r, arr, gt, nd, out_dir):
         from ..crs_wkt import export_wkt
 
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                nd = getattr(r, "nodata", None)
-                nd = None if nd is None or pd.isna(nd) else float(nd)
-                data, hdr = format_saga(arr, gt, nodata=nd,
-                                        name=str(r.image_id))
-                base = os.path.join(out_dir, str(r.image_id))
-                with open(base + ".sdat", "wb") as f:
-                    f.write(data)
-                with open(base + ".sgrd", "w") as f:
-                    f.write(hdr)
-                srid = int(getattr(r, "srid", 0) or 0)
-                if srid:
-                    try:
-                        wkt = export_wkt(srid)
-                    except ValueError:
-                        wkt = None
-                    if wkt:
-                        with open(base + ".prj", "w") as f:
-                            f.write(wkt + "\n")
-                names.append(base + ".sdat")
-            yield pd.DataFrame({"path": names})
+        data, hdr = format_saga(arr, gt, nodata=nd, name=str(r.image_id))
+        base = os.path.join(out_dir, str(r.image_id))
+        with open(base + ".sdat", "wb") as f:
+            f.write(data)
+        with open(base + ".sgrd", "w") as f:
+            f.write(hdr)
+        srid = int(getattr(r, "srid", 0) or 0)
+        if srid:
+            try:
+                wkt = export_wkt(srid)
+            except ValueError:
+                wkt = None
+            if wkt:
+                with open(base + ".prj", "w") as f:
+                    f.write(wkt + "\n")
+        return base + ".sdat"
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -34,7 +34,7 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 _IMG_EXTS = {".png": "png", ".jpg": "jpg", ".jpeg": "jpg",
              ".bmp": "bmp", ".pgm": "pnm", ".ppm": "pnm",
@@ -120,62 +120,38 @@ def scan_plain_rasters(spark, path_glob: str):
     georef: the driver reads only the tiny sidecar texts, one task per
     image file decodes the pixels (PNG/JPEG/BMP/PNM via the engine's
     own codecs)."""
-    import glob as _glob
-
-    import pandas as pd
-
     from .. import codecs
+    from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    paths = [p for p in paths
-             if os.path.splitext(p)[1].lower() in _IMG_EXTS]
-    if not paths:
-        raise FileNotFoundError(f"{path_glob}: no plain raster files")
+    try:
+        paths = glob_paths(path_glob, keep=lambda p: (
+            os.path.splitext(p)[1].lower() in _IMG_EXTS))
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{path_glob}: no plain raster files") from None
     tasks = []
     for p in paths:
         gt, srid, nodata = sidecar_georef(p)
         tasks.append((p, _IMG_EXTS[os.path.splitext(p)[1].lower()],
                       *[float(g) for g in gt], int(srid), nodata))
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, fmt string, gt0 double, gt1 double, gt2 double, "
-        "gt3 double, gt4 double, gt5 double, srid int, nodata double",
-    )
+    task_ddl = ("path string, fmt string, gt0 double, gt1 double, "
+                "gt2 double, gt3 double, gt4 double, gt5 double, "
+                "srid int, nodata double")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr = codecs.decode_image(f.read(), r.fmt)
-                if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
-                    arr = arr.astype(np.float64)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(
-                        np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": r.gt0, "gt1": r.gt1, "gt2": r.gt2,
-                    "gt3": r.gt3, "gt4": r.gt4, "gt5": r.gt5,
-                    "srid": int(r.srid),
-                    "nodata": (None if r.nodata is None
-                               or (isinstance(r.nodata, float)
-                                   and np.isnan(r.nodata))
-                               else float(r.nodata)),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt",
-                         "gt0", "gt1", "gt2", "gt3", "gt4", "gt5",
-                         "srid", "nodata"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr = codecs.decode_image(f.read(), r.fmt)
+        if np.dtype(arr.dtype) not in codecs._DTYPE_CODES:
+            arr = arr.astype(np.float64)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        gt = tuple(getattr(r, f"gt{i}") for i in range(6))
+        nodata = (None if r.nodata is None
+                  or (isinstance(r.nodata, float) and np.isnan(r.nodata))
+                  else float(r.nodata))
+        return [raster_row(stem, arr, gt, int(r.srid), nodata)]
 
-    from .envi import OUT_SCHEMA
-
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    return scan_files(spark, None, read, OUT_SCHEMA,
+                      tasks=(task_ddl, tasks))
 
 
 def format_world_file(gt) -> str:
@@ -222,38 +198,23 @@ def write_plain_rasters(df, out_dir: str, fmt: str = "png") -> list[str]:
     """One image + world file + .aux.xml per row, written by the task
     that holds the row. ``fmt``: png/jpg/bmp/pnm/gsj (the engine's
     codecs)."""
-    import pandas as pd
-
     from .. import codecs
 
     ext = {"png": ".png", "jpg": ".jpg", "bmp": ".bmp",
            "pnm": ".pgm", "gsj": ".gsj"}[fmt]
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                base = os.path.join(out_dir, str(r.image_id))
-                with open(base + ext, "wb") as f:
-                    f.write(codecs.encode_image(
-                        arr, "jpg" if fmt == "gsj" else fmt))
-                e = ext.lstrip(".")
-                with open(base + "." + e[0] + e[-1] + "w", "w") as f:
-                    f.write(format_world_file(gt))
-                srid = int(getattr(r, "srid", 0) or 0)
-                nd = getattr(r, "nodata", None)
-                nd = None if nd is None or pd.isna(nd) else float(nd)
-                if srid or nd is not None:
-                    with open(base + ext + ".aux.xml", "w") as f:
-                        f.write(format_pam(gt, srid, nd))
-                names.append(base + ext)
-            yield pd.DataFrame({"path": names})
+    def dump_row(r, arr, gt, nd, out_dir):
+        base = os.path.join(out_dir, str(r.image_id))
+        with open(base + ext, "wb") as f:
+            f.write(codecs.encode_image(
+                arr, "jpg" if fmt == "gsj" else fmt))
+        e = ext.lstrip(".")
+        with open(base + "." + e[0] + e[-1] + "w", "w") as f:
+            f.write(format_world_file(gt))
+        srid = int(getattr(r, "srid", 0) or 0)
+        if srid or nd is not None:
+            with open(base + ext + ".aux.xml", "w") as f:
+                f.write(format_pam(gt, srid, nd))
+        return base + ext
 
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -35,7 +35,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files
 from .adrg import _img_data_offset
 from .iso8211 import Iso8211Reader
 
@@ -210,70 +210,37 @@ def parse_srp_qal(buf: bytes):
 def scan_srp(spark, path_glob: str):
     """Glob of .GEN files -> images-table rows, one task per
     product."""
-    import glob as _glob
-
-    import pandas as pd
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "zna int, nam string, product string, sca int, "
               "color_table string, source string")
 
-    def read_files(batches):
-        from .. import codecs
+    def read(r):
+        with open(r.path, "rb") as f:
+            gen = f.read()
+        d = parse_srp_gen(gen)
+        base = os.path.dirname(r.path)
+        img = qal = None
+        for cand in os.listdir(base):
+            if cand.lower() == d["bad"].lower():
+                with open(os.path.join(base, cand), "rb") as f:
+                    img = f.read()
+            if cand.lower() == d["bad"].lower()[:-3] + "qal":
+                with open(os.path.join(base, cand), "rb") as f:
+                    qal = f.read()
+        if img is None:
+            return []
+        arr, gt, ct, _ = parse_srp(gen, img, qal)
+        zna = d["zna"]
+        srid = 0
+        if d["product"] == "USRP" and 1 <= abs(zna) <= 60:
+            srid = (32600 + zna) if zna > 0 else (32700 - zna)
+        elif d["product"] == "ASRP" and zna not in (9, 18):
+            srid = 4326
+        stem = os.path.basename(r.path)
+        return [raster_row(stem, arr, gt, srid, zna=zna, nam=d["nam"],
+                           product=d["product"], sca=d["sca"],
+                           color_table=json.dumps(ct), source=stem)]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    gen = f.read()
-                d = parse_srp_gen(gen)
-                base = os.path.dirname(r.path)
-                img = qal = None
-                for cand in os.listdir(base):
-                    if cand.lower() == d["bad"].lower():
-                        with open(os.path.join(base, cand),
-                                  "rb") as f:
-                            img = f.read()
-                    if cand.lower() == \
-                            d["bad"].lower()[:-3] + "qal":
-                        with open(os.path.join(base, cand),
-                                  "rb") as f:
-                            qal = f.read()
-                if img is None:
-                    continue
-                arr, gt, ct, _ = parse_srp(gen, img, qal)
-                zna = d["zna"]
-                srid = 0
-                if d["product"] == "USRP" and 1 <= abs(zna) <= 60:
-                    srid = (32600 + zna) if zna > 0 else \
-                        (32700 - zna)
-                elif d["product"] == "ASRP" and zna not in (9, 18):
-                    srid = 4326
-                stem = os.path.basename(r.path)
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0],
-                    "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "zna": zna, "nam": d["nam"],
-                    "product": d["product"], "sca": d["sca"],
-                    "color_table": json.dumps(ct),
-                    "source": stem,
-                })
-            cols = [c.split()[0] for c in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)

@@ -28,8 +28,7 @@ import re
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -115,19 +114,10 @@ def scan_srtmhgt(spark, path_glob: str, strict_size: bool = True):
                 arr, gt, srid, nodata = parse_srtmhgt(
                     bytes(r.content), r.path, strict_size=strict_size
                 )
-                rows.append({
-                    "image_id": os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0", "gt1",
-                         "gt2", "gt3", "gt4", "gt5", "srid", "nodata"],
-            )
+                rows.append(raster_row(
+                    os.path.splitext(os.path.basename(r.path))[0],
+                    arr, gt, srid, nodata))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -139,23 +129,11 @@ def scan_srtmhgt(spark, path_glob: str, strict_size: bool = True):
 def write_srtmhgt(df, out_dir: str):
     """One tile per row, named from its OWN georef (N43W080.hgt), by
     the task that holds the row."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
+    def dump_row(r, arr, gt, nd, out_dir):
+        raw, name = format_srtmhgt(arr, gt)
+        path = os.path.join(out_dir, name)
+        with open(path, "wb") as f:
+            f.write(raw)
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                raw, name = format_srtmhgt(arr, gt)
-                path = os.path.join(out_dir, name)
-                with open(path, "wb") as f:
-                    f.write(raw)
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

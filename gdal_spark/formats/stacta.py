@@ -31,7 +31,7 @@ import re
 
 import numpy as np
 
-from ._util import local_path
+from ._util import local_path, raster_row, scan_files
 
 OGC_PIXEL_M = 0.00028
 # degrees per metre on the WGS84 equator (the OGC TMS constant)
@@ -158,8 +158,6 @@ def read_stacta(json_path: str, level: str | None = None):
 
 def scan_stacta(spark, json_path: str, level: str | None = None):
     """Item -> images-table rows, ONE TASK PER TILE."""
-    import pandas as pd
-
     json_path = local_path(json_path)
     with open(json_path) as f:
         doc = json.load(f)
@@ -172,49 +170,30 @@ def scan_stacta(spark, json_path: str, level: str | None = None):
                             lim["max_tile_row"] + 1)
              for c in range(lim["min_tile_col"],
                             lim["max_tile_col"] + 1)]
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, level string, row int, col int")
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, source string")
 
-    def read_tiles(batches):
-        from .. import codecs
+    def read(t):
+        with open(t.path) as f:
+            tpl, tid, mats, lims, nod = parse_stacta(json.load(f))
+        m = mats[t.level]
+        p = _tile_path(os.path.dirname(t.path), tpl, tid, t.level, t.row,
+                       t.col)
+        if not os.path.exists(p):
+            return []
+        arr, tile_nodata = _decode(p)
+        if nod is None:
+            nod = tile_nodata
+        if arr.ndim == 2:
+            arr = arr[:, :, None]
+        gt = (m["tl"][0] + t.col * m["tw"] * m["cell"], m["cell"], 0.0,
+              m["tl"][1] - t.row * m["th"] * m["cell"], 0.0, -m["cell"])
+        return [raster_row(f"{t.level}/{t.row}/{t.col}", arr, gt,
+                           4326 if m["geographic"] else 0, nod,
+                           source=os.path.basename(t.path))]
 
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                with open(t.path) as f:
-                    d2 = json.load(f)
-                tpl, tid, mats, lims, nod = parse_stacta(d2)
-                m = mats[t.level]
-                base = os.path.dirname(t.path)
-                p = _tile_path(base, tpl, tid, t.level, t.row,
-                               t.col)
-                if not os.path.exists(p):
-                    continue
-                arr, tile_nodata = _decode(p)
-                if nod is None:
-                    nod = tile_nodata
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                gt0 = m["tl"][0] + t.col * m["tw"] * m["cell"]
-                gt3 = m["tl"][1] - t.row * m["th"] * m["cell"]
-                rows.append({
-                    "image_id": f"{t.level}/{t.row}/{t.col}",
-                    "bytes": codecs.encode_raw(
-                        np.ascontiguousarray(arr)),
-                    "w": arr.shape[1], "h": arr.shape[0],
-                    "fmt": "raw",
-                    "gt0": gt0, "gt1": m["cell"], "gt2": 0.0,
-                    "gt3": gt3, "gt4": 0.0, "gt5": -m["cell"],
-                    "srid": 4326 if m["geographic"] else 0,
-                    "nodata": nod,
-                    "source": os.path.basename(t.path),
-                })
-            cols = [c2.split()[0] for c2 in schema.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tdf.mapInPandas(read_tiles, schema=schema)
+    return scan_files(
+        spark, None, read, schema,
+        tasks=("path string, level string, row int, col int", tasks))

@@ -20,7 +20,6 @@ distributed scan; the writer emits an uncompressed-subset TAB dataset
 
 from __future__ import annotations
 
-import glob as _glob
 import math
 import os
 import re
@@ -30,7 +29,7 @@ import numpy as np
 import pandas as pd
 
 from .. import geom
-from ._util import local_path
+from ._util import glob_paths, local_path, scan_files
 from .mif import _close, _generate_arc
 
 HDR_MAGIC = 42424242
@@ -725,30 +724,17 @@ def scan_tab(spark, path_glob: str):
     """Glob of .tab datasets -> (geometry binary<WKB>, <typed attrs>);
     one task per dataset, schema from the first .tab header (tiny ASCII
     read driver-side; .map/.dat bytes are only touched in tasks)."""
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
+    paths = glob_paths(path_glob)
     with open(paths[0], encoding="latin-1") as f:
         fields = parse_tab_def(f.read())
     schema = "geometry binary" + "".join(
         f", `{name}` {_spark_type(t)}" for name, t, w, p in fields)
     names = ["geometry"] + [f[0] for f in fields]
 
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-        "path string")
+    def read(r):
+        return [[rec.get(c) for c in names] for rec in read_tab(r.path)[1]]
 
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for rec in read_tab(r.path)[1]:
-                    rows.append([rec.get(c) for c in names])
-            yield pd.DataFrame(rows, columns=names)
-
-    return tdf.mapInPandas(parse, schema=schema)
+    return scan_files(spark, paths, read, schema)
 
 
 # ---------------------------------------------------------------------------

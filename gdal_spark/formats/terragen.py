@@ -36,8 +36,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from ._util import local_path
-from .. import codecs
+from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -193,22 +192,10 @@ def scan_terragen(spark, path_glob: str):
                 arr, gt, scale, offset, scal = parse_terragen(
                     bytes(r.content)
                 )
-                rows.append({
-                    "image_id":
-                        os.path.splitext(os.path.basename(r.path))[0],
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": 0, "nodata": None,
-                    "scale": scale, "offset": offset,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "scale", "offset"],
-            )
+                rows.append(raster_row(
+                    os.path.splitext(os.path.basename(r.path))[0],
+                    arr, gt, 0, None, scale=scale, offset=offset))
+            yield pd.DataFrame(rows, columns=schema_columns(OUT_SCHEMA))
 
     return (
         spark.read.format("binaryFile").load(path_glob)
@@ -223,24 +210,13 @@ def write_terragen(df, out_dir: str, scal: float = 30.0,
     """One .ter per row, task-written. With ``height_scale`` given the
     rows are written in RAW mode (values already physical int16);
     otherwise each row goes through the reference's span search."""
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
+    def dump_row(r, arr, gt, nd, out_dir):
+        raw = ((height_scale, base_height)
+               if height_scale is not None else None)
+        path = os.path.join(out_dir, f"{r.image_id}.ter")
+        with open(path, "wb") as f:
+            f.write(format_terragen(np.squeeze(arr), scal=scal,
+                                    raw=raw))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                raw = ((height_scale, base_height)
-                       if height_scale is not None else None)
-                path = os.path.join(out_dir, f"{r.image_id}.ter")
-                with open(path, "wb") as f:
-                    f.write(format_terragen(np.squeeze(arr), scal=scal,
-                                            raw=raw))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -34,7 +34,7 @@ import struct
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 
 def _expand_5bit(vals: np.ndarray) -> np.ndarray:
@@ -235,86 +235,37 @@ def format_tga(arr: np.ndarray, palette: np.ndarray | None = None,
 def scan_tga(spark, path_glob: str, srid: int = 0):
     """Glob of .tga files -> images-table rows (index or RGB(A)
     channels; palette column when colormapped), one task per file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .gif import _pal_str
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
     schema = ("image_id string, bytes binary, w int, h int, "
               "fmt string, gt0 double, gt1 double, gt2 double, "
               "gt3 double, gt4 double, gt5 double, srid int, "
               "nodata double, palette string, meta string")
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    buf = f.read()
-                arr, palette, meta = parse_tga(buf)
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": 0.0, "gt1": 1.0, "gt2": 0.0,
-                    "gt3": 0.0, "gt4": 0.0, "gt5": -1.0,
-                    "srid": int(srid), "nodata": None,
-                    "palette": (None if palette is None
-                                else _pal_str(palette)),
-                    "meta": "|".join(
-                        f"{k}={v}" for k, v in sorted(meta.items())),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata", "palette", "meta"],
-            )
+    def read(r):
+        with open(r.path, "rb") as f:
+            buf = f.read()
+        arr, palette, meta = parse_tga(buf)
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(
+            stem, arr, (0.0, 1.0, 0.0, 0.0, 0.0, -1.0), int(srid),
+            palette=None if palette is None else _pal_str(palette),
+            meta="|".join(f"{k}={v}" for k, v in sorted(meta.items())))]
 
-    return tdf.mapInPandas(read_files, schema=schema)
+    return scan_files(spark, glob_paths(path_glob), read, schema)
 
 
 def write_tga(df, out_dir: str, rle: bool = False) -> list[str]:
     """Images-table rows -> one .tga per row, written by the task
     that holds the row."""
-    import pandas as pd
-
-    from .. import codecs
     from .gif import pal_from_str
 
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    has_pal = "palette" in df.columns
+    def dump_row(r, arr, gt, nd, out_dir):
+        palette = getattr(r, "palette", None)
+        pal = pal_from_str(palette) if isinstance(palette, str) else None
+        path = os.path.join(out_dir, f"{r.image_id}.tga")
+        with open(path, "wb") as f:
+            f.write(format_tga(arr.astype(np.uint8), pal, rle=rle))
+        return path
 
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                pal = (pal_from_str(r.palette)
-                       if has_pal and isinstance(r.palette, str)
-                       else None)
-                path = os.path.join(out_dir, f"{r.image_id}.tga")
-                with open(path, "wb") as f:
-                    f.write(format_tga(arr.astype(np.uint8), pal,
-                                       rle=rle))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

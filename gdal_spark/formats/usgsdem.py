@@ -44,7 +44,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import glob_paths, raster_row, scan_files, write_files
 
 NODATA = -32767
 
@@ -238,47 +238,15 @@ def parse_usgsdem(buf: bytes):
 
 def scan_usgsdem(spark, path_glob: str):
     """Glob of .dem files -> images-table rows, one task per file."""
-    import glob as _glob
-
-    import pandas as pd
-
-    from .. import codecs
     from .envi import OUT_SCHEMA
 
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths],
-                                       len(paths)),
-        "path string",
-    )
+    def read(r):
+        with open(r.path, "rb") as f:
+            arr, gt, srid, nodata = parse_usgsdem(f.read())
+        stem = os.path.splitext(os.path.basename(r.path))[0]
+        return [raster_row(stem, arr, gt, srid, nodata)]
 
-    def read_files(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                with open(r.path, "rb") as f:
-                    arr, gt, srid, nodata = parse_usgsdem(f.read())
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                rows.append({
-                    "image_id": stem,
-                    "bytes": codecs.encode_raw(arr),
-                    "w": arr.shape[1], "h": arr.shape[0], "fmt": "raw",
-                    "gt0": gt[0], "gt1": gt[1], "gt2": gt[2],
-                    "gt3": gt[3], "gt4": gt[4], "gt5": gt[5],
-                    "srid": srid, "nodata": nodata,
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "w", "h", "fmt", "gt0",
-                         "gt1", "gt2", "gt3", "gt4", "gt5", "srid",
-                         "nodata"],
-            )
-
-    return tdf.mapInPandas(read_files, schema=OUT_SCHEMA)
+    return scan_files(spark, glob_paths(path_glob), read, OUT_SCHEMA)
 
 
 def format_usgsdem(arr: np.ndarray, gt, datum: int = 3,
@@ -357,26 +325,10 @@ def format_usgsdem(arr: np.ndarray, gt, datum: int = 3,
 def write_usgsdem(df, out_dir: str) -> list[str]:
     """Images-table rows (geographic srid) -> one .dem per row,
     written by the task that holds the row."""
-    import pandas as pd
+    def dump_row(r, arr, gt, nd, out_dir):
+        path = os.path.join(out_dir, f"{r.image_id}.dem")
+        with open(path, "wb") as f:
+            f.write(format_usgsdem(arr, gt))
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                arr = codecs.decode_image(bytes(r.bytes), r.fmt)
-                gt = tuple(float(getattr(r, f"gt{i}")) for i in range(6))
-                path = os.path.join(out_dir, f"{r.image_id}.dem")
-                with open(path, "wb") as f:
-                    f.write(format_usgsdem(arr, gt))
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

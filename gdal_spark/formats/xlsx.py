@@ -62,7 +62,7 @@ from xml.sax.saxutils import escape, quoteattr
 
 import pandas as pd
 
-from ._util import local_path
+from ._util import glob_paths, local_path
 
 _SECS_PER_DAY = 86400
 _DAYS_1900_1970 = 25569  # reference NUMBER_OF_DAYS_BETWEEN_1900_AND_1970
@@ -510,13 +510,7 @@ def scan_xlsx(spark, path_glob: str, sheet: str | None = None,
     """Glob of .xlsx files -> one DataFrame over the named sheet (or
     the first sheet); schema probed from the FIRST file driver-side,
     one task per (file, sheet) thereafter."""
-    import glob as _glob
-
-    pat = local_path(path_glob)
-    paths = (sorted(_glob.glob(pat))
-             if any(ch in pat for ch in "*?[") else [pat])
-    if not paths:
-        raise FileNotFoundError(path_glob)
+    paths = glob_paths(path_glob)
     with open(paths[0], "rb") as f:
         sheets = parse_xlsx(f.read(), headers=headers,
                             field_types=field_types)

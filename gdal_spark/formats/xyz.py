@@ -39,7 +39,7 @@ import os
 
 import numpy as np
 
-from ._util import local_path
+from ._util import local_path, write_files
 
 _XN = {"x", "lon", "long", "longitude", "easting", "east"}
 _YN = {"y", "lat", "latitude", "northing", "north"}
@@ -222,41 +222,25 @@ def write_xyz(df, out_dir: str, column_separator: str = " ",
     """One .xyz per images-table row, written BY THE TASK that holds
     the row (the aaigrid sink shape): cell centers top-left to
     bottom-right, the order the reference's CreateCopy emits."""
-    import pandas as pd
+    def dump_row(r, a, gt, nd, out_dir):
+        if a.ndim == 3:
+            a = a[:, :, 0]
+        hh, ww = a.shape
+        path = os.path.join(out_dir, f"{r.image_id}.xyz")
+        with open(path, "w") as f:
+            if add_header_line:
+                f.write(f"X{column_separator}Y"
+                        f"{column_separator}Z\n")
+            for j in range(hh):
+                y = gt[3] + (j + 0.5) * gt[5]
+                for i in range(ww):
+                    x = gt[0] + (i + 0.5) * gt[1]
+                    v = a[j, i]
+                    vs = (repr(int(v))
+                          if float(v).is_integer()
+                          else repr(float(v)))
+                    f.write(f"{x!r}{column_separator}{y!r}"
+                            f"{column_separator}{vs}\n")
+        return path
 
-    from .. import codecs
-
-    out_dir = local_path(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches):
-        for pdf in batches:
-            names = []
-            for r in pdf.itertuples(index=False):
-                a = codecs.decode_image(bytes(r.bytes), r.fmt)
-                if a.ndim == 3:
-                    a = a[:, :, 0]
-                hh, ww = a.shape
-                gt = [float(getattr(r, f"gt{i}")) for i in range(6)]
-                path = os.path.join(out_dir, f"{r.image_id}.xyz")
-                with open(path, "w") as f:
-                    if add_header_line:
-                        f.write(f"X{column_separator}Y"
-                                f"{column_separator}Z\n")
-                    for j in range(hh):
-                        y = gt[3] + (j + 0.5) * gt[5]
-                        for i in range(ww):
-                            x = gt[0] + (i + 0.5) * gt[1]
-                            v = a[j, i]
-                            vs = (repr(int(v))
-                                  if float(v).is_integer()
-                                  else repr(float(v)))
-                            f.write(f"{x!r}{column_separator}{y!r}"
-                                    f"{column_separator}{vs}\n")
-                names.append(path)
-            yield pd.DataFrame({"path": names})
-
-    return [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    return write_files(df, out_dir, dump_row)

@@ -60,7 +60,7 @@ import zlib
 
 import numpy as np
 
-from ._util import local_path
+from ._util import local_path, write_files
 
 _UNSUPPORTED_COMPRESSORS = {"blosc", "lz4", "lzma", "zstd", "bz2"}
 
@@ -597,25 +597,14 @@ def write_zarr(df, store: str, array: str = "band1",
     pos = {k: v for k, v in cols.items()}
     pos_b = df.sparkSession.sparkContext.broadcast(pos)
 
-    def dump(batches):
-        import pandas as pd
+    def dump_row(r, a, gt, nd, out_dir):
+        m = json.loads(mjson)
+        path = _chunk_path(store, array, m, pos_b.value[r.image_id])
+        with open(path, "wb") as f:
+            f.write(encode_zarr_chunk(np.ascontiguousarray(a), m))
+        return path
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                m = json.loads(mjson)
-                a = codecs.decode_image(bytes(r.bytes), r.fmt)
-                cy, cx = pos_b.value[r.image_id]
-                path = _chunk_path(store, array, m, (cy, cx))
-                with open(path, "wb") as f:
-                    f.write(encode_zarr_chunk(np.ascontiguousarray(a), m))
-                out.append(path)
-            yield pd.DataFrame({"path": out})
-
-    written = [
-        r.path
-        for r in df.mapInPandas(dump, schema="path string").collect()
-    ]
+    written = write_files(df, store, dump_row)
     return {"store": store, "array": array, "shape": meta["shape"],
             "chunks": meta["chunks"], "n_chunks": len(written),
             "srid": srid}

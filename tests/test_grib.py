@@ -193,3 +193,69 @@ class TestGribScan:
         assert gdal_checksum(arr) == 46650
         assert (r.w, r.h) == (177, 129)
         assert r.drtn == 3 and r.gdtn == 10 and r.edition == 2
+
+
+def _multi_field_grib(tmp_path):
+    """one_one.grib2 with its first message's section 4-7 group
+    repeated twice more (section-0 total length patched): one message
+    decoding to three fields, followed by the untouched second
+    message."""
+    import struct
+
+    with open(os.path.join(DATA, "one_one.grib2"), "rb") as f:
+        buf = f.read()
+    (off0, tl0, _), (off1, tl1, _) = index_grib(buf)
+    # section heads of message 0: 0 (16 B), 1, 3, 4, 5, 6, 7, "7777"
+    group_start = 16 + 21 + 72
+    group_end = tl0 - 4
+    assert buf[group_start + 4] == 4 and buf[group_end:tl0] == b"7777"
+    group = buf[group_start:group_end]
+    body = buf[:group_end] + group + group + b"7777"
+    body = body[:8] + struct.pack(">Q", len(body)) + body[16:]
+    path = tmp_path / "multi_field.grib2"
+    path.write_bytes(body + buf[off1:off1 + tl1])
+    return str(path)
+
+
+class TestGribMultiFieldMessage:
+    def test_parse_numbers_every_field(self, tmp_path):
+        with open(_multi_field_grib(tmp_path), "rb") as f:
+            fields = parse_grib(f.read())
+        assert [ft["band"] for ft in fields] == [0, 1, 2, 3]
+
+    def test_scan_image_ids_unique_and_match_parse(self, spark, tmp_path):
+        path = _multi_field_grib(tmp_path)
+        with open(path, "rb") as f:
+            want = [f"multi_field.grib2#{ft['band']}"
+                    for ft in parse_grib(f.read())]
+        df = scan_grib(spark, path)
+        # still one task per message
+        assert df.rdd.getNumPartitions() == 2
+        ids = [r.image_id for r in df.collect()]
+        assert len(ids) == len(set(ids))
+        assert ids == want
+
+
+class TestGribSeekIndex:
+    @pytest.mark.parametrize("name", sorted(os.listdir(DATA)))
+    def test_seek_index_matches_buffer_index(self, name):
+        from gdal_spark.formats.grib import _index_grib_file
+
+        path = os.path.join(DATA, name)
+        with open(path, "rb") as f:
+            buf = f.read()
+        with open(path, "rb") as f:
+            assert _index_grib_file(f) == index_grib(buf)
+
+    def test_seek_index_on_multi_field_message(self, tmp_path):
+        from gdal_spark.formats.grib import (_grib2_field_count,
+                                             _index_grib_file)
+
+        path = _multi_field_grib(tmp_path)
+        with open(path, "rb") as f:
+            buf = f.read()
+        with open(path, "rb") as f:
+            idx = _index_grib_file(f)
+            counts = [_grib2_field_count(f, off, tl) for off, tl, _ in idx]
+        assert idx == index_grib(buf)
+        assert counts == [3, 1]
