@@ -3320,7 +3320,7 @@ def _local_geodetic_rows():
     for z in (0, 1):
         for tx in range(2 * (1 << z)):
             for ty in range(1 << z):
-                cut = T._cut_one_geodetic(
+                cut = T._cut_one(
                     arr, alpha, r, z, tx, ty, 256, "bilinear", grid
                 )
                 if cut is None:

@@ -55,6 +55,8 @@ class MercatorGrid:
     scalars or numpy arrays.
     """
 
+    epsg = 3857
+
     def __init__(self, tile_size: int = 256) -> None:
         self.tile_size = tile_size
         self.initial_resolution = 2 * math.pi * EARTH_RADIUS / tile_size
@@ -145,12 +147,12 @@ class GeodeticGrid:
     else one (resFact=360/ts).
     """
 
+    epsg = 4326
+
     def __init__(self, tile_size: int = 256, tmscompatible: bool = True) -> None:
         self.tile_size = tile_size
-        if tmscompatible:
-            self.res_fact = 180.0 / tile_size
-        else:
-            self.res_fact = 360.0 / tile_size
+        self.columns_z0 = 2 if tmscompatible else 1
+        self.res_fact = 360.0 / self.columns_z0 / tile_size
 
     def resolution(self, zoom):
         return self.res_fact / (2.0 ** np.asarray(zoom))
@@ -170,6 +172,18 @@ class GeodeticGrid:
     def lonlat_to_tile(self, lon, lat, zoom):
         px, py = self.lonlat_to_pixels(lon, lat, zoom)
         return self.pixels_to_tile(px, py)
+
+    def tile_range(self, lon0, lat0, lon1, lat1, zoom):
+        """Covered tile range of a lon/lat box, cropped to the grid's
+        2**z rows and columns_z0 * 2**z columns."""
+        tminx, tminy = self.lonlat_to_tile(lon0, lat0, zoom)
+        tmaxx, tmaxy = self.lonlat_to_tile(lon1, lat1, zoom)
+        n = np.int64(2) ** np.asarray(zoom)
+        tminx = np.maximum(0, tminx)
+        tminy = np.maximum(0, tminy)
+        tmaxx = np.minimum(self.columns_z0 * n - 1, tmaxx)
+        tmaxy = np.minimum(n - 1, tmaxy)
+        return tminx, tminy, tmaxx, tmaxy
 
     def tile_bounds(self, tx, ty, zoom):
         res = self.resolution(zoom)

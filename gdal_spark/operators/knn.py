@@ -62,15 +62,21 @@ HIST_MAX_ZOOM = 10
 
 
 def _keyed_cells(points, queries, zoom, query_key, point_key, qx, qy, px, py):
-    """Both sides under the join's internal names, with their cells."""
-    pts = points.select(point_key, px, py).toDF("_pk", "_px", "_py").selectExpr(
+    """Both sides under the join's internal names, with their cells.
+    Rows with a null coordinate are dropped: the cell clamp would put
+    them in an edge cell, where their null distance ranks first."""
+    pts = points.select(point_key, px, py).toDF("_pk", "_px", "_py").where(
+        "_px IS NOT NULL AND _py IS NOT NULL"
+    ).selectExpr(
         "_pk",
         "_px",
         "_py",
         f"{tile_coord_sql('_px', zoom)} AS p_tx",
         f"{tile_coord_sql('_py', zoom)} AS p_ty",
     )
-    qs = queries.select(query_key, qx, qy).toDF("_qk", "_qx", "_qy").selectExpr(
+    qs = queries.select(query_key, qx, qy).toDF("_qk", "_qx", "_qy").where(
+        "_qx IS NOT NULL AND _qy IS NOT NULL"
+    ).selectExpr(
         "_qk",
         "_qx",
         "_qy",

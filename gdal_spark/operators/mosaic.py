@@ -12,30 +12,24 @@ Distributed shape:
 1. ONE metadata aggregation (extent/resolution over the georef columns,
    never pixels) -> target grid; the driver holds a single row.
 2. Per-image fragment cut: the covered output-tile range is Column math;
-   one mapInPandas decodes each source ONCE and resamples it into each
-   overlapped output tile via the same-CRS warp_array (affine -> affine,
-   exact mapping; source alpha resampled through the same transform like
-   tile._cut_one). Only (ts, ts) PNG fragments leave the stage.
-3. groupBy(tx, ty) compose — the tile-key shuffle IS the mosaic; sources
-   paint in image_id order (buildvrt paints in command-line order;
-   image_id is the deterministic distributed equivalent) where valid.
+   the pyramid's fragment pass (tile._map_fragments) decodes each source
+   ONCE and warps it into each overlapped output tile with tile._warp_cut
+   (same-CRS affine -> affine, exact mapping; the source alpha goes
+   through the same transform). Only PNG fragments leave the stage.
+3. (tx, ty) compose through tile._compose_by_key — the tile-key shuffle
+   IS the mosaic, one task per core; sources paint in image_id order
+   (buildvrt paints in command-line order; image_id is the deterministic
+   distributed equivalent) where valid, with the pyramid's paint code.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from .. import codecs
-from ..checksum import image_checksums
-from .tile import _decode_rgb_alpha
-from .warp import warp_array
-
-MOSAIC_FRAGMENT_SCHEMA = (
-    "tx long, ty long, image_id string, px binary, alpha binary, c int, "
-    "tw int, th int"
+from .tile import (
+    _check_on_error, _compose_by_key, _map_fragments, _paint, _tile_frame, _warp_cut,
 )
 
 MOSAIC_TILE_SCHEMA = (
@@ -117,10 +111,7 @@ def build_mosaic(
     ``on_error='skip'`` drops sources whose bytes fail to decode instead
     of aborting the mosaic (the warp_images convention; default 'fail'
     matches gdalbuildvrt)."""
-    import pandas as pd
-
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
+    _check_on_error(on_error)
 
     gt, W, H, srid = mosaic_grid(images, resolution, target_res)
     ts = int(tile_size)
@@ -147,117 +138,35 @@ def build_mosaic(
         .where((F.col("txmax") >= F.col("txmin")) & (F.col("tymax") >= F.col("tymin")))
     )
 
-    def cut(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    arr, alpha_src = _decode_rgb_alpha(bytes(r.bytes), r.fmt)
-                except Exception:
-                    if on_error == "skip":
-                        continue
-                    raise
-                src_gt = (r.gt0, r.gt1, r.gt2, r.gt3, r.gt4, r.gt5)
-                for tx in range(int(r.txmin), int(r.txmax) + 1):
-                    for ty in range(int(r.tymin), int(r.tymax) + 1):
-                        tw = min(ts, W - tx * ts)
-                        th = min(ts, H - ty * ts)
-                        dst_gt = (
-                            minx + tx * ts * rx, rx, 0.0,
-                            maxy - ty * ts * ry, 0.0, -ry,
-                        )
-                        o, cov = warp_array(
-                            arr, src_gt, int(r.srid), (th, tw), dst_gt,
-                            int(r.srid), resampling,
-                        )
-                        tile = np.clip(np.round(o), 0, 255).astype(np.uint8)
-                        if tile.ndim == 2:
-                            tile = tile[:, :, None]
-                        a_out, _ = warp_array(
-                            alpha_src.astype(np.float64), src_gt, int(r.srid),
-                            (th, tw), dst_gt, int(r.srid), resampling,
-                        )
-                        a2 = np.atleast_3d(a_out)[:, :, 0]
-                        alpha = np.where(
-                            (cov > 0) & (a2 >= 127.5), 255, 0
-                        ).astype(np.uint8)
-                        if not alpha.any():
-                            continue
-                        out.append(
-                            {
-                                "tx": int(tx),
-                                "ty": int(ty),
-                                "image_id": r.image_id,
-                                "px": codecs.encode_png(tile, level=1),
-                                "alpha": b""
-                                if alpha.min() == 255
-                                else codecs.encode_png(alpha, level=1),
-                                "c": int(tile.shape[2]),
-                                "tw": int(tw),
-                                "th": int(th),
-                            }
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "tx", "ty", "image_id", "px", "alpha", "c", "tw", "th",
-                ],
-            )
+    def tile_gt(tx, ty):
+        return (minx + tx * ts * rx, rx, 0.0, maxy - ty * ts * ry, 0.0, -ry)
 
-    frags = ranged.mapInPandas(cut, schema=MOSAIC_FRAGMENT_SCHEMA)
+    def tile_shape(tx, ty):
+        # edge tiles are clipped to the raster size
+        return min(ts, H - ty * ts), min(ts, W - tx * ts)
 
-    def compose(pdf: pd.DataFrame) -> pd.DataFrame:
-        tx = int(pdf["tx"].iloc[0])
-        ty = int(pdf["ty"].iloc[0])
-        tw = int(pdf["tw"].iloc[0])
-        th = int(pdf["th"].iloc[0])
-        c = int(pdf["c"].max())
-        pdf = pdf.sort_values("image_id")
-        buf = np.zeros((th, tw, c), dtype=np.uint8)
-        alpha = np.zeros((th, tw), dtype=np.uint8)
-        src_ids = []
-        for r in pdf.itertuples(index=False):
-            tile = codecs.decode_png(bytes(r.px))
-            if tile.ndim == 2:
-                tile = tile[:, :, None]
-            if tile.shape[2] < c:
-                tile = np.repeat(tile[:, :, :1], c, axis=2)
-            ab = bytes(r.alpha)
-            if len(ab) == 0:
-                buf[:, :, :] = tile
-                alpha[:, :] = 255
-            else:
-                fa = codecs.decode_png(ab)
-                if fa.ndim == 3:
-                    fa = fa[:, :, 0]
-                m = fa > 0
-                buf[m] = tile[m]
-                alpha[m] = 255
-            src_ids.append(r.image_id)
-        rgba = np.dstack([buf, alpha])
-        sums = image_checksums(rgba)
-        return pd.DataFrame(
-            [
-                {
-                    "tx": tx,
-                    "ty": ty,
-                    "w": tw,
-                    "h": th,
-                    "png": codecs.encode_png(rgba, level=3),
-                    "checksum": sums[0],
-                    "checksums": sums,
-                    "n_src": len(src_ids),
-                    "src_ids": src_ids,
-                    "gt0": minx + tx * ts * rx,
-                    "gt1": rx,
-                    "gt2": 0.0,
-                    "gt3": maxy - ty * ts * ry,
-                    "gt4": 0.0,
-                    "gt5": -ry,
-                }
-            ]
+    def cuts(r, arr, alpha_src):
+        src_gt = (r.gt0, r.gt1, r.gt2, r.gt3, r.gt4, r.gt5)
+        for tx in range(int(r.txmin), int(r.txmax) + 1):
+            for ty in range(int(r.tymin), int(r.tymax) + 1):
+                tile, alpha = _warp_cut(
+                    arr, alpha_src, src_gt, int(r.srid), tile_shape(tx, ty),
+                    tile_gt(tx, ty), int(r.srid), resampling,
+                )
+                if alpha.any():
+                    yield 0, tx, ty, tile, alpha
+
+    def compose(pdf):
+        tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
+        th, tw = tile_shape(tx, ty)
+        rgba, src_ids = _paint(pdf, (th, tw))
+        gts = dict(zip(("gt0", "gt1", "gt2", "gt3", "gt4", "gt5"), tile_gt(tx, ty)))
+        return _tile_frame(
+            rgba, MOSAIC_TILE_SCHEMA, tx=tx, ty=ty, w=tw, h=th,
+            n_src=len(src_ids), src_ids=src_ids, **gts,
         )
 
-    return frags.groupBy("tx", "ty").applyInPandas(
-        compose, schema=MOSAIC_TILE_SCHEMA
+    frags = _map_fragments(ranged, on_error, cuts)
+    return _compose_by_key(
+        frags, ("tx", "ty"), (), compose, "build_mosaic", MOSAIC_TILE_SCHEMA
     )

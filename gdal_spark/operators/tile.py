@@ -10,18 +10,22 @@ Pipeline (SURVEY.md §3.3 mapping):
    work-list build of generate_base_tiles (2797-2962) pushed into Catalyst,
    and the skip-no-source filter happens here, before any pixel work
    (the "single biggest saver at scale", SURVEY.md §4).
-3. **fragment cut** — mapInPandas over image rows: decode once per image,
-   emit one fragment per covered tile. 3857 north-up sources follow the
-   gdal2tiles geo_query + oversample + scale_query_to_tile path digit for
-   digit (gdal2tiles.py:2964-3006, 1334-1394); other sources take the exact
-   per-tile warp (the gdalalg_raster_tile.cpp:647-649 per-tile
-   WarpRegionToBuffer formulation).
+3. **fragment cut** — one mapInPandas over image rows for every tile
+   grid and level range, keyed by a grid object (``MercatorGrid`` or
+   ``GeodeticGrid``, built for the tile size): decode once per image, emit
+   one fragment per covered tile of each level. Sources north-up in the
+   grid's CRS follow the gdal2tiles geo_query + oversample +
+   scale_query_to_tile path digit for digit (gdal2tiles.py:2964-3006,
+   1334-1394); other sources take the exact per-tile warp (the
+   gdalalg_raster_tile.cpp:647-649 per-tile WarpRegionToBuffer
+   formulation).
 4. **compose** — a (z, tx, ty) hash repartition into ``defaultParallelism``
-   partitions, then groupBy(z, tx, ty).applyInPandas: mosaic fragments in
+   partitions, then groupBy(z, tx, ty).applyInPandas: paint fragments in
    image_id order (gdalbuildvrt placement, apps/gdalbuildvrt_lib.cpp),
    append alpha (gdal2tiles.py:2815), encode PNG, GDAL checksum
    (alg/gdalchecksum.cpp) + lineage columns. The tile-key shuffle **is**
-   the mosaic.
+   the mosaic; mosaic.build_mosaic groups and paints through the same
+   ``_compose_by_key``.
 5. **overviews** — the same grouping keyed by the parent tile, children
    in (tx, ty) order: place <=4 children in a 2x2 buffer by (x%2,
    y-parity) (gdal2tiles.py:1536-1550), 2:1 average downsample with exact
@@ -42,9 +46,11 @@ import numpy as np
 
 from .. import codecs
 from ..checksum import image_checksums
-from ..grid import ORIGIN_SHIFT, EARTH_RADIUS, MercatorGrid, geo_query, xyz_flip
-from ..resample import resize
-from .warp import warp_array
+from ..grid import (
+    ORIGIN_SHIFT, EARTH_RADIUS, GeodeticGrid, MercatorGrid, geo_query, xyz_flip,
+)
+from ..resample import SAMPLERS, WINDOW_KERNELS, resize
+from .warp import geo_transform_points, warp_array
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -121,11 +127,37 @@ def assign_tiles(images, zoom, tile_size: int = 256):
 FRAGMENT_SCHEMA = (
     "z int, tx long, ty long, image_id string, px binary, alpha binary, c int"
 )
+FRAGMENT_COLUMNS = ["z", "tx", "ty", "image_id", "px", "alpha", "c"]
+
+
+def _native_zoom_col(grid):
+    """Per-image native zoom on ``grid``: the mercator ZoomForPixelSize,
+    or gdal2tiles' geodetic one (resFact) from the DEGREE pixel size."""
+    if grid.epsg == 3857:
+        return native_zoom_col(grid.tile_size)
+    ps_deg = F.when(F.col("srid") == 4326, F.col("gt1")).otherwise(
+        F.col("gt1") / (ORIGIN_SHIFT / 180.0)
+    )
+    raw = F.floor(F.log2(F.lit(grid.res_fact) / ps_deg))
+    return F.greatest(F.lit(0), F.least(F.lit(31), raw)).cast("int")
+
+
+def _grid_bounds(r, grid):
+    """Image footprint in ``grid``'s CRS: the 3857 footprint columns, or
+    lon/lat for the geodetic grid (a 4326 source's own extent)."""
+    if grid.epsg == 3857:
+        return r.minx, r.miny, r.maxx, r.maxy
+    if r.srid == 4326:
+        return r.gt0, r.gt3 + r.h * r.gt5, r.gt0 + r.w * r.gt1, r.gt3
+    xs, ys = geo_transform_points(
+        np.array([r.minx, r.maxx]), np.array([r.miny, r.maxy]), 3857, 4326
+    )
+    return float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1])
 
 
 def _cut_window(arr, alpha_src, gt, w, h, bounds, ts: int, resampling: str):
     """geo_query cut of one tile from a north-up source already in the
-    tile grid's CRS (shared by the mercator and geodetic paths)."""
+    tile grid's CRS."""
     bminx, bminy, bmaxx, bmaxy = bounds
     (rx, ry, rxs, rys), (wx, wy, wxs, wys) = geo_query(
         gt, w, h, bminx, bmaxy, bmaxx, bminy, querysize=ts
@@ -136,8 +168,6 @@ def _cut_window(arr, alpha_src, gt, w, h, bounds, ts: int, resampling: str):
         return None
     patch = arr[ry : ry + rys, rx : rx + rxs]
     apatch = alpha_src[ry : ry + rys, rx : rx + rxs]
-    from ..resample import WINDOW_KERNELS
-
     kern = resampling
     if (
         kern not in WINDOW_KERNELS
@@ -157,15 +187,33 @@ def _cut_window(arr, alpha_src, gt, w, h, bounds, ts: int, resampling: str):
     return tile, alpha
 
 
-def _cut_one(arr, alpha_src, r, z: int, tx: int, ty: int, tile_size: int, resampling: str):
-    """Cut one (image, tile) fragment. Returns (tile_rgb uint8 (ts,ts,c),
-    alpha uint8 (ts,ts)) or None if the tile has no coverage."""
+def _warp_cut(arr, alpha_src, gt, srid, shape, dst_gt, dst_srid, resampling):
+    """Per-tile warp of a source and its alpha through one transform
+    (the apps/gdalalg_raster_tile.cpp:647-649 formulation). A pixel is
+    opaque where the source covers it and the warped source alpha is at
+    least half (the 127.5 threshold of _cut_window), so source
+    transparency survives the warp. Returns (uint8 (h,w,c), alpha (h,w))."""
+    out, cov = warp_array(arr, gt, srid, shape, dst_gt, dst_srid, resampling)
+    a_out, _cov = warp_array(
+        alpha_src.astype(np.float64), gt, srid, shape, dst_gt, dst_srid, resampling
+    )
+    tile = np.atleast_3d(np.clip(np.round(out), 0, 255).astype(np.uint8))
+    a2 = np.atleast_3d(a_out)[:, :, 0]
+    alpha = np.where((cov > 0) & (a2 >= 127.5), 255, 0).astype(np.uint8)
+    return tile, alpha
+
+
+def _cut_one(arr, alpha_src, r, z: int, tx: int, ty: int, tile_size: int, resampling: str,
+             grid=None):
+    """Cut one (image, tile) fragment of ``grid`` (default: the mercator
+    grid for ``tile_size``). Returns (tile_rgb uint8 (ts,ts,c), alpha
+    uint8 (ts,ts)) or None if the tile has no coverage."""
+    grid = MercatorGrid(tile_size) if grid is None else grid
     ts = tile_size
     gt = (r.gt0, r.gt1, r.gt2, r.gt3, r.gt4, r.gt5)
-    b = _MERC.tile_bounds(tx, ty, z)
-    bminx, bminy, bmaxx, bmaxy = (float(v) for v in b)
+    bminx, bminy, bmaxx, bmaxy = (float(v) for v in grid.tile_bounds(tx, ty, z))
 
-    if r.srid == 3857 and gt[2] == 0.0 and gt[4] == 0.0:
+    if r.srid == grid.epsg and gt[2] == 0.0 and gt[4] == 0.0:
         # gdal2tiles base-tile path: geo_query read/write windows.
         # NOTE: for read windows >2x the write window this path uses the
         # exact area-average reducer REGARDLESS of `resampling` (the
@@ -185,60 +233,17 @@ def _cut_one(arr, alpha_src, r, z: int, tx: int, ty: int, tile_size: int, resamp
             return None
         tile, alpha = cut
     else:
-        # per-tile warp (apps/gdalalg_raster_tile.cpp:647-649 formulation);
-        # every GRA_* kernel goes straight through (no silent fallback)
-        from ..resample import WINDOW_KERNELS as _WK
-        from ..resample import SAMPLERS as _SK
-
-        res = _MERC.resolution(z)
-        dst_gt = (bminx, float(res), 0.0, bmaxy, 0.0, -float(res))
-        samp = resampling if (resampling in _SK or resampling in _WK) else "bilinear"
-        out, alpha = warp_array(arr, gt, r.srid, (ts, ts), dst_gt, 3857, samp)
-        tile = np.clip(np.round(out), 0, 255).astype(np.uint8)
-        if tile.ndim == 2:
-            tile = tile[:, :, None]
-        if alpha_src is not None:
-            # source transparency must survive the warp: resample the
-            # source alpha through the same transform and AND it into
-            # the coverage mask (same 127.5 threshold as _cut_window)
-            a_out, _cov = warp_array(
-                alpha_src.astype(np.float64), gt, r.srid, (ts, ts),
-                dst_gt, 3857, samp,
-            )
-            a2 = np.atleast_3d(a_out)[:, :, 0]
-            alpha = np.where(
-                (alpha > 0) & (a2 >= 127.5), 255, 0
-            ).astype(np.uint8)
-    if tile.ndim == 2:
-        tile = tile[:, :, None]
+        # per-tile warp; every GRA_* kernel goes straight through (no
+        # silent fallback)
+        res = float(grid.resolution(z))
+        dst_gt = (bminx, res, 0.0, bmaxy, 0.0, -res)
+        samp = resampling if (resampling in SAMPLERS or resampling in WINDOW_KERNELS) else "bilinear"
+        tile, alpha = _warp_cut(
+            arr, alpha_src, gt, r.srid, (ts, ts), dst_gt, grid.epsg, samp
+        )
     if not alpha.any():
         return None
     return tile, alpha
-
-
-def tile_range_cols(images, zoom, tile_size: int = 256):
-    """Covered TMS tile range per image at ``zoom`` (Column math only) —
-    the tminmax build of gdal2tiles.py:2428-2435 without exploding."""
-    z = zoom if isinstance(zoom, Column) else F.lit(int(zoom))
-    ir = 2 * math.pi * EARTH_RADIUS / tile_size
-    res = F.lit(ir) / F.pow(F.lit(2.0), z.cast("double"))
-    ts = float(tile_size)
-
-    def m2t(m):
-        p = (m + ORIGIN_SHIFT) / res
-        return (F.ceil(p / ts) - 1).cast("long")
-
-    n1 = F.pow(F.lit(2.0), z.cast("double")).cast("long") - 1
-    return (
-        images.withColumn("z", z.cast("int"))
-        .withColumn("tminx", F.greatest(F.lit(0).cast("long"), m2t(F.col("minx"))))
-        .withColumn("tminy", F.greatest(F.lit(0).cast("long"), m2t(F.col("miny"))))
-        .withColumn("tmaxx", F.least(n1, m2t(F.col("maxx"))))
-        .withColumn("tmaxy", F.least(n1, m2t(F.col("maxy"))))
-        .where(
-            (F.col("tmaxx") >= F.col("tminx")) & (F.col("tmaxy") >= F.col("tminy"))
-        )
-    )
 
 
 def _decode_rgb_alpha(raw: bytes, fmt: str):
@@ -285,41 +290,59 @@ def _fragment_row(r, z, tx, ty, tile, alpha):
     }
 
 
-def cut_fragments(images, zoom=None, tile_size: int = 256, resampling: str = "average", on_error: str = "fail"):
-    """images (+ optional fixed zoom; default = per-image native zoom) ->
-    fragments DF. Each image row stays ONE row into the pandas pass
-    (tile ranges are columns, not an explode), so the image is decoded
-    exactly once and its bytes are never duplicated across tiles; only
-    (ts, ts) PNG fragments leave the stage."""
+def _map_fragments(rows, on_error: str, cuts):
+    """One mapInPandas over image rows: decode each image once (or skip
+    it, ``on_error``) and emit a fragment for every (z, tx, ty, tile,
+    alpha) that ``cuts(r, arr, alpha_src)`` yields. Image bytes are never
+    duplicated across tiles; only PNG fragments leave the stage."""
     import pandas as pd
-
-    z_col = F.lit(int(zoom)) if zoom is not None else native_zoom_col(tile_size)
-    with_range = tile_range_cols(images, z_col, tile_size)
 
     def do(batches):
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
                 dec = _decode_or_none(bytes(r.bytes), r.fmt, on_error)
-                if dec is None:
-                    continue
-                arr, alpha_src = dec
-                z = int(r.z)
-                for tx in range(int(r.tminx), int(r.tmaxx) + 1):
-                    for ty in range(int(r.tminy), int(r.tmaxy) + 1):
-                        cut = _cut_one(
-                            arr, alpha_src, r, z, tx, ty, tile_size, resampling
-                        )
-                        if cut is None:
-                            continue
-                        tile, alpha = cut
-                        out.append(_fragment_row(r, z, tx, ty, tile, alpha))
-            yield pd.DataFrame(
-                out,
-                columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"],
-            )
+                if dec is not None:
+                    out.extend(_fragment_row(r, *f) for f in cuts(r, *dec))
+            yield pd.DataFrame(out, columns=FRAGMENT_COLUMNS)
 
-    return with_range.mapInPandas(do, schema=FRAGMENT_SCHEMA)
+    return rows.mapInPandas(do, schema=FRAGMENT_SCHEMA)
+
+
+def _cut(images, grid, tminz, tmaxz, levels_below, resampling: str, on_error: str):
+    """Fragments of ``grid`` for a range of zoom levels per image, every
+    level cut straight from the source. Levels: native zoom z_n (or
+    ``tmaxz``) down to ``tminz`` — or, with ``levels_below=k``, down to
+    z_n - k."""
+    _check_on_error(on_error)
+    ts = grid.tile_size
+    # explicit tmaxz wins (gdal2tiles cuts past native zoom by upsampling
+    # when asked); otherwise per-image native zoom
+    imgs = images.withColumn(
+        "zmax", _native_zoom_col(grid) if tmaxz is None else F.lit(int(tmaxz))
+    )
+    lo = F.lit(0 if tminz is None else int(tminz))
+    if levels_below is not None:
+        lo = F.greatest(lo, F.col("zmax") - int(levels_below))
+    imgs = imgs.withColumn("zmin", F.least(lo, F.col("zmax")))
+
+    def cuts(r, arr, alpha_src):
+        bounds = _grid_bounds(r, grid)
+        for z in range(int(r.zmax), int(r.zmin) - 1, -1):
+            tminx, tminy, tmaxx, tmaxy = (int(v) for v in grid.tile_range(*bounds, z))
+            for tx in range(tminx, tmaxx + 1):
+                for ty in range(tminy, tmaxy + 1):
+                    cut = _cut_one(arr, alpha_src, r, z, tx, ty, ts, resampling, grid)
+                    if cut is not None:
+                        yield (z, tx, ty, *cut)
+
+    return _map_fragments(imgs, on_error, cuts)
+
+
+def cut_fragments(images, zoom=None, tile_size: int = 256, resampling: str = "average", on_error: str = "fail"):
+    """images (+ optional fixed zoom; default = per-image native zoom) ->
+    fragments DF of one level."""
+    return _cut(images, MercatorGrid(tile_size), zoom, zoom, 0, resampling, on_error)
 
 
 # ---------------------------------------------------------------------------
@@ -332,19 +355,15 @@ TILE_SCHEMA = (
 )
 
 
-def _compose_group(pdf, tile_size: int):
-    import pandas as pd
-
-    z = int(pdf["z"].iloc[0])
-    tx = int(pdf["tx"].iloc[0])
-    ty = int(pdf["ty"].iloc[0])
-    pdf = pdf.sort_values("image_id")
-    ts = tile_size
+def _paint(pdf, shape):
+    """Paint a tile's fragments in image_id order (gdalbuildvrt
+    placement): each fragment's opaque pixels overwrite what lies under
+    them. Returns the RGBA array and the painted image ids."""
     c = int(pdf["c"].max())
-    buf = np.zeros((ts, ts, c), dtype=np.uint8)
-    alpha = np.zeros((ts, ts), dtype=np.uint8)
+    buf = np.zeros((*shape, c), dtype=np.uint8)
+    alpha = np.zeros(shape, dtype=np.uint8)
     src_ids = []
-    for r in pdf.itertuples(index=False):
+    for r in pdf.sort_values("image_id").itertuples(index=False):
         tile = codecs.decode_png(bytes(r.px))
         if tile.ndim == 2:
             tile = tile[:, :, None]
@@ -362,32 +381,35 @@ def _compose_group(pdf, tile_size: int):
             buf[m] = tile[m]
             alpha[m] = 255
         src_ids.append(r.image_id)
-    rgba = np.dstack([buf, alpha])
+    return np.dstack([buf, alpha]), src_ids
+
+
+def _tile_frame(rgba, schema: str, **cols):
+    """One row of ``schema`` (in its column order): ``cols`` plus the PNG
+    and GDAL checksums of ``rgba``."""
+    import pandas as pd
+
+    sums = image_checksums(rgba)
     # level 3: ~2x faster than the zlib default for ~2% larger tiles
     # (150 -> 154 KB measured on a photographic tile)
     png = codecs.encode_png(rgba, level=3)
-    sums = image_checksums(rgba)
     return pd.DataFrame(
-        [
-            {
-                "z": z,
-                "tx": tx,
-                "ty": ty,
-                "y_xyz": int(xyz_flip(ty, z)),
-                "png": png,
-                "w": ts,
-                "h": ts,
-                "checksum": sums[0],
-                "checksums": sums,
-                "n_src": len(src_ids),
-                "src_ids": src_ids,
-            }
-        ]
+        [{**cols, "png": png, "checksum": sums[0], "checksums": sums}],
+        columns=[f.split()[0] for f in schema.split(", ")],
     )
 
 
-def _compose_by_key(rows, keys, order, kernel, caller: str):
-    """``kernel`` once per ``keys`` group, returning TILE_SCHEMA rows.
+def _compose_group(pdf, tile_size: int):
+    z, tx, ty = (int(pdf[k].iloc[0]) for k in ("z", "tx", "ty"))
+    rgba, src_ids = _paint(pdf, (tile_size, tile_size))
+    return _tile_frame(
+        rgba, TILE_SCHEMA, z=z, tx=tx, ty=ty, y_xyz=int(xyz_flip(ty, z)),
+        w=tile_size, h=tile_size, n_src=len(src_ids), src_ids=src_ids,
+    )
+
+
+def _compose_by_key(rows, keys, order, kernel, caller: str, schema: str = TILE_SCHEMA):
+    """``kernel`` once per ``keys`` group, returning ``schema`` rows.
 
     The key-hash repartition has an explicit count, one task per core:
     fragments are small PNGs, and AQE would otherwise coalesce their
@@ -400,7 +422,7 @@ def _compose_by_key(rows, keys, order, kernel, caller: str):
         rows.repartition(n, *keys)
         .sortWithinPartitions(*keys, *order)
         .groupBy(*keys)
-        .applyInPandas(kernel, schema=TILE_SCHEMA)
+        .applyInPandas(kernel, schema=schema)
     )
 
 
@@ -423,8 +445,6 @@ def cut_base_tiles(images, zoom=None, tile_size: int = 256, resampling: str = "a
 
 
 def _overview_group(pdf, tile_size: int):
-    import pandas as pd
-
     ts = tile_size
     pz = int(pdf["z"].iloc[0]) - 1
     ptx = int(pdf["ptx"].iloc[0])
@@ -457,24 +477,9 @@ def _overview_group(pdf, tile_size: int):
     tile = np.clip(np.round(down), 0, 255).astype(np.uint8)
     # re-binarize alpha after averaging
     tile[:, :, 3] = np.where(tile[:, :, 3] >= 128, 255, 0)
-    png = codecs.encode_png(tile, level=3)
-    sums = image_checksums(tile)
-    return pd.DataFrame(
-        [
-            {
-                "z": pz,
-                "tx": ptx,
-                "ty": pty,
-                "y_xyz": int(xyz_flip(pty, pz)),
-                "png": png,
-                "w": ts,
-                "h": ts,
-                "checksum": sums[0],
-                "checksums": sums,
-                "n_src": n_src,
-                "src_ids": src_ids[:64],
-            }
-        ]
+    return _tile_frame(
+        tile, TILE_SCHEMA, z=pz, tx=ptx, ty=pty, y_xyz=int(xyz_flip(pty, pz)),
+        w=ts, h=ts, n_src=n_src, src_ids=src_ids[:64],
     )
 
 
@@ -559,174 +564,11 @@ def cut_fragments_levels(
     the full read-window again) for ZERO inter-level shuffles or
     persist+count barriers — the whole pyramid is map -> one tile-key
     shuffle -> compose, so wall-clock scales with executors instead of
-    being serialized through per-level materializations. Very low zooms
-    fan many images into one tile; AQE skew handling covers the hot
-    cells.
+    being serialized through per-level materializations.
     """
-    import pandas as pd
-
-    # explicit tmaxz wins (gdal2tiles cuts past native zoom by upsampling
-    # when asked); otherwise per-image native zoom
-    nz = native_zoom_col(tile_size)
-    imgs = images.withColumn("zmax", nz if tmaxz is None else F.lit(int(tmaxz)))
-    lo = 0 if tminz is None else int(tminz)
-    if levels_below is not None:
-        zmin_col = F.greatest(F.lit(lo), F.col("zmax") - int(levels_below))
-    else:
-        zmin_col = F.lit(lo)
-    imgs = imgs.withColumn("zmin", F.least(zmin_col, F.col("zmax")))
-
-    def do(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                dec = _decode_or_none(bytes(r.bytes), r.fmt, on_error)
-                if dec is None:
-                    continue
-                arr, alpha_src = dec
-                for z in range(int(r.zmax), int(r.zmin) - 1, -1):
-                    n1 = (1 << z) - 1
-                    tminx, tminy, tmaxx, tmaxy = _MERC.tile_range(
-                        r.minx, r.miny, r.maxx, r.maxy, z
-                    )
-                    tminx, tminy = max(0, int(tminx)), max(0, int(tminy))
-                    tmaxx, tmaxy = min(n1, int(tmaxx)), min(n1, int(tmaxy))
-                    for tx in range(tminx, tmaxx + 1):
-                        for ty in range(tminy, tmaxy + 1):
-                            cut = _cut_one(
-                                arr, alpha_src, r, z, tx, ty, tile_size, resampling
-                            )
-                            if cut is None:
-                                continue
-                            tile, alpha = cut
-                            out.append(_fragment_row(r, z, tx, ty, tile, alpha))
-            yield pd.DataFrame(
-                out, columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"]
-            )
-
-    return imgs.mapInPandas(do, schema=FRAGMENT_SCHEMA)
-
-
-def _cut_one_geodetic(arr, alpha_src, r, z, tx, ty, tile_size, resampling, grid):
-    """One geodetic (EPSG:4326) tile fragment — gdal2tiles --profile
-    geodetic (gdal2tiles.py:534-660). 4326 north-up sources take the
-    exact geo_query path; others warp per tile."""
-    ts = tile_size
-    gt = (r.gt0, r.gt1, r.gt2, r.gt3, r.gt4, r.gt5)
-    bminx, bminy, bmaxx, bmaxy = (float(v) for v in grid.tile_bounds(tx, ty, z))
-    if r.srid == 4326 and gt[2] == 0.0 and gt[4] == 0.0:
-        cut = _cut_window(
-            arr, alpha_src, gt, r.w, r.h,
-            (bminx, bminy, bmaxx, bmaxy), ts, resampling,
-        )
-        if cut is None:
-            return None
-        tile, alpha = cut
-    else:
-        from ..resample import SAMPLERS as _SK
-        from ..resample import WINDOW_KERNELS as _WK
-
-        res = float(grid.resolution(z))
-        dst_gt = (bminx, res, 0.0, bmaxy, 0.0, -res)
-        samp = resampling if (resampling in _SK or resampling in _WK) else "bilinear"
-        out, alpha = warp_array(arr, gt, r.srid, (ts, ts), dst_gt, 4326, samp)
-        tile = np.clip(np.round(out), 0, 255).astype(np.uint8)
-        if tile.ndim == 2:
-            tile = tile[:, :, None]
-        if alpha_src is not None:
-            # same source-transparency AND as the mercator warp branch
-            a_out, _cov = warp_array(
-                alpha_src.astype(np.float64), gt, r.srid, (ts, ts),
-                dst_gt, 4326, samp,
-            )
-            a2 = np.atleast_3d(a_out)[:, :, 0]
-            alpha = np.where(
-                (alpha > 0) & (a2 >= 127.5), 255, 0
-            ).astype(np.uint8)
-    if tile.ndim == 2:
-        tile = tile[:, :, None]
-    if not alpha.any():
-        return None
-    return tile, alpha
-
-
-def cut_fragments_geodetic(
-    images,
-    tminz: int | None = None,
-    tmaxz: int | None = None,
-    levels_below: int | None = None,
-    tile_size: int = 256,
-    resampling: str = "average",
-    tmscompatible: bool = True,
-    on_error: str = "fail",
-):
-    """Geodetic-profile fragments for a range of zoom levels, one narrow
-    pass (the direct-cut shape of cut_fragments_levels over the
-    GeodeticGrid: 2*2^z x 2^z tiles per level with tmscompatible)."""
-    import pandas as pd
-
-    from ..grid import GeodeticGrid
-
-    grid = GeodeticGrid(tile_size=tile_size, tmscompatible=tmscompatible)
-    # native zoom from the DEGREE pixel size (gdal2tiles geodetic
-    # ZoomForPixelSize with resFact)
-    ps_deg = F.when(F.col("srid") == 4326, F.col("gt1")).otherwise(
-        F.col("gt1") / (ORIGIN_SHIFT / 180.0)
+    return _cut(
+        images, MercatorGrid(tile_size), tminz, tmaxz, levels_below, resampling, on_error
     )
-    raw = F.floor(F.log2(F.lit(grid.res_fact) / ps_deg))
-    nz = F.greatest(F.lit(0), F.least(F.lit(31), raw)).cast("int")
-    imgs = images.withColumn("zmax", nz if tmaxz is None else F.lit(int(tmaxz)))
-    lo = 0 if tminz is None else int(tminz)
-    if levels_below is not None:
-        zmin_col = F.greatest(F.lit(lo), F.col("zmax") - int(levels_below))
-    else:
-        zmin_col = F.lit(lo)
-    imgs = imgs.withColumn("zmin", F.least(zmin_col, F.col("zmax")))
-
-    def do(batches):
-        from .warp import geo_transform_points
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                dec = _decode_or_none(bytes(r.bytes), r.fmt, on_error)
-                if dec is None:
-                    continue
-                arr, alpha_src = dec
-                gt = (r.gt0, r.gt1, r.gt2, r.gt3, r.gt4, r.gt5)
-                if r.srid == 4326:
-                    lon0, lat1 = gt[0], gt[3]
-                    lon1 = gt[0] + r.w * gt[1]
-                    lat0 = gt[3] + r.h * gt[5]
-                else:
-                    xs, ys = geo_transform_points(
-                        np.array([r.minx, r.maxx]), np.array([r.miny, r.maxy]),
-                        3857, 4326,
-                    )
-                    lon0, lon1 = float(xs[0]), float(xs[1])
-                    lat0, lat1 = float(ys[0]), float(ys[1])
-                for z in range(int(r.zmax), int(r.zmin) - 1, -1):
-                    nx1 = 2 * (1 << z) - 1 if grid.res_fact == 180.0 / tile_size else (1 << z) - 1
-                    ny1 = (1 << z) - 1
-                    tminx, tminy = grid.lonlat_to_tile(lon0, lat0, z)
-                    tmaxx, tmaxy = grid.lonlat_to_tile(lon1, lat1, z)
-                    tminx, tminy = max(0, int(tminx)), max(0, int(tminy))
-                    tmaxx, tmaxy = min(nx1, int(tmaxx)), min(ny1, int(tmaxy))
-                    for tx in range(tminx, tmaxx + 1):
-                        for ty in range(tminy, tmaxy + 1):
-                            cut = _cut_one_geodetic(
-                                arr, alpha_src, r, z, tx, ty, tile_size,
-                                resampling, grid,
-                            )
-                            if cut is None:
-                                continue
-                            tile, alpha = cut
-                            out.append(_fragment_row(r, z, tx, ty, tile, alpha))
-            yield pd.DataFrame(
-                out, columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"]
-            )
-
-    return imgs.mapInPandas(do, schema=FRAGMENT_SCHEMA)
 
 
 def geodetic_tile_pyramid(
@@ -738,13 +580,13 @@ def geodetic_tile_pyramid(
     resampling: str = "average",
     tmscompatible: bool = True,
 ):
-    """Single-action geodetic pyramid (gdal2tiles --profile geodetic):
-    map -> one tile-key shuffle -> compose."""
+    """Single-action geodetic pyramid (gdal2tiles --profile geodetic,
+    gdal2tiles.py:534-660): the direct cut over the GeodeticGrid (2*2^z x
+    2^z tiles per level with tmscompatible) -> one tile-key shuffle ->
+    compose."""
+    grid = GeodeticGrid(tile_size=tile_size, tmscompatible=tmscompatible)
     return compose_tiles(
-        cut_fragments_geodetic(
-            images, tminz, tmaxz, levels_below, tile_size, resampling, tmscompatible
-        ),
-        tile_size,
+        _cut(images, grid, tminz, tmaxz, levels_below, resampling, "fail"), tile_size
     )
 
 
@@ -762,7 +604,6 @@ def tile_pyramid_direct(
     barriers — the plan is scan -> mapInPandas -> exchange -> compose.
     ``on_error='skip'`` drops undecodable source rows instead of
     aborting (the warp_images convention)."""
-    _check_on_error(on_error)
     return compose_tiles(
         cut_fragments_levels(
             images, tminz, tmaxz, levels_below, tile_size, resampling,

@@ -214,3 +214,37 @@ class TestOnErrorSkip:
         df = self._with_corrupt(spark)
         out = enhance_images(df, "equalize", on_error="skip").collect()
         assert sorted(r.image_id for r in out) == ["a", "b"]
+
+
+class TestMosaicComposeParallelism:
+    def test_compose_stage_runs_one_task_per_core(self, spark, imgs, caplog):
+        """The mosaic's tile-key shuffle holds small PNG fragments; like
+        the pyramid compose it must run one task per core, not the one
+        task a size-driven AQE coalesce leaves."""
+        import logging
+
+        sc = spark.sparkContext
+        n = sc.defaultParallelism
+        assert n > 1
+        group = "test_mosaic_compose_parallelism"
+        sc.setJobGroup(group, "mosaic compose parallelism")
+        try:
+            with caplog.at_level(logging.INFO, logger="gdal_spark.operators.tile"):
+                # two input partitions: the aggregate and cut stages run 2 tasks
+                tiles = build_mosaic(imgs.coalesce(2), "highest", tile_size=64).select(
+                    "tx"
+                ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(tiles) == 6
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(sid)
+            for jid in tracker.getJobIdsForGroup(group)
+            for sid in tracker.getJobInfo(jid).stageIds
+        ]
+        assert max(s.numTasks for s in stages if s is not None) == n
+        assert f"build_mosaic: {n} partitions from defaultParallelism" in [
+            r.getMessage() for r in caplog.records
+        ]

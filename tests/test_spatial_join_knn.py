@@ -584,3 +584,17 @@ class TestGridFamily:
         assert r.min_z == pytest.approx(min(zs))
         assert r.max_z == pytest.approx(max(zs))
         assert r.avg_dist == pytest.approx(np.mean([d for _z, d in sel]))
+
+
+class TestKNNNullCoordinates:
+    def test_null_coordinates_are_dropped(self, spark):
+        # the cell clamp sends a null coordinate to the last row or
+        # column; queries in those edge cells must not rank the null
+        # points (null dist) first, and a null query has no neighbours
+        rng = np.random.default_rng(18)
+        pts = _rows(range(40), rng.uniform(-O, O, 40), rng.uniform(-O, O, 40))
+        nulls = [(100, None, O - 1e5), (101, O - 1e5, None), (102, None, None)]
+        qs = _rows(range(4), [O - 1e5, O - 1e5, 0.0, -O + 1e5], [O - 1e5, 0.0, O - 1e5, -O + 1e5])
+        got = _knn_rows(spark, qs + [(10, None, 0.0), (11, 0.0, None)], pts + nulls, 5, zoom=4)
+        assert got == _knn_oracle(qs, pts, 5)
+        assert all(d is not None for _q, _p, d, _r in got)

@@ -444,3 +444,31 @@ class TestTileOnErrorSkip:
             tile_pyramid_direct(df, levels_below=0).collect()
         with pytest.raises(ValueError):
             tile_pyramid_direct(df, levels_below=0, on_error="drop")
+
+
+class TestTileSize512:
+    def test_warp_branch_cuts_on_the_tile_size_grid(self, spark, world):
+        """The 4326 world image takes the per-tile warp branch. At 512 px
+        its z0 tile is covered edge to edge, and its 2:1 average stays
+        close to the 256-px tile."""
+        from gdal_spark.resample import resize
+
+        big = cut_base_tiles(world, zoom=0, tile_size=512).collect()
+        assert len(big) == 1
+        a = codecs.decode_png(bytes(big[0].png))
+        assert a.shape == (512, 512, 4)
+        assert (a[:, :, 3] == 255).all()
+        small = codecs.decode_png(bytes(cut_base_tiles(world, zoom=0).collect()[0].png))
+        half = resize(a.astype(np.float64), 256, 256, "average")
+        # the fixture's checkerboard keeps the two kernels apart (23.5 dB
+        # measured); a tile shifted by 2 px reads about 12 dB
+        assert codecs.psnr(half[:, :, :3], small[:, :, :3].astype(np.float64)) >= 20
+
+
+class TestOnErrorValidation:
+    @pytest.mark.parametrize("cutter", ["cut_fragments", "cut_fragments_levels"])
+    def test_cutters_reject_unknown_on_error(self, world, cutter):
+        from gdal_spark.operators import tile
+
+        with pytest.raises(ValueError, match="on_error"):
+            getattr(tile, cutter)(world, on_error="ignore")
