@@ -4,12 +4,19 @@ Local sandbox runs ``local[$SPARK_GRAFT_CPUS]`` with a
 ``$SPARK_GRAFT_DRIVER_MEM`` heap, both sized from the host when unset; on a
 real cluster the same builder is driven by spark-submit conf. Design notes:
 
-- AQE on (adaptive coalescing + skew-join): the z0 hot-cell skew the
-  fixtures deliberately produce (FIXTURES.md §1) is handled by explicit
-  salting *and* AQE, mirroring SURVEY.md §4 "skew handling".
+- AQE on (adaptive coalescing + skew-join). Of the skew the fixtures
+  produce on purpose (the z0 hot cell, FIXTURES.md §1), only
+  ``layer_algebra``/``line_algebra`` salt hot cells explicitly;
+  ``point_in_polygon_join``'s cell path relies on AQE's skew-join alone.
 - Arrow batches are capped (images are fat rows: a 256x256 RGB PNG is
   ~100 KB, so 10k-row default batches would blow executor memory at scale).
 - Session timezone pinned to UTC so duckdb-oracle comparisons are stable.
+- Local masters fork Python workers from ``gdal_spark._daemon``: PySpark
+  invalidates import caches once per task, which in CPython 3.11 re-reads
+  ``pyspark.zip`` and the other zips on the worker path (150-290 ms a
+  task); that fork server re-reads an archive only when it has changed.
+  Cluster masters keep Spark's default daemon, since the module may not be
+  importable where the executors start it (README "Cluster deployment").
 """
 
 from __future__ import annotations
@@ -80,6 +87,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if master == "local" or master.startswith("local["):
+        # the workers' fork server; its package root goes on their
+        # PYTHONPATH (Spark appends it), so it starts from any cwd
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder.config("spark.python.daemon.module", "gdal_spark._daemon")
+            .config("spark.executorEnv.PYTHONPATH", root)
+        )
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

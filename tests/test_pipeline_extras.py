@@ -407,7 +407,8 @@ def test_pyfiles_zip_builds_and_imports(tmp_path):
     probe = subprocess.run(
         [sys.executable, "-c",
          "import gdal_spark, gdal_spark.operators.warp, "
-         "gdal_spark.functions.bpe, gdal_spark.formats; print('ok')"],
+         "gdal_spark.functions.bpe, gdal_spark.formats, gdal_spark._daemon; "
+         "print('ok')"],
         capture_output=True, text=True,
         env={"PYTHONPATH": zip_path, "PATH": "/usr/bin:/bin"},
         cwd=str(tmp_path),
