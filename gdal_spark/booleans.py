@@ -316,8 +316,14 @@ def _reconstruct_rings(traps):
         # c returns to 0 at the last event by construction
 
     rings = []
+    # a vertex's out-list only shrinks from here on, so the scan for the
+    # next start resumes where the last one stopped (a rescan from the
+    # first vertex made many-ring results quadratic)
+    starts = iter(list(out_adj))
+    start = None
     while n_segs > 0:
-        start = next(k for k, v in out_adj.items() if v)
+        while start is None or not out_adj[start]:
+            start = next(starts)
         chain = [start]
         cur = out_adj[start].pop()
         n_segs -= 1

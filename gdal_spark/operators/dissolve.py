@@ -7,21 +7,23 @@ deprecated UnionCascaded at :5137) — GDAL collects the features into one
 GeometryCollection and hands it to GEOS. At 10^12 rows nothing can be
 collected into one geometry object; here the union distributes:
 
-1. Keys with <= ``chunk_size`` features take the direct path: one
-   collect_list + ONE slab-kernel call (after orientation normalization
-   the combined ring set classifies as the union of its features under
-   the nonzero winding rule — gdal_spark.booleans module docstring).
-2. Heavier keys tree-reduce: features hash into ~``chunk_size``-feature
-   chunks, each chunk unions independently behind one (key, chunk)
-   shuffle, then a per-key merge unions the chunk RESULTS. Union of
-   unions equals the union, so both paths are exact. The merge task
-   holds dissolved partials — bounded by the dissolved boundary
-   complexity of the key, not by its feature count (the same documented
-   bound as polygonize's per-region assembly; a key whose DISSOLVED
-   perimeter itself exceeds task memory would need the polygonize-style
-   fragment/wall-cancellation pass, which no OGR workload we model
-   reaches because UnaryUnion callers dissolve by attribute, not by
-   continent-sized label).
+One key-sorted pass (plans.grouping.map_key_runs) streams each key's
+features into the kernel across Arrow batches. The kernel folds every
+``layer_algebra.FOLD`` features into a partial union (layer_algebra's
+UnionFold), then makes ONE slab-kernel call over the partials: after
+orientation normalization the combined ring set classifies as the union
+of its features under the nonzero winding rule (gdal_spark.booleans
+module docstring), and the union of partial unions is the union, so the
+result is exact. A key's folds run in its one sorted run, so a hot key
+folds serially: at 2e4 features under one key that costs no more than
+the final call, which dominates, but at 1e5 it is slower than spreading
+the folds over tasks would be. The kernel holds dissolved partials —
+bounded by the dissolved boundary complexity of the key, not by its
+feature count (the same documented bound as polygonize's per-region
+assembly; a key whose DISSOLVED perimeter itself exceeds task memory
+would need the polygonize-style fragment/wall-cancellation pass, which
+no OGR workload we model reaches because UnaryUnion callers dissolve by
+attribute, not by continent-sized label).
 
 Output: one row per key — canonical multipolygon WKB, envelope, exact
 area (straight from the slab trapezoids), and ``n_parts`` = number of
@@ -31,66 +33,28 @@ parts).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+import logging
 
-from .. import geom
+from pyspark.sql import DataFrame, functions as F
+
 from ..booleans import boolean_full
-from .layer_algebra import _polys_envelope
+from ..plans.grouping import map_key_runs
+from .layer_algebra import UnionFold, _polygons, _result
 
-_OUT_COLS = ["k", "wkb", "minx", "miny", "maxx", "maxy", "area", "n_parts"]
-
-
-def _union_full_rows(batches):
-    """(k, wkbs) rows -> dissolved multipolygon + envelope/area/parts."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            polys_in = []
-            for w in r.wkbs:
-                if w is not None:
-                    polys_in.extend(geom.parse_wkb(bytes(w)).polygons())
-            if not polys_in:
-                continue
-            polys, area = boolean_full(polys_in, [], "or")
-            if not polys or area <= 0:
-                continue
-            minx, miny, maxx, maxy = _polys_envelope(polys)
-            rows.append(
-                {
-                    "k": r.k,
-                    "wkb": geom.wkb_multipolygon(polys),
-                    "minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy,
-                    "area": float(area), "n_parts": len(polys),
-                }
-            )
-        yield pd.DataFrame(rows, columns=_OUT_COLS)
+log = logging.getLogger(__name__)
 
 
-def _union_partial_rows(batches):
-    """(k, chunk, wkbs) rows -> one partial-union WKB per chunk."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            polys_in = []
-            for w in r.wkbs:
-                if w is not None:
-                    polys_in.extend(geom.parse_wkb(bytes(w)).polygons())
-            if not polys_in:
-                continue
-            polys, _area = boolean_full(polys_in, [], "or")
-            if not polys:
-                continue
-            rows.append({"k": r.k, "wkb": geom.wkb_multipolygon(polys)})
-        yield pd.DataFrame(rows, columns=["k", "wkb"])
+def _dissolve_kernel(key: tuple, run) -> list[tuple]:
+    """One key's (k, wkb) rows, streamed -> its dissolved multipolygon."""
+    fold = UnionFold()
+    for _, w in run:
+        if w is not None:
+            fold.add(_polygons(w))
+    polys, area = boolean_full(fold.polys, [], "or")
+    return [(*r, len(polys)) for r in _result(key, (polys, area))]
 
 
-def dissolve(
-    layer: DataFrame,
-    by: str = "key",
-    geom_col: str = "wkb",
-    chunk_size: int = 64,
-) -> DataFrame:
+def dissolve(layer: DataFrame, by: str = "key", geom_col: str = "wkb") -> DataFrame:
     """Union all geometries per distinct value of ``by``.
 
     Returns one row per key: ``by`` (original name and type), ``wkb``
@@ -99,38 +63,10 @@ def dissolve(
     (matching the engine's other layer ops, which drop empty results).
     """
     ktype = layer.schema[by].dataType.simpleString()
-    full_schema = (
+    schema = (
         f"k {ktype}, wkb binary, minx double, miny double, "
         "maxx double, maxy double, area double, n_parts int"
     )
-
-    src = layer.select(F.col(by).alias("k"), F.col(geom_col).alias("g"))
-    cnt = F.count("*").over(Window.partitionBy("k"))
-    c = src.withColumn("cnt", cnt)
-
-    # Direct path: the groupBy reuses the window's hash partitioning on k
-    # (no second exchange).
-    small = (
-        c.where(F.col("cnt") <= chunk_size)
-        .groupBy("k")
-        .agg(F.collect_list("g").alias("wkbs"))
-    )
-    out_small = small.mapInPandas(_union_full_rows, schema=full_schema)
-
-    # Tree path: chunk unions bound task memory for hot keys.
-    large = c.where(F.col("cnt") > chunk_size)
-    nchunks = F.ceil(F.col("cnt") / chunk_size)
-    chunks = (
-        large.withColumn(
-            "chunk", F.pmod(F.xxhash64("g"), nchunks).cast("int")
-        )
-        .groupBy("k", "chunk")
-        .agg(F.collect_list("g").alias("wkbs"))
-    )
-    partials = chunks.mapInPandas(
-        _union_partial_rows, schema=f"k {ktype}, wkb binary"
-    )
-    merged = partials.groupBy("k").agg(F.collect_list("wkb").alias("wkbs"))
-    out_large = merged.mapInPandas(_union_full_rows, schema=full_schema)
-
-    return out_small.unionByName(out_large).withColumnRenamed("k", by)
+    rows = layer.select(F.col(by).alias("k"), F.col(geom_col).alias("g"))
+    out = map_key_runs(rows, ("k",), (), _dissolve_kernel, "dissolve", schema, log)
+    return out.withColumnRenamed("k", by)

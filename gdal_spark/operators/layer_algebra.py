@@ -16,13 +16,35 @@ geometry work runs in the slab-decomposition boolean kernel
 (gdal_spark.booleans) — non-convex inputs and holes fully supported —
 inside one Arrow-batched pandas pass.
 
-The erase-family ops (A minus all intersecting B) group each input
-feature with its candidate method geometries and run ONE kernel call per
-feature: the nonzero-winding normalization makes the combined method
-ring set classify as the union of the method features, so no iterative
-pairwise subtraction is needed. Groups beyond ``chunk_size`` candidates
-tree-reduce chunk unions first so task memory stays bounded; hot cells
-in the candidate join are salted (see pair_candidates).
+Every operator but Intersection is ONE grouped pass, the way OGR's own
+Union/Identity make one pass per feature: rows keyed by (side, fid) —
+side 0 an input feature, side 1 a method feature — hold the feature's
+own geometry first and then its candidates, and one kernel call per
+group writes the intersection pieces (a AND b per candidate) and the
+remainder (a minus, or intersected with, the union of the candidates;
+the nonzero-winding normalization makes the combined candidate ring set
+classify as their union, so no pairwise subtraction is needed). A
+feature with no candidates passes through normalized (clip drops it).
+The operators differ only in which outputs they keep:
+
+=============  ==============  ================  ======================
+operator       side-0 pieces   side-0 remainder  side 1
+=============  ==============  ================  ======================
+erase          -               a_not_b           -
+clip           -               and               -
+identity       yes             a_not_b           -
+union          yes             a_not_b           a_not_b (swapped)
+symdifference  -               a_not_b           a_not_b (swapped)
+update         -               a_not_b           own rows, normalized
+=============  ==============  ================  ======================
+
+The pass is one ``mapInPandas`` over key-sorted partitions
+(plans.grouping.map_key_runs): the kernel walks each (side, fid) run as
+it streams across Arrow batches, at no per-group cost beyond its own
+work, and every ``FOLD`` candidates fold into a partial union, so a
+feature with 1e5 candidates never holds them all; hot cells in the
+candidate join are salted (see pair_candidates). Intersection needs no
+grouping: one map over the pairs.
 
 Result attributes = input fid + method fid (ogrlayer.cpp:3272-3283
 field-map semantics; callers join any further attributes back on fid).
@@ -30,13 +52,18 @@ field-map semantics; callers join any further attributes back on fid).
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import geom
 from ..booleans import boolean_full
+from ..plans.grouping import map_key_runs
 from .spatial_join import col_point_cell, with_envelope_cells
+
+log = logging.getLogger(__name__)
 
 
 def _is_ccw(ring: np.ndarray) -> bool:
@@ -105,17 +132,14 @@ def _adaptive_cell_zoom(i_env: DataFrame, m_env: DataFrame) -> int:
     than ~64x64 cells. One tiny aggregate (6 doubles to the driver) —
     replaces the fixed cell_zoom=4 that left one-cell hot spots at scale
     (SURVEY §4 skew prescription)."""
-    stats = (
-        i_env.select(
+    def extents(env):
+        return env.select(
             (F.col("maxx") - F.col("minx")).alias("w"),
             (F.col("maxy") - F.col("miny")).alias("h"),
         )
-        .unionAll(
-            m_env.select(
-                (F.col("maxx") - F.col("minx")).alias("w"),
-                (F.col("maxy") - F.col("miny")).alias("h"),
-            )
-        )
+
+    stats = (
+        extents(i_env).unionAll(extents(m_env))
         .agg(
             F.percentile_approx("w", 0.5).alias("med_w"),
             F.percentile_approx("h", 0.5).alias("med_h"),
@@ -128,7 +152,12 @@ def _adaptive_cell_zoom(i_env: DataFrame, m_env: DataFrame) -> int:
     mx = max(float(stats.max_w or 0), float(stats.max_h or 0), med)
     z_med = int(np.floor(np.log2(_WORLD_M / med)))
     z_cap = int(np.floor(np.log2(_WORLD_M / mx))) + 6  # largest <= 64x64 cells
-    return max(2, min(z_med, z_cap, 12))
+    zoom = max(2, min(z_med, z_cap, 12))
+    log.info(
+        "pair_candidates: cell zoom %d from median envelope extent %.6g, "
+        "maximum %.6g", zoom, med, mx,
+    )
+    return zoom
 
 
 def pair_candidates(
@@ -270,6 +299,16 @@ SINGLE_SCHEMA = (
     "maxy double, area double"
 )
 
+PIECE_COLS = ["in_fid", "m_fid", "wkb", "minx", "miny", "maxx", "maxy", "area"]
+_GEOM_COLS = PIECE_COLS[2:]
+
+# candidates per partial union in a heavy group
+FOLD = 64
+
+
+def _polygons(wkb) -> list:
+    return geom.parse_wkb(bytes(wkb)).polygons()
+
 
 def _polys_envelope(polys):
     allc = np.vstack([r for rings in polys for r in rings])
@@ -279,179 +318,129 @@ def _polys_envelope(polys):
     )
 
 
-def _pairwise_op(cands: DataFrame, op: str) -> DataFrame:
+def _result(ids: tuple, result) -> list[tuple]:
+    """``ids`` + (wkb, envelope, area) of one ``boolean_full`` result, as
+    a one-row list; empty when the result has no area."""
+    polys, area = result
+    if not polys or area <= 0:
+        return []
+    return [(*ids, geom.wkb_multipolygon(polys), *_polys_envelope(polys), float(area))]
+
+
+def _map_results(df: DataFrame, schema: str, row_results) -> DataFrame:
+    """One Arrow-batched pass: ``row_results(row)`` -> rows of ``schema``."""
+    cols = [f.split()[0] for f in schema.split(", ")]
+
     def do(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                a = geom.parse_wkb(bytes(r.in_wkb)).polygons()
-                b = geom.parse_wkb(bytes(r.m_wkb)).polygons()
-                polys, area = boolean_full(a, b, op)
-                if not polys or area <= 0:
-                    continue
-                minx, miny, maxx, maxy = _polys_envelope(polys)
-                rows.append(
-                    {
-                        "in_fid": int(r.in_fid), "m_fid": int(r.m_fid),
-                        "wkb": geom.wkb_multipolygon(polys),
-                        "minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy,
-                        "area": float(area),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["in_fid", "m_fid", "wkb", "minx", "miny", "maxx", "maxy", "area"],
-            )
+                rows += row_results(r)
+            yield pd.DataFrame(rows, columns=cols)
 
-    return cands.mapInPandas(do, schema=PIECE_SCHEMA)
+    return df.mapInPandas(do, schema=schema)
 
 
-def _apply_op_rows(batches, op: str):
-    """Kernel pass over (in_fid, in_wkb, m_wkbs) rows -> SINGLE_SCHEMA."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            a = geom.parse_wkb(bytes(r.in_wkb)).polygons()
-            b = []
-            for mw in r.m_wkbs:
-                b.extend(geom.parse_wkb(bytes(mw)).polygons())
-            polys, area = boolean_full(a, b, op)
-            if not polys or area <= 0:
+class UnionFold:
+    """Ring set of a streamed union: every ``FOLD`` inputs are unioned
+    into one partial, so a heavy group holds partial unions, not all of
+    its inputs (VERDICT r2 wrong #2). Nonzero winding makes ``polys``
+    classify as the union of everything added, so one final kernel call
+    over it is exact."""
+
+    def __init__(self):
+        self.n = 0
+        self.polys: list = []
+        self._open = 0  # start of the inputs not folded yet
+
+    def add(self, polys: list) -> None:
+        if self.n and self.n % FOLD == 0:
+            self.polys[self._open:] = boolean_full(self.polys[self._open:], [], "or")[0]
+            self._open = len(self.polys)
+        self.polys.extend(polys)
+        self.n += 1
+
+
+def _overlay_kernel(pieces: bool, op: str):
+    """Kernel for one (side, fid) run: the feature's own row (role 0)
+    first, then its candidates (role 1) in ``o_fid`` order, streamed.
+    Side 0 writes ``a AND b`` per candidate when ``pieces``, and its
+    remainder: ``a`` by ``op`` against the union of its candidates.
+    Side 1 writes its remainder by ``a_not_b``. A feature with no
+    candidates passes through normalised, except under ``and`` (clip),
+    where nothing is left of it."""
+
+    def kernel(key: tuple, run):
+        side, fid = key
+        a, fold = None, UnionFold()
+        for _, _, role, o_fid, wkb in run:
+            b = _polygons(wkb)
+            if role == 0:
+                if a is not None:
+                    raise ValueError(
+                        f"the {('input', 'method')[side]} layer has more "
+                        f"than one feature with fid {fid}"
+                    )
+                a = b
                 continue
-            minx, miny, maxx, maxy = _polys_envelope(polys)
-            rows.append(
-                {
-                    "fid": int(r.in_fid),
-                    "wkb": geom.wkb_multipolygon(polys),
-                    "minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy,
-                    "area": float(area),
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=["fid", "wkb", "minx", "miny", "maxx", "maxy", "area"]
-        )
+            if pieces and side == 0:
+                yield from _result((fid, o_fid), boolean_full(a, b, "and"))
+            fold.add(b)
+        rem_op = op if side == 0 else "a_not_b"
+        if fold.n or rem_op != "and":
+            ids = (fid, None) if side == 0 else (None, fid)
+            yield from _result(ids, boolean_full(a, fold.polys, rem_op if fold.n else "or"))
+
+    return kernel
 
 
-def _union_chunk_rows(batches):
-    """Per-chunk union of method geometries (nonzero winding makes the
-    combined ring set classify as the union)."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            b = []
-            for mw in r.m_wkbs:
-                b.extend(geom.parse_wkb(bytes(mw)).polygons())
-            polys, area = boolean_full(b, [], "or")
-            if not polys:
-                continue
-            rows.append(
-                {"in_fid": int(r.in_fid), "u_wkb": geom.wkb_multipolygon(polys)}
-            )
-        yield pd.DataFrame(rows, columns=["in_fid", "u_wkb"])
+def _group_row(side: int, fid: str, role: int, o_fid: str, wkb: str):
+    """One overlay-pass row as a struct: (side, fid) is the group key;
+    role 0 is the feature's own geometry, role 1 the candidate ``o_fid``.
+    ``o_fid`` is never null (the own row repeats ``fid``), so it reaches
+    pandas as int64, not as float64 with NaN."""
+    return F.struct(
+        F.lit(side).alias("side"), F.col(fid).cast("long").alias("fid"),
+        F.lit(role).alias("role"), F.col(o_fid).cast("long").alias("o_fid"),
+        F.col(wkb).alias("wkb"),
+    ).alias("r")
 
 
-def _grouped_op(cands: DataFrame, op: str, chunk_size: int = 64) -> DataFrame:
-    """One kernel call per input feature against the union of its
-    candidate method geometries. Features with <= ``chunk_size``
-    candidates take the direct path (one collect_list, one kernel call);
-    heavier features — the skew case, e.g. one feature overlapping 1e5
-    method features — first tree-reduce their method geometries in
-    hash-assigned chunks of ~``chunk_size`` so no task ever
-    collect_lists an unbounded group (VERDICT r2 wrong #2). The union
-    of unions equals the union, so both paths are exact."""
-    from pyspark.sql import Window
-
-    cnt = F.count("*").over(Window.partitionBy("in_fid"))
-    c = cands.withColumn("cnt", cnt)
-
-    small = c.where(F.col("cnt") <= chunk_size)
-    direct = small.groupBy("in_fid").agg(
-        F.first("in_wkb").alias("in_wkb"), F.collect_list("m_wkb").alias("m_wkbs")
+def _overlay(
+    input_layer, method_layer, input_fid, method_fid, cell_zoom,
+    pieces=False, op="a_not_b", method_side=None,
+) -> DataFrame:
+    """The one grouped pass behind every operator but Intersection, as
+    PIECE_SCHEMA rows. Side 0 groups each input feature with its method
+    candidates. ``method_side`` adds side 1: ``"swap"`` groups each
+    method feature with its input candidates, ``"own"`` passes method
+    features through alone."""
+    cands = pair_candidates(input_layer, method_layer, input_fid, method_fid, cell_zoom)
+    rows = input_layer.select(_group_row(0, input_fid, 0, input_fid, "wkb"))
+    sides = [_group_row(0, "in_fid", 1, "m_fid", "m_wkb")]
+    if method_side is not None:
+        rows = rows.unionByName(method_layer.select(_group_row(1, method_fid, 0, method_fid, "wkb")))
+    if method_side == "swap":
+        sides.append(_group_row(1, "m_fid", 1, "in_fid", "in_wkb"))
+    rows = rows.unionByName(cands.select(F.explode(F.array(*sides)).alias("r")))
+    return map_key_runs(
+        rows.select("r.*"), ("side", "fid"), ("role", "o_fid"), _overlay_kernel(pieces, op),
+        "layer_algebra", PIECE_SCHEMA, log,
     )
-    out = direct.mapInPandas(lambda it: _apply_op_rows(it, op), schema=SINGLE_SCHEMA)
-
-    large = c.where(F.col("cnt") > chunk_size)
-    nchunks = F.ceil(F.col("cnt") / chunk_size)
-    chunks = (
-        large.withColumn("chunk", F.pmod(F.xxhash64("m_fid"), nchunks).cast("int"))
-        .groupBy("in_fid", "chunk")
-        .agg(F.collect_list("m_wkb").alias("m_wkbs"))
-    )
-    unions = chunks.mapInPandas(_union_chunk_rows, schema="in_fid long, u_wkb binary")
-    in_geoms = large.groupBy("in_fid").agg(F.first("in_wkb").alias("in_wkb"))
-    merged = (
-        unions.groupBy("in_fid")
-        .agg(F.collect_list("u_wkb").alias("m_wkbs"))
-        .join(in_geoms, "in_fid")
-    )
-    out_large = merged.mapInPandas(
-        lambda it: _apply_op_rows(it, op), schema=SINGLE_SCHEMA
-    )
-    return out.unionByName(out_large)
 
 
 def _normalize_layer(layer: DataFrame, fid: str) -> DataFrame:
     """Pass features through the kernel untouched (op OR with empty other
-    side): canonical multipolygon WKB + area, same SINGLE_SCHEMA as the
-    computed legs so unions line up."""
-    src = layer.select(F.col(fid).alias("fid"), "wkb")
-
-    def do(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = geom.parse_wkb(bytes(r.wkb)).polygons()
-                polys, area = boolean_full(a, [], "or")
-                if not polys or area <= 0:
-                    continue
-                minx, miny, maxx, maxy = _polys_envelope(polys)
-                rows.append(
-                    {
-                        "fid": int(r.fid),
-                        "wkb": geom.wkb_multipolygon(polys),
-                        "minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy,
-                        "area": float(area),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["fid", "wkb", "minx", "miny", "maxx", "maxy", "area"]
-            )
-
-    return src.mapInPandas(do, schema=SINGLE_SCHEMA)
+    side): canonical multipolygon WKB + area, SINGLE_SCHEMA."""
+    return _map_results(
+        layer.select(F.col(fid).alias("fid"), "wkb"), SINGLE_SCHEMA,
+        lambda r: _result((int(r.fid),), boolean_full(_polygons(r.wkb), [], "or")),
+    )
 
 
 # ---------------------------------------------------------------------------
 # the seven OGR layer-algebra operators
 # ---------------------------------------------------------------------------
-# The candidate pair set is SYMMETRIC in the two layers (envelope
-# intersection and the owner-cell rule don't depend on which side was
-# "input"), so multi-leg operators (Identity, Union, SymDifference)
-# compute it ONCE, cut lineage with an eager localCheckpoint, and feed
-# every leg — including the reverse-erase via a role swap — from the
-# same materialized pairs. Without this, Union re-ran the
-# explode+equi-join THREE times over both full layers.
-
-
-def _swap_cands(cands: DataFrame) -> DataFrame:
-    """Reverse the input/method roles of a candidate pair set."""
-    return cands.select(
-        F.col("m_fid").alias("in_fid"), F.col("m_wkb").alias("in_wkb"),
-        F.col("in_fid").alias("m_fid"), F.col("in_wkb").alias("m_wkb"),
-    )
-
-
-def _shared_cands(
-    input_layer, method_layer, input_fid, method_fid, cell_zoom
-) -> DataFrame:
-    """One candidate join, materialized (eager localCheckpoint) so every
-    leg of a multi-leg operator reads the pairs instead of re-running
-    the explode+join; blocks are released by the periodic driver GC."""
-    if cell_zoom is None:
-        cell_zoom = _adaptive_cell_zoom(input_layer, method_layer)
-    cands = pair_candidates(
-        input_layer, method_layer, input_fid, method_fid, cell_zoom
-    )
-    return cands.localCheckpoint(eager=True)
 
 
 def layer_intersection(
@@ -460,16 +449,19 @@ def layer_intersection(
     input_fid: str = "fid",
     method_fid: str = "fid",
     cell_zoom: int | None = None,
-    cands: DataFrame | None = None,
 ) -> DataFrame:
     """OGRLayer::Intersection (ogrlayer.cpp:3345): one row per
     envelope-candidate pair whose geometries truly intersect; geometry =
-    the intersection piece (multipolygon, holes preserved)."""
-    if cands is None:
-        cands = pair_candidates(
-            input_layer, method_layer, input_fid, method_fid, cell_zoom
-        )
-    return _pairwise_op(cands, "and")
+    the intersection piece (multipolygon, holes preserved). Needs no
+    grouping, so it stays one map over the pairs."""
+    cands = pair_candidates(input_layer, method_layer, input_fid, method_fid, cell_zoom)
+    return _map_results(
+        cands, PIECE_SCHEMA,
+        lambda r: _result(
+            (int(r.in_fid), int(r.m_fid)),
+            boolean_full(_polygons(r.in_wkb), _polygons(r.m_wkb), "and"),
+        ),
+    )
 
 
 def layer_erase(
@@ -478,22 +470,12 @@ def layer_erase(
     input_fid: str = "fid",
     method_fid: str = "fid",
     cell_zoom: int | None = None,
-    cands: DataFrame | None = None,
 ) -> DataFrame:
     """OGRLayer::Erase (ogrlayer.cpp:5806): each input feature minus the
     union of all intersecting method features; features with no
     candidates pass through (normalized)."""
-    if cands is None:
-        cands = pair_candidates(
-            input_layer, method_layer, input_fid, method_fid, cell_zoom
-        )
-    erased = _grouped_op(cands, "a_not_b")
-    no_cand = input_layer.join(
-        cands.select("in_fid").distinct(),
-        input_layer[input_fid] == F.col("in_fid"),
-        "left_anti",
-    )
-    return erased.unionByName(_normalize_layer(no_cand, input_fid))
+    out = _overlay(input_layer, method_layer, input_fid, method_fid, cell_zoom)
+    return out.select(F.col("in_fid").alias("fid"), *_GEOM_COLS)
 
 
 def layer_clip(
@@ -505,8 +487,8 @@ def layer_clip(
 ) -> DataFrame:
     """OGRLayer::Clip (ogrlayer.cpp:5497): each input feature intersected
     with the union of the method layer (one row per surviving input fid)."""
-    cands = pair_candidates(input_layer, method_layer, input_fid, method_fid, cell_zoom)
-    return _grouped_op(cands, "and")
+    out = _overlay(input_layer, method_layer, input_fid, method_fid, cell_zoom, op="and")
+    return out.select(F.col("in_fid").alias("fid"), *_GEOM_COLS)
 
 
 def layer_identity(
@@ -515,27 +497,13 @@ def layer_identity(
     input_fid: str = "fid",
     method_fid: str = "fid",
     cell_zoom: int | None = None,
-    cands: DataFrame | None = None,
 ) -> DataFrame:
     """OGRLayer::Identity (ogrlayer.cpp:4730): input split by the method
     layer = intersection pieces (in_fid, m_fid) + the uncovered remainder
-    of each input feature (in_fid, NULL m_fid). One shared candidate
-    pass feeds both legs."""
-    if cands is None:
-        cands = _shared_cands(
-            input_layer, method_layer, input_fid, method_fid, cell_zoom
-        )
-    pieces = layer_intersection(
-        input_layer, method_layer, input_fid, method_fid, cands=cands
+    of each input feature (in_fid, NULL m_fid)."""
+    return _overlay(
+        input_layer, method_layer, input_fid, method_fid, cell_zoom, pieces=True
     )
-    remainder = layer_erase(
-        input_layer, method_layer, input_fid, method_fid, cands=cands
-    )
-    rem = remainder.select(
-        F.col("fid").alias("in_fid"), F.lit(None).cast("long").alias("m_fid"),
-        "wkb", "minx", "miny", "maxx", "maxy", "area",
-    )
-    return pieces.unionByName(rem)
 
 
 def layer_union(
@@ -547,23 +515,11 @@ def layer_union(
 ) -> DataFrame:
     """OGRLayer::Union (ogrlayer.cpp:3763): intersection pieces + the
     input-only remainders (m_fid NULL) + the method-only remainders
-    (in_fid NULL). All three legs read ONE materialized candidate join
-    (the reverse-erase swaps the pair roles)."""
-    cands = _shared_cands(
-        input_layer, method_layer, input_fid, method_fid, cell_zoom
+    (in_fid NULL)."""
+    return _overlay(
+        input_layer, method_layer, input_fid, method_fid, cell_zoom,
+        pieces=True, method_side="swap",
     )
-    ident = layer_identity(
-        input_layer, method_layer, input_fid, method_fid, cands=cands
-    )
-    m_only = layer_erase(
-        method_layer, input_layer, method_fid, input_fid,
-        cands=_swap_cands(cands),
-    )
-    mo = m_only.select(
-        F.lit(None).cast("long").alias("in_fid"), F.col("fid").alias("m_fid"),
-        "wkb", "minx", "miny", "maxx", "maxy", "area",
-    )
-    return ident.unionByName(mo)
 
 
 def layer_symdifference(
@@ -574,25 +530,11 @@ def layer_symdifference(
     cell_zoom: int | None = None,
 ) -> DataFrame:
     """OGRLayer::SymDifference (ogrlayer.cpp:4300): input-only remainders
-    + method-only remainders (no intersection pieces); both erases read
-    one materialized candidate join."""
-    cands = _shared_cands(
-        input_layer, method_layer, input_fid, method_fid, cell_zoom
+    + method-only remainders (no intersection pieces)."""
+    return _overlay(
+        input_layer, method_layer, input_fid, method_fid, cell_zoom,
+        method_side="swap",
     )
-    a = layer_erase(
-        input_layer, method_layer, input_fid, method_fid, cands=cands
-    ).select(
-        F.col("fid").alias("in_fid"), F.lit(None).cast("long").alias("m_fid"),
-        "wkb", "minx", "miny", "maxx", "maxy", "area",
-    )
-    b = layer_erase(
-        method_layer, input_layer, method_fid, input_fid,
-        cands=_swap_cands(cands),
-    ).select(
-        F.lit(None).cast("long").alias("in_fid"), F.col("fid").alias("m_fid"),
-        "wkb", "minx", "miny", "maxx", "maxy", "area",
-    )
-    return a.unionByName(b)
 
 
 def layer_update(
@@ -605,8 +547,11 @@ def layer_update(
     """OGRLayer::Update (ogrlayer.cpp:5148): method features as-is, plus
     the parts of input features the method layer does not cover. ``src``
     marks which layer a row came from."""
-    erased = layer_erase(input_layer, method_layer, input_fid, method_fid, cell_zoom)
-    meth = _normalize_layer(method_layer, method_fid)
-    return erased.withColumn("src", F.lit("input")).unionByName(
-        meth.withColumn("src", F.lit("method"))
+    out = _overlay(
+        input_layer, method_layer, input_fid, method_fid, cell_zoom,
+        method_side="own",
+    )
+    return out.select(
+        F.coalesce("in_fid", "m_fid").alias("fid"), *_GEOM_COLS,
+        F.when(F.col("in_fid").isNull(), "method").otherwise("input").alias("src"),
     )

@@ -32,8 +32,9 @@ accumulates the method layer per input feature). A line crossing 1e5+
 method features would need the chunked interval-merge generalization
 (per-chunk clip -> distributed interval union); the candidate count is
 bounded by pair_candidates' hot-cell salting in practice, and the
-polygon-side analog (_grouped_op's tree-reduce) shows the recipe if a
-workload ever hits it.
+polygon side's grouped pass (layer_algebra._overlay: key-sorted runs
+streamed across Arrow batches, candidates folded into partial unions)
+shows the recipe if a workload ever hits it.
 """
 
 from __future__ import annotations

@@ -16,7 +16,7 @@ Distributed shape:
    ONCE and warps it into each overlapped output tile with tile._warp_cut
    (same-CRS affine -> affine, exact mapping; the source alpha goes
    through the same transform). Only PNG fragments leave the stage.
-3. (tx, ty) compose through tile._compose_by_key — the tile-key shuffle
+3. (tx, ty) compose through plans.grouping.group_by_key — the tile-key shuffle
    IS the mosaic, one task per core; sources paint in image_id order
    (buildvrt paints in command-line order; image_id is the deterministic
    distributed equivalent) where valid, with the pyramid's paint code.
@@ -28,8 +28,9 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.grouping import group_by_key
 from .tile import (
-    _check_on_error, _compose_by_key, _map_fragments, _paint, _tile_frame, _warp_cut,
+    _check_on_error, _map_fragments, _paint, _tile_frame, _warp_cut, log,
 )
 
 MOSAIC_TILE_SCHEMA = (
@@ -167,6 +168,6 @@ def build_mosaic(
         )
 
     frags = _map_fragments(ranged, on_error, cuts)
-    return _compose_by_key(
-        frags, ("tx", "ty"), (), compose, "build_mosaic", MOSAIC_TILE_SCHEMA
+    return group_by_key(
+        frags, ("tx", "ty"), (), compose, "build_mosaic", MOSAIC_TILE_SCHEMA, log
     )

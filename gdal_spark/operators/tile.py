@@ -25,7 +25,7 @@ Pipeline (SURVEY.md §3.3 mapping):
    append alpha (gdal2tiles.py:2815), encode PNG, GDAL checksum
    (alg/gdalchecksum.cpp) + lineage columns. The tile-key shuffle **is**
    the mosaic; mosaic.build_mosaic groups and paints through the same
-   ``_compose_by_key``.
+   ``plans.grouping.group_by_key``.
 5. **overviews** — the same grouping keyed by the parent tile, children
    in (tx, ty) order: place <=4 children in a 2x2 buffer by (x%2,
    y-parity) (gdal2tiles.py:1536-1550), 2:1 average downsample with exact
@@ -49,6 +49,7 @@ from ..checksum import image_checksums
 from ..grid import (
     ORIGIN_SHIFT, EARTH_RADIUS, GeodeticGrid, MercatorGrid, geo_query, xyz_flip,
 )
+from ..plans.grouping import group_by_key
 from ..resample import SAMPLERS, WINDOW_KERNELS, resize
 from .warp import geo_transform_points, warp_array
 
@@ -408,29 +409,11 @@ def _compose_group(pdf, tile_size: int):
     )
 
 
-def _compose_by_key(rows, keys, order, kernel, caller: str, schema: str = TILE_SCHEMA):
-    """``kernel`` once per ``keys`` group, returning ``schema`` rows.
-
-    The key-hash repartition has an explicit count, one task per core:
-    fragments are small PNGs, and AQE would otherwise coalesce their
-    shuffle by bytes into a single task. Each partition is sorted by
-    ``keys`` then ``order``; the grouped stage reuses that partitioning
-    and sort, so ``kernel`` sees each group's rows in ``order``."""
-    n = rows.sparkSession.sparkContext.defaultParallelism
-    log.info("%s: %d partitions from defaultParallelism", caller, n)
-    return (
-        rows.repartition(n, *keys)
-        .sortWithinPartitions(*keys, *order)
-        .groupBy(*keys)
-        .applyInPandas(kernel, schema=schema)
-    )
-
-
 def compose_tiles(fragments, tile_size: int = 256):
     """Mosaic fragments into one tile per (z, tx, ty)."""
-    return _compose_by_key(
+    return group_by_key(
         fragments, ("z", "tx", "ty"), (),
-        lambda pdf: _compose_group(pdf, tile_size), "compose_tiles",
+        lambda pdf: _compose_group(pdf, tile_size), "compose_tiles", TILE_SCHEMA, log,
     )
 
 
@@ -492,9 +475,9 @@ def overview_tiles(tiles, tile_size: int = 256):
         .withColumn("ptx", (F.col("tx") / 2).cast("long"))
         .withColumn("pty", (F.col("ty") / 2).cast("long"))
     )
-    return _compose_by_key(
+    return group_by_key(
         parents, ("z", "ptx", "pty"), ("tx", "ty"),
-        lambda pdf: _overview_group(pdf, tile_size), "overview_tiles",
+        lambda pdf: _overview_group(pdf, tile_size), "overview_tiles", TILE_SCHEMA, log,
     )
 
 

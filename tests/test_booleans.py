@@ -88,6 +88,27 @@ class TestHolesAndIslands:
         assert area == pytest.approx(100 - 36 + 4)
         assert sorted(len(p) for p in polys) == [1, 2]
 
+    def test_many_rings_and_pinch_vertices(self):
+        # a 20x20 checkerboard meets only at corners: vertices with two
+        # outgoing boundary segments, each chained once
+        board = [
+            [rect(x, y, x + 1, y + 1)]
+            for x in range(20) for y in range(20) if (x + y) % 2 == 0
+        ]
+        polys, area = boolean_full(board, [], "or")
+        assert area == pytest.approx(200.0)
+        rings = [r for p in polys for r in p]
+        assert sum(abs(ring_area_centroid(r)[0]) for r in rings) == pytest.approx(200.0)
+        # 100 separate framed squares: 100 outer rings, 100 holes
+        frames = [
+            [rect(3 * x, 3 * y, 3 * x + 2, 3 * y + 2),
+             rect(3 * x + 0.5, 3 * y + 0.5, 3 * x + 1.5, 3 * y + 1.5)]
+            for x in range(10) for y in range(10)
+        ]
+        polys, area = boolean_full(frames, [], "or")
+        assert area == pytest.approx(100 * 3.0)
+        assert [len(p) for p in polys] == [2] * 100
+
     def test_multi_feature_side_is_union(self):
         two = [[rect(0, 0, 10, 10)], [rect(5, 0, 15, 10)]]
         assert boolean_area(two, [], "or") == pytest.approx(150.0)

@@ -5,6 +5,8 @@ bytes, because the shapefile spec mandates its own ring winding (outer CW,
 holes CCW) — a legitimate re-orientation the reader must undo semantically,
 not byte-wise."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -373,7 +375,7 @@ class TestFlatGeobuf:
     GDAL autotest assets — see tests/data/README.md); writer validated by
     round-trip through that conformance-pinned reader."""
 
-    DATA = "/root/repo/tests/data"
+    DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
     def test_poly_conformance_with_index(self, spark):
         from gdal_spark.formats import read_fgb_header, scan_flatgeobuf

@@ -396,11 +396,13 @@ class TestPackSplitOverflow:
 def test_pyfiles_zip_builds_and_imports(tmp_path):
     """tools/make_pyfiles.py produces a --py-files archive from which the
     whole package imports (the spark-submit deployment contract)."""
+    import os
     import subprocess
     import sys
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/make_pyfiles.py", str(tmp_path)],
+        [sys.executable, os.path.join(root, "tools", "make_pyfiles.py"), str(tmp_path)],
         capture_output=True, text=True, check=True,
     )
     zip_path = out.stdout.split(":")[0].strip()

@@ -12,10 +12,12 @@ Writes PLANS.md with the audit result per plan.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -598,7 +600,7 @@ def main():
     from gdal_spark.formats import scan_flatgeobuf
 
     fgb = scan_flatgeobuf(
-        spark, "/root/repo/tests/data/poly.fgb", num_partitions=3
+        spark, os.path.join(ROOT, "tests/data/poly.fgb"), num_partitions=3
     )
     audit(
         "fgb_scan_no_shuffle",
@@ -872,7 +874,7 @@ def main():
     from gdal_spark.formats.grib import scan_grib
 
     gribdf = scan_grib(
-        spark, "/root/repo/tests/data/grib/ds.mint.bin")
+        spark, os.path.join(ROOT, "tests/data/grib/ds.mint.bin"))
     audit(
         "grib_scan_task_per_message",
         gribdf,
@@ -893,7 +895,7 @@ def main():
     # decode run inside the task
     from gdal_spark.formats.esric import scan_esric
 
-    esdf = scan_esric(spark, "/root/repo/tests/data/esric/Layers.tar",
+    esdf = scan_esric(spark, os.path.join(ROOT, "tests/data/esric/Layers.tar"),
                       1)
     audit(
         "esric_scan_task_per_bundle",
@@ -910,7 +912,7 @@ def main():
         out,
     )
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("# PLANS — physical-plan audit (.explain formatted)\n\n")
         for name, checks, plan in out:
             f.write(f"## {name}\n\n")
