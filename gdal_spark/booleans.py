@@ -80,60 +80,85 @@ def _collect_edges(polys):
     return np.vstack(p0s), np.vstack(p1s)
 
 
+def _grid_shape(ex: float, ey: float, n: int) -> tuple[int, int]:
+    """(kx, ky) cells over an ``ex`` x ``ey`` box for ``n`` edges: about
+    n/4 cells, near-square whatever the box's aspect ratio, so an edge as
+    tall as a thin band spans a few cells, not one whole column of a
+    k x k grid."""
+    m = max(1, int(np.ceil(n / 4.0)))
+    if ex > 0 and ey > 0:
+        side = np.sqrt(ex * ey / m)
+        return (
+            int(min(m, max(1, np.ceil(ex / side)))),
+            int(min(m, max(1, np.ceil(ey / side)))),
+        )
+    return (m if ex > 0 else 1), (m if ey > 0 else 1)
+
+
+def _edge_cells(bxmin, bxmax, bymin, bymax):
+    """Per-edge inclusive cell ranges (ix0, ix1, iy0, iy1) on the
+    ``_grid_shape`` grid over the edges' bounding box, and its ky."""
+    gx0, gy0 = float(bxmin.min()), float(bymin.min())
+    ex = float(bxmax.max()) - gx0
+    ey = float(bymax.max()) - gy0
+    kx, ky = _grid_shape(ex, ey, len(bxmin))
+    cw = ex / kx if ex > 0 else 1.0
+    ch = ey / ky if ey > 0 else 1.0
+    ix0 = np.clip(((bxmin - gx0) / cw).astype(np.int64), 0, kx - 1)
+    ix1 = np.clip(((bxmax - gx0) / cw).astype(np.int64), 0, kx - 1)
+    iy0 = np.clip(((bymin - gy0) / ch).astype(np.int64), 0, ky - 1)
+    iy1 = np.clip(((bymax - gy0) / ch).astype(np.int64), 0, ky - 1)
+    return ix0, ix1, iy0, iy1, ky
+
+
 def _crossing_ys(p0, p1):
     """y coordinates of all strictly-interior pairwise segment crossings
     (endpoint touches are already breakpoints).
 
     Candidate pairs come from a uniform-grid bucket pass (~4 edges per
-    cell), so cost tracks the number of bbox-overlapping pairs instead
-    of E^2 — the all-pairs matrix version made union-of-5000-features
-    kernel calls quadratic in memory AND time. Small inputs (<=256
-    edges) keep the dense all-pairs path (no bucketing overhead)."""
+    near-square cell, see ``_grid_shape``), so cost tracks the number of
+    bbox-overlapping pairs instead of E^2 — the all-pairs matrix version
+    made union-of-5000-features kernel calls quadratic in memory AND
+    time. Small inputs (<=256 edges) keep the dense all-pairs path (no
+    bucketing overhead)."""
     n = len(p0)
     if n < 2:
         return np.zeros(0)
+    if n <= 256:
+        return _pair_crossing_ys(p0, p1, *np.triu_indices(n, k=1))
     bxmin = np.minimum(p0[:, 0], p1[:, 0])
     bxmax = np.maximum(p0[:, 0], p1[:, 0])
     bymin = np.minimum(p0[:, 1], p1[:, 1])
     bymax = np.maximum(p0[:, 1], p1[:, 1])
-    if n <= 256:
-        ii, jj = np.triu_indices(n, k=1)
-    else:
-        gx0, gy0 = float(bxmin.min()), float(bymin.min())
-        ex = float(bxmax.max()) - gx0
-        ey = float(bymax.max()) - gy0
-        k = max(1, int(np.ceil(np.sqrt(n / 4.0))))
-        cw = ex / k if ex > 0 else 1.0
-        ch = ey / k if ey > 0 else 1.0
-        ix0 = np.clip(((bxmin - gx0) / cw).astype(np.int64), 0, k - 1)
-        ix1 = np.clip(((bxmax - gx0) / cw).astype(np.int64), 0, k - 1)
-        iy0 = np.clip(((bymin - gy0) / ch).astype(np.int64), 0, k - 1)
-        iy1 = np.clip(((bymax - gy0) / ch).astype(np.int64), 0, k - 1)
-        buckets: dict[int, list] = defaultdict(list)
-        for e in range(n):
-            for cx in range(ix0[e], ix1[e] + 1):
-                for cy in range(iy0[e], iy1[e] + 1):
-                    buckets[cx * k + cy].append(e)
-        pi, pj = [], []
-        for idx in buckets.values():
-            m = len(idx)
-            if m < 2:
-                continue
-            arr = np.asarray(idx)  # ascending (edge-order inserts)
-            ai, bi = np.triu_indices(m, k=1)
-            pi.append(arr[ai])
-            pj.append(arr[bi])
-        if not pi:
-            return np.zeros(0)
-        key = np.unique(np.concatenate(pi) * n + np.concatenate(pj))
-        ii, jj = key // n, key % n
-        ok = (
-            (bxmin[ii] <= bxmax[jj]) & (bxmax[ii] >= bxmin[jj])
-            & (bymin[ii] <= bymax[jj]) & (bymax[ii] >= bymin[jj])
-        )
-        ii, jj = ii[ok], jj[ok]
-        if len(ii) == 0:
-            return np.zeros(0)
+    ix0, ix1, iy0, iy1, ky = _edge_cells(bxmin, bxmax, bymin, bymax)
+    buckets: dict[int, list] = defaultdict(list)
+    for e in range(n):
+        for cx in range(ix0[e], ix1[e] + 1):
+            for cy in range(iy0[e], iy1[e] + 1):
+                buckets[cx * ky + cy].append(e)
+    pi, pj = [], []
+    for idx in buckets.values():
+        m = len(idx)
+        if m < 2:
+            continue
+        arr = np.asarray(idx)  # ascending (edge-order inserts)
+        ai, bi = np.triu_indices(m, k=1)
+        pi.append(arr[ai])
+        pj.append(arr[bi])
+    if not pi:
+        return np.zeros(0)
+    key = np.unique(np.concatenate(pi) * n + np.concatenate(pj))
+    ii, jj = key // n, key % n
+    ok = (
+        (bxmin[ii] <= bxmax[jj]) & (bxmax[ii] >= bxmin[jj])
+        & (bymin[ii] <= bymax[jj]) & (bymax[ii] >= bymin[jj])
+    )
+    return _pair_crossing_ys(p0, p1, ii[ok], jj[ok])
+
+
+def _pair_crossing_ys(p0, p1, ii, jj):
+    """y coordinates of the strictly-interior crossings of the edge
+    pairs (``ii``, ``jj``)."""
     d = p1 - p0
     di, dj = d[ii], d[jj]
     denom = di[:, 0] * dj[:, 1] - di[:, 1] * dj[:, 0]

@@ -9,14 +9,17 @@ average (marching_squares/square.h).
 Spark shape: per tile, segments are computed in GLOBAL node coordinates
 (cells straddling a tile border get the missing right/bottom corners
 from a 1-node halo exchange — thin strips, cogrouped by neighbor tile
-id). The per-level segment set then groupBy(level)-chains into
-polylines: endpoints shared between adjacent cells are bitwise-identical
-floats (same two corner values, same formula), so chaining needs no
-tolerance.
+id). Each tile chains its segments into partial polylines per level;
+open chains that meet across tiles share one connected-component label
+(an endpoint equi-join), and each label's chains merge in one walk over
+the label-sorted runs (plans.grouping.group_by_key). Endpoints shared
+between adjacent cells are bitwise-identical floats (same two corner
+values, same formula), so chaining needs no tolerance.
 """
 
 from __future__ import annotations
 
+import logging
 from collections import defaultdict
 
 import numpy as np
@@ -24,6 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import geom
+from ..plans.grouping import group_by_key
+
+log = logging.getLogger(__name__)
 
 
 def cell_segments(band: np.ndarray, level: float, origin=(0, 0)):
@@ -470,17 +476,15 @@ def contour_tiles(
         labeled = open_chains.withColumn("gkey", F.col("ckey"))
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["level", "n_points", "closed", "wkb", "length"]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
         parts = [
             np.frombuffer(b, dtype=np.float64).reshape(-1, 2)
             for b in pdf["pts"]
         ]
         return finalize([float(pdf["level"].iloc[0])], [merge_chains(parts)])
 
-    merged = labeled.select("level", "gkey", "pts").groupBy("gkey").applyInPandas(
-        assemble, schema=OUT_SCHEMA
+    merged = group_by_key(
+        labeled.select("level", "gkey", "pts"), ("gkey",), (), assemble,
+        "contour", OUT_SCHEMA, log,
     )
     return merged.unionByName(closed_out)
 

@@ -17,34 +17,39 @@ semantics); this module supplies the dimension-1 and dimension-0 paths:
   ogr/ogrlinearring.cpp:453-531 via geom.points_on_surface).
 
 Distribution mirrors layer_algebra: candidate pairs from the salted cell
-equi-join (pair_candidates), then ONE Arrow-batched kernel pass. The
-"union of candidates" classification needs no geometric union: a midpoint
-is inside the union iff it is inside ANY candidate polygon, so
-overlapping method features cost an OR, not a boolean op.
+equi-join (pair_candidates). Intersection is one Arrow-batched map over
+the pairs. Clip and Erase are ONE pass keyed by input fid
+(plans.grouping.map_key_runs), laid out like layer_algebra's overlay:
+each feature's own row first, then its candidates, so a feature with no
+candidate needs no anti-join to find it (Clip drops it, Erase passes it
+through). The "union of candidates" classification needs no geometric
+union: a midpoint is inside the union iff it is inside ANY candidate
+polygon, so overlapping method features cost an OR, not a boolean op.
 
 The per-pair splitting kernel is O(segments x ring edges) with full numpy
-broadcasting (no Python loop over edges), bounded per task by the
-candidate-pair grouping.
+broadcasting (no Python loop over edges).
 
-Skew bound: the grouped clip/erase collect_lists one input line's
-candidate method geometries into a single task (like OGR, which
-accumulates the method layer per input feature). A line crossing 1e5+
-method features would need the chunked interval-merge generalization
-(per-chunk clip -> distributed interval union); the candidate count is
-bounded by pair_candidates' hot-cell salting in practice, and the
-polygon side's grouped pass (layer_algebra._overlay: key-sorted runs
-streamed across Arrow batches, candidates folded into partial unions)
-shows the recipe if a workload ever hits it.
+Skew bound: Clip/Erase hold one input feature's candidate polygons in
+its kernel call (like OGR, which accumulates the method layer per input
+feature); the run streams across Arrow batches, so nothing else of the
+partition sits in memory with it. A line crossing 1e5+ method features
+would need the chunked interval-merge generalization (per-chunk clip ->
+distributed interval union); the candidate count is bounded by
+pair_candidates' hot-cell salting in practice.
 """
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import geom
-from .layer_algebra import pair_candidates
+from ..plans.grouping import map_key_runs
+from .layer_algebra import _group_row, _map_results, pair_candidates
+
+log = logging.getLogger(__name__)
 
 LINE_SCHEMA = (
     "fid long, wkb binary, minx double, miny double, maxx double, "
@@ -172,44 +177,28 @@ def clip_polyline(line: np.ndarray, polys, keep_inside: bool = True):
     return pieces, total
 
 
-def _line_rows(batches, keep_inside: bool, pairwise: bool):
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            lines = _geometry_lines(geom.parse_wkb(bytes(r.in_wkb)))
-            polys = []
-            wkbs = [r.m_wkb] if pairwise else list(r.m_wkbs)
-            for mw in wkbs:
-                polys.extend(geom.parse_wkb(bytes(mw)).polygons())
-            pieces, total = [], 0.0
-            for ln in lines:
-                ps, ll = clip_polyline(ln, polys, keep_inside)
-                pieces.extend(ps)
-                total += ll
-            if not pieces or total <= 0:
-                continue
-            allc = np.vstack(pieces)
-            rec = {
-                "wkb": wkb_multilinestring(pieces),
-                "minx": float(allc[:, 0].min()),
-                "miny": float(allc[:, 1].min()),
-                "maxx": float(allc[:, 0].max()),
-                "maxy": float(allc[:, 1].max()),
-                "length": float(total),
-            }
-            if pairwise:
-                rec.update(in_fid=int(r.in_fid), m_fid=int(r.m_fid))
-            else:
-                rec.update(fid=int(r.in_fid))
-            rows.append(rec)
-        yield pd.DataFrame(
-            rows,
-            columns=(
-                ["in_fid", "m_fid", "wkb", "minx", "miny", "maxx", "maxy", "length"]
-                if pairwise
-                else ["fid", "wkb", "minx", "miny", "maxx", "maxy", "length"]
-            ),
-        )
+def _lines_row(ids: tuple, lines, length: float) -> list[tuple]:
+    """``ids`` + (multilinestring WKB, envelope, ``length``) of ``lines``
+    as a one-row list."""
+    allc = np.vstack(lines)
+    return [(
+        *ids, wkb_multilinestring(lines),
+        float(allc[:, 0].min()), float(allc[:, 1].min()),
+        float(allc[:, 0].max()), float(allc[:, 1].max()), float(length),
+    )]
+
+
+def _clipped(ids: tuple, lines, polys, keep_inside: bool) -> list[tuple]:
+    """The parts of ``lines`` inside (or outside) the union of ``polys``
+    as one LINE row, or none when nothing of positive length is left."""
+    pieces, total = [], 0.0
+    for ln in lines:
+        ps, ll = clip_polyline(ln, polys, keep_inside)
+        pieces.extend(ps)
+        total += ll
+    if not pieces or total <= 0:
+        return []
+    return _lines_row(ids, pieces, total)
 
 
 def line_layer_intersection(
@@ -223,52 +212,62 @@ def line_layer_intersection(
     geometries truly cross — geometry is the multilinestring of the parts
     of the input line inside THAT method feature (the
     KEEP_LOWER_DIMENSION=YES result of ogrlayer.cpp Intersection for a
-    line input layer)."""
+    line input layer). Needs no grouping: one map over the pairs."""
     cands = pair_candidates(line_layer, method_layer, input_fid, method_fid, cell_zoom)
-    return cands.mapInPandas(
-        lambda it: _line_rows(it, True, True), schema=LINE_PAIR_SCHEMA
+    return _map_results(
+        cands, LINE_PAIR_SCHEMA,
+        lambda r: _clipped(
+            (int(r.in_fid), int(r.m_fid)),
+            _geometry_lines(geom.parse_wkb(bytes(r.in_wkb))),
+            geom.parse_wkb(bytes(r.m_wkb)).polygons(), True,
+        ),
     )
 
 
-def _grouped_line_op(cands: DataFrame, keep_inside: bool) -> DataFrame:
-    grouped = cands.groupBy("in_fid").agg(
-        F.first("in_wkb").alias("in_wkb"), F.collect_list("m_wkb").alias("m_wkbs")
+def _feature_pass(layer, method_layer, input_fid, method_fid, cell_zoom, kernel, caller, schema):
+    """``kernel(fid, wkb, polys)`` once per input feature, as one
+    ``map_key_runs`` pass keyed by fid: the feature's own row (role 0)
+    sorts first, then its candidates (role 1) in method-fid order.
+    ``wkb`` is the input geometry, ``polys`` the candidates' polygons
+    (None for a feature with no candidate). Two input features with one
+    fid raise ``ValueError``."""
+    cands = pair_candidates(layer, method_layer, input_fid, method_fid, cell_zoom)
+    rows = layer.select(_group_row(0, input_fid, 0, input_fid, "wkb")).unionByName(
+        cands.select(_group_row(0, "in_fid", 1, "m_fid", "m_wkb"))
     )
-    return grouped.mapInPandas(
-        lambda it: _line_rows(it, keep_inside, False), schema=LINE_SCHEMA
+
+    def run_kernel(key, run):
+        (fid,), own, polys, n = key, [], [], 0
+        for _, role, _, wkb in run:
+            if role == 1:
+                polys.extend(geom.parse_wkb(bytes(wkb)).polygons())
+                n += 1
+            elif own:
+                raise ValueError(f"the input layer has more than one feature with fid {fid}")
+            else:
+                own.append(wkb)
+        return kernel(fid, own[0], polys if n else None)
+
+    return map_key_runs(
+        rows.select("r.fid", "r.role", "r.o_fid", "r.wkb"), ("fid",), ("role", "o_fid"),
+        run_kernel, caller, schema, log,
     )
 
 
-def _lines_passthrough(layer: DataFrame, fid: str) -> DataFrame:
-    src = layer.select(F.col(fid).alias("fid"), "wkb")
+def _line_kernel(keep_inside: bool):
+    def kernel(fid, wkb, polys):
+        if polys is None and keep_inside:
+            return []  # clip drops a feature with no candidate unparsed
+        lines = _geometry_lines(geom.parse_wkb(bytes(wkb)))
+        if polys is not None:
+            return _clipped((fid,), lines, polys, keep_inside)
+        if not lines:
+            return []
+        # erase passes a feature with no candidate through unchanged
+        total = sum(float(np.hypot(*(np.diff(ln, axis=0).T)).sum()) for ln in lines)
+        return _lines_row((fid,), lines, total)
 
-    def do(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                lines = _geometry_lines(geom.parse_wkb(bytes(r.wkb)))
-                if not lines:
-                    continue
-                total = sum(
-                    float(np.hypot(*(np.diff(ln, axis=0).T)).sum()) for ln in lines
-                )
-                allc = np.vstack(lines)
-                rows.append(
-                    {
-                        "fid": int(r.fid),
-                        "wkb": wkb_multilinestring(lines),
-                        "minx": float(allc[:, 0].min()),
-                        "miny": float(allc[:, 1].min()),
-                        "maxx": float(allc[:, 0].max()),
-                        "maxy": float(allc[:, 1].max()),
-                        "length": float(total),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["fid", "wkb", "minx", "miny", "maxx", "maxy", "length"]
-            )
-
-    return src.mapInPandas(do, schema=LINE_SCHEMA)
+    return kernel
 
 
 def line_layer_clip(
@@ -281,8 +280,10 @@ def line_layer_clip(
     """Line x polygon Clip (ogrlayer.cpp:5497 semantics for line inputs):
     the parts of each input line inside the UNION of the method layer —
     one row per surviving input fid."""
-    cands = pair_candidates(line_layer, method_layer, input_fid, method_fid, cell_zoom)
-    return _grouped_line_op(cands, keep_inside=True)
+    return _feature_pass(
+        line_layer, method_layer, input_fid, method_fid, cell_zoom,
+        _line_kernel(True), "line_layer_clip", LINE_SCHEMA,
+    )
 
 
 def line_layer_erase(
@@ -295,14 +296,10 @@ def line_layer_erase(
     """Line x polygon Erase (ogrlayer.cpp:5806 semantics for line inputs):
     the parts outside the union of the method layer; lines with no
     candidates pass through unchanged."""
-    cands = pair_candidates(line_layer, method_layer, input_fid, method_fid, cell_zoom)
-    erased = _grouped_line_op(cands, keep_inside=False)
-    no_cand = line_layer.join(
-        cands.select("in_fid").distinct(),
-        line_layer[input_fid] == F.col("in_fid"),
-        "left_anti",
+    return _feature_pass(
+        line_layer, method_layer, input_fid, method_fid, cell_zoom,
+        _line_kernel(False), "line_layer_erase", LINE_SCHEMA,
     )
-    return erased.unionByName(_lines_passthrough(no_cand, input_fid))
 
 
 # ---------------------------------------------------------------------------
@@ -312,23 +309,20 @@ def line_layer_erase(
 POINT_SCHEMA = "fid long, x double, y double"
 
 
-def _point_rows(batches, keep_inside: bool):
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            g = geom.parse_wkb(bytes(r.in_wkb))
-            if g.kind not in (geom.WKB_POINT, geom.WKB_MULTIPOINT):
-                continue
-            pts = np.asarray(g.parts, dtype=np.float64).reshape(-1, 2)
-            polys = []
-            for mw in r.m_wkbs:
-                polys.extend(geom.parse_wkb(bytes(mw)).polygons())
-            keep = _inside_any(pts[:, 0], pts[:, 1], polys)
-            if not keep_inside:
-                keep = ~keep
-            for x, y in pts[keep]:
-                rows.append({"fid": int(r.in_fid), "x": float(x), "y": float(y)})
-        yield pd.DataFrame(rows, columns=["fid", "x", "y"])
+def _point_kernel(keep_inside: bool):
+    def kernel(fid, wkb, polys):
+        if polys is None and keep_inside:
+            return []
+        g = geom.parse_wkb(bytes(wkb))
+        if g.kind not in (geom.WKB_POINT, geom.WKB_MULTIPOINT):
+            return []
+        pts = np.asarray(g.parts, dtype=np.float64).reshape(-1, 2)
+        keep = _inside_any(pts[:, 0], pts[:, 1], polys or [])
+        if not keep_inside:
+            keep = ~keep
+        return [(fid, float(x), float(y)) for x, y in pts[keep]]
+
+    return kernel
 
 
 def point_layer_clip(
@@ -343,33 +337,7 @@ def point_layer_clip(
     feature covered by any method feature (``keep_inside=False`` flips to
     Erase). Points with no envelope candidates are outside by definition:
     dropped for Clip, passed through for Erase."""
-    cands = pair_candidates(point_layer, method_layer, input_fid, method_fid, cell_zoom)
-    grouped = cands.groupBy("in_fid").agg(
-        F.first("in_wkb").alias("in_wkb"), F.collect_list("m_wkb").alias("m_wkbs")
+    return _feature_pass(
+        point_layer, method_layer, input_fid, method_fid, cell_zoom,
+        _point_kernel(keep_inside), "point_layer_clip", POINT_SCHEMA,
     )
-    out = grouped.mapInPandas(
-        lambda it: _point_rows(it, keep_inside), schema=POINT_SCHEMA
-    )
-    if keep_inside:
-        return out
-    no_cand = point_layer.join(
-        cands.select("in_fid").distinct(),
-        point_layer[input_fid] == F.col("in_fid"),
-        "left_anti",
-    )
-
-    def passthrough(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                g = geom.parse_wkb(bytes(r.wkb))
-                if g.kind not in (geom.WKB_POINT, geom.WKB_MULTIPOINT):
-                    continue
-                for x, y in np.asarray(g.parts, dtype=np.float64).reshape(-1, 2):
-                    rows.append({"fid": int(r.fid), "x": float(x), "y": float(y)})
-            yield pd.DataFrame(rows, columns=["fid", "x", "y"])
-
-    pt = no_cand.select(F.col(input_fid).alias("fid"), "wkb").mapInPandas(
-        passthrough, schema=POINT_SCHEMA
-    )
-    return out.unionByName(pt)

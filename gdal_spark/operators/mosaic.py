@@ -16,10 +16,12 @@ Distributed shape:
    ONCE and warps it into each overlapped output tile with tile._warp_cut
    (same-CRS affine -> affine, exact mapping; the source alpha goes
    through the same transform). Only PNG fragments leave the stage.
-3. (tx, ty) compose through plans.grouping.group_by_key — the tile-key shuffle
-   IS the mosaic, one task per core; sources paint in image_id order
-   (buildvrt paints in command-line order; image_id is the deterministic
-   distributed equivalent) where valid, with the pyramid's paint code.
+3. (tx, ty) compose through plans.grouping.group_by_key (one tile-key
+   shuffle, one sort, one mapInPandas walking the sorted runs) — the
+   tile-key shuffle IS the mosaic, one task per core; sources paint in
+   image_id order (buildvrt paints in command-line order; image_id is
+   the deterministic distributed equivalent) where valid, with the
+   pyramid's paint code.
 """
 
 from __future__ import annotations

@@ -28,10 +28,11 @@ Spark mapping: the raster arrives as the engine's tiled layout
    adjacent tiles in opposite directions iff the region continues across
    the border; a groupBy (gkey, edge) direction-sum cancels those in a
    well-spread shuffle. Survivors are real boundary.
-5. Final groupBy(global label): one region's pre-chained FRAGMENTS meet
-   in one task and merge endpoint-to-endpoint into rings
-   (``merge_fragments`` — integer endpoints, exact), then
-   assemble_polygons + the geo transform.
+5. Region build keyed by the global label (plans.grouping.group_by_key:
+   one key shuffle into one task per core, then one walk over the sorted
+   runs): one region's pre-chained FRAGMENTS meet as one frame and merge
+   endpoint-to-endpoint into rings (``merge_fragments`` — integer
+   endpoints, exact), then assemble_polygons + the geo transform.
 
 The per-region merge holds one region's compacted boundary (turn
 vertices, not perimeter pixels) in memory — strictly less than the
@@ -43,6 +44,7 @@ serialization floor is inherent to emitting one geometry per region.
 
 from __future__ import annotations
 
+import logging
 from collections import defaultdict
 
 import numpy as np
@@ -51,6 +53,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import geom
 from ..booleans import assemble_polygons
+from ..plans.grouping import group_by_key
+
+log = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -604,7 +609,9 @@ def polygonize_tiles(
     edge set fits in ``driver_cc_max_edges`` (fetched with a LIMIT, so
     the driver never materializes more than the cap + 1 rows); beyond
     that it switches to fully distributed :func:`cc_labels`. Set the cap
-    to 0 to force the distributed path."""
+    to 0 to force the distributed path. The region build runs one task
+    per core (``group_by_key``'s explicit partition count), so AQE cannot
+    coalesce the few-byte fragment rows into one task."""
     src = tiles_df.select("tile_x", "tile_y", "w", "h", "data")
 
     # ONE decode+label pass per tile; output is O(perimeter + regions)
@@ -725,8 +732,6 @@ def polygonize_tiles(
             "fid", "value", "n_pixels", "wkb",
             "minx", "miny", "maxx", "maxy", "area",
         ]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
         np_ = pdf[pdf["kind"] == "n"]
         frags = [
             np.frombuffer(b, dtype=np.float64).reshape(-1, 2)
@@ -765,7 +770,7 @@ def polygonize_tiles(
             columns=cols,
         )
 
-    out = final_in.groupBy("gkey").applyInPandas(build, schema=OUT_SCHEMA)
+    out = group_by_key(final_in, ("gkey",), (), build, "polygonize_tiles", OUT_SCHEMA, log)
     # materialize so the persisted pass-1 rows can be released eagerly
     out = out.localCheckpoint(eager=True)
     rows.unpersist()

@@ -19,13 +19,15 @@ Pipeline (SURVEY.md §3.3 mapping):
    1334-1394); other sources take the exact per-tile warp (the
    gdalalg_raster_tile.cpp:647-649 per-tile WarpRegionToBuffer
    formulation).
-4. **compose** — a (z, tx, ty) hash repartition into ``defaultParallelism``
-   partitions, then groupBy(z, tx, ty).applyInPandas: paint fragments in
-   image_id order (gdalbuildvrt placement, apps/gdalbuildvrt_lib.cpp),
-   append alpha (gdal2tiles.py:2815), encode PNG, GDAL checksum
-   (alg/gdalchecksum.cpp) + lineage columns. The tile-key shuffle **is**
-   the mosaic; mosaic.build_mosaic groups and paints through the same
-   ``plans.grouping.group_by_key``.
+4. **compose** — ``plans.grouping.group_by_key`` on (z, tx, ty): a key
+   hash repartition into ``defaultParallelism`` partitions, a sort, then
+   one mapInPandas walking the sorted runs, each tile's fragments as one
+   frame: paint them in image_id order (gdalbuildvrt placement,
+   apps/gdalbuildvrt_lib.cpp), append alpha (gdal2tiles.py:2815), encode
+   PNG, GDAL checksum (alg/gdalchecksum.cpp) + lineage columns. Tiles
+   leave in frames of at most the session's Arrow batch cap (each row
+   carries a PNG). The tile-key shuffle **is** the mosaic;
+   mosaic.build_mosaic groups and paints through the same helper.
 5. **overviews** — the same grouping keyed by the parent tile, children
    in (tx, ty) order: place <=4 children in a 2x2 buffer by (x%2,
    y-parity) (gdal2tiles.py:1536-1550), 2:1 average downsample with exact

@@ -192,3 +192,45 @@ class TestHelpers:
     def test_assemble_orphan_hole_dropped(self):
         hole = rect(0, 0, 1, 1)[::-1].copy()
         assert assemble_polygons([hole]) == []
+
+
+def _band_edges(n_rects, width, seed=0, span=1e6, height=1000.0):
+    """Edges of ``n_rects`` rectangles ``width`` wide and the band's full
+    ``height``, spread along a ``span``-wide thin band."""
+    from gdal_spark.booleans import _collect_edges
+
+    x0 = np.random.default_rng(seed).uniform(0.0, span - width, n_rects)
+    polys = [[rect(x, 0.0, x + width, height)] for x in x0]
+    return _collect_edges(polys)
+
+
+class TestCrossingBuckets:
+    def test_thin_band_edges_join_few_cells(self):
+        # a k x k grid over a 1e6 x 1e3 band puts every vertical edge in
+        # all k (here 45) y-cells; near-square cells keep it to ~2
+        from gdal_spark.booleans import _edge_cells
+
+        p0, p1 = _band_edges(2000, 400.0)
+        n = len(p0)
+        ix0, ix1, iy0, iy1, _ = _edge_cells(
+            np.minimum(p0[:, 0], p1[:, 0]), np.maximum(p0[:, 0], p1[:, 0]),
+            np.minimum(p0[:, 1], p1[:, 1]), np.maximum(p0[:, 1], p1[:, 1]),
+        )
+        memberships = int(((ix1 - ix0 + 1) * (iy1 - iy0 + 1)).sum())
+        assert memberships <= 4 * n, (memberships, n)
+
+    def test_bucketed_crossings_equal_all_pairs_on_a_thin_band(self):
+        from gdal_spark.booleans import _collect_edges, _crossing_ys, _pair_crossing_ys
+
+        # 150 rectangles 10 high, 2,000 wide, staggered in y so their
+        # edges cross, across a 1e5 x 40 band
+        rng = np.random.default_rng(3)
+        x0 = rng.uniform(0.0, 1e5 - 2000.0, 150)
+        y0 = rng.uniform(0.0, 30.0, 150)
+        p0, p1 = _collect_edges([[rect(x, y, x + 2000.0, y + 10.0)] for x, y in zip(x0, y0)])
+        assert len(p0) == 600
+        # above 256 edges _crossing_ys takes the bucket pass
+        bucketed = np.sort(_crossing_ys(p0, p1))
+        dense = np.sort(_pair_crossing_ys(p0, p1, *np.triu_indices(len(p0), k=1)))
+        assert len(dense) > 100
+        np.testing.assert_array_equal(bucketed, dense)

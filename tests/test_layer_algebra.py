@@ -328,7 +328,8 @@ def _rect_layer(spark, rects):
 
 class TestOverlayPass:
     """The one grouped pass behind erase/clip/identity/union/
-    symdifference/update, and dissolve's streamed fold."""
+    symdifference/update, dissolve's streamed fold, and the same
+    key-sorted walk under every other per-key kernel."""
 
     def test_duplicate_input_fid_fails_loudly(self, spark):
         # fid 1 twice: one feature overlapping the method, one far away
@@ -436,3 +437,164 @@ class TestOverlayPass:
         ]
         # median extent 100 (three envelopes: 100, 100, 500), maximum 500
         assert msgs == ["pair_candidates: cell zoom 12 from median envelope extent 100, maximum 500"]
+
+    @staticmethod
+    def _line_layers(spark, n_lines=20, n_rects=12):
+        """``n_lines`` diagonal segments over ``n_rects`` rectangles, half of
+        the lines far from every rectangle (no candidate), as line, point
+        and polygon layers."""
+        s = "fid long, wkb binary, minx double, miny double, maxx double, maxy double"
+        lines, points = [], []
+        for i in range(n_lines):
+            x = 10.0 * i + (0.0 if i % 2 else 1000.0)
+            pts = np.array([(x, 0.0), (x + 8.0, 8.0)])
+            lines.append((i, bytearray(geom.wkb_linestring(pts)), x, 0.0, x + 8.0, 8.0))
+            px = x + 2.5  # inside a rectangle when the line crosses one
+            points.append((i, bytearray(geom.wkb_point(px, 4.0)), px, 4.0, px, 4.0))
+        methods = _rect_layer(
+            spark, [(100 + j, 20 * j + 3, 2, 20 * j + 13, 6) for j in range(n_rects)]
+        )
+        return spark.createDataFrame(lines, s), spark.createDataFrame(points, s), methods
+
+    def test_line_and_point_duplicate_input_fid_fails_loudly(self, spark):
+        from gdal_spark.operators.line_algebra import (
+            line_layer_clip, line_layer_erase, point_layer_clip,
+        )
+
+        lines, points, methods = self._line_layers(spark, 4, 2)
+        # fid 1 twice: one feature overlapping a method, one far away
+        cols = ("1 AS fid", "wkb", "minx", "miny", "maxx", "maxy")
+        lines = lines.unionByName(lines.where("fid = 0").selectExpr(*cols))
+        points = points.unionByName(points.where("fid = 0").selectExpr(*cols))
+        for df in (
+            line_layer_clip(lines, methods), line_layer_erase(lines, methods),
+            point_layer_clip(points, methods),
+            point_layer_clip(points, methods, keep_inside=False),
+        ):
+            with pytest.raises(Exception, match="input layer has more than one feature with fid 1"):
+                df.collect()
+
+    def test_every_per_key_kernel_walks_one_key_exchange(self, spark, monkeypatch):
+        # each plan: one MapInPandas straight over a Sort on the key,
+        # straight over one hash Exchange on the key into one partition
+        # per core; no grouped map and no collect_list anywhere
+        import re
+
+        import __spark_entry__ as E
+
+        from gdal_spark.operators.contour import contour_tiles
+        from gdal_spark.operators.line_algebra import (
+            line_layer_clip, line_layer_erase, point_layer_clip,
+        )
+        from gdal_spark.operators.mosaic import build_mosaic
+        from gdal_spark.operators.polygonize import polygonize_tiles
+        from gdal_spark.operators.tile import (
+            FRAGMENT_SCHEMA, TILE_SCHEMA, compose_tiles, overview_tiles,
+        )
+
+        n = spark.sparkContext.defaultParallelism
+
+        def assert_walk(df, keys):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "FlatMapGroupsInPandas" not in plan and "collect_list" not in plan
+            ks = [rf"{k}#\d+L?" for k in keys]
+            sort = r"Sort \[" + ", ".join(k + " ASC NULLS FIRST" for k in ks)
+            exch = r"Exchange hashpartitioning\(" + ", ".join(ks) + rf", {n}\), REPARTITION_BY_NUM"
+            lines = plan.splitlines()
+            walks = [
+                i for i, line in enumerate(lines[:-2])
+                if "MapInPandas" in line and re.search(sort, lines[i + 1])
+                and re.search(exch, lines[i + 2])
+            ]
+            assert len(walks) == 1, (keys, plan)
+
+        lines, points, methods = self._line_layers(spark, 4, 2)
+        assert_walk(compose_tiles(spark.createDataFrame([], FRAGMENT_SCHEMA)), ("z", "tx", "ty"))
+        assert_walk(overview_tiles(spark.createDataFrame([], TILE_SCHEMA)), ("z", "ptx", "pty"))
+        mimgs = spark.createDataFrame(
+            E._mosaic_fixture_records(),
+            "image_id string, bytes binary, w int, h int, fmt string, gt0 double, "
+            "gt1 double, gt2 double, gt3 double, gt4 double, gt5 double, srid int",
+        )
+        assert_walk(build_mosaic(mimgs, "highest", tile_size=64), ("tx", "ty"))
+        for df in (
+            line_layer_clip(lines, methods), line_layer_erase(lines, methods),
+            point_layer_clip(points, methods),
+            point_layer_clip(points, methods, keep_inside=False),
+        ):
+            assert_walk(df, ("fid",))
+
+        band = np.add.outer(np.arange(32.0), np.arange(32.0))
+        tiles = spark.createDataFrame(
+            [
+                (tx, ty, 16, 16, bytearray(band[16 * ty:16 * ty + 16, 16 * tx:16 * tx + 16].tobytes()))
+                for tx in range(2) for ty in range(2)
+            ],
+            "tile_x int, tile_y int, w int, h int, data binary",
+        )
+        gt = (0.0, 1.0, 0.0, 32.0, 0.0, -1.0)
+        assert_walk(contour_tiles(tiles, gt, [20.0], tile_size=16), ("gkey",))
+        # the region build is checkpointed eagerly; look at it unmaterialized
+        monkeypatch.setattr(type(tiles), "localCheckpoint", lambda self, eager=True: self)
+        assert_walk(polygonize_tiles(tiles, gt, tile_size=16, exclude=None), ("gkey",))
+
+    def test_polygonize_build_runs_one_task_per_core(self, spark):
+        # the fragment rows are a few bytes, so without an explicit count
+        # AQE coalesced the build shuffle into a single task
+        from gdal_spark.operators.polygonize import polygonize_tiles
+
+        sc = spark.sparkContext
+        n = sc.defaultParallelism
+        assert n > 1
+        arr = np.zeros((64, 64))
+        for k in range(12):
+            arr[5 * k:5 * k + 4, (7 * k) % 50:(7 * k) % 50 + 12] = 1 + k % 3
+        tiles = spark.createDataFrame(
+            [
+                (tx, ty, 16, 16, bytearray(arr[16 * ty:16 * ty + 16, 16 * tx:16 * tx + 16].tobytes()))
+                for tx in range(4) for ty in range(4)
+            ],
+            "tile_x int, tile_y int, w int, h int, data binary",
+        )
+        group = "test_polygonize_parallelism"
+        sc.setJobGroup(group, "polygonize parallelism")
+        try:
+            out = polygonize_tiles(tiles, (0.0, 1.0, 0.0, 64.0, 0.0, -1.0), tile_size=16)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert out.count() == 12
+        tracker = sc.statusTracker()
+        # the eager checkpoint is the group's last job; its result stage
+        # is the build
+        last = max(tracker.getJobIdsForGroup(group))
+        build = tracker.getStageInfo(max(tracker.getJobInfo(last).stageIds))
+        assert build.numTasks == n
+
+    def test_line_and_point_erase_run_no_more_jobs_than_clip(self, spark):
+        from gdal_spark.operators.line_algebra import (
+            line_layer_clip, line_layer_erase, point_layer_clip,
+        )
+
+        lines, points, methods = self._line_layers(spark)
+        sc = spark.sparkContext
+        jobs = {}
+        for name, df in (
+            ("line_clip", line_layer_clip(lines, methods)),
+            ("line_erase", line_layer_erase(lines, methods)),
+            ("point_clip", point_layer_clip(points, methods)),
+            ("point_erase", point_layer_clip(points, methods, keep_inside=False)),
+        ):
+            group = f"line_jobs_{name}"
+            sc.setJobGroup(group, name)
+            try:
+                rows = df.collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            # the 10 odd lines cross a rectangle and their points lie in it;
+            # erase passes the 10 even ones, which have no candidate, through
+            assert len(rows) == {"line_erase": 20}.get(name, 10), name
+        assert jobs["line_erase"] <= jobs["line_clip"], jobs
+        assert jobs["point_erase"] <= jobs["point_clip"], jobs

@@ -22,6 +22,20 @@ sys.path.insert(0, ROOT)
 from pyspark.sql import functions as F
 
 
+# a per-key kernel's walk (plans.grouping): one MapInPandas straight over
+# a Sort straight over the key Exchange, in the formatted plan's tree
+KEY_WALK = r"MapInPandas \(\d+\)\n\s*\+- Sort \(\d+\)\n\s*\+- Exchange \(\d+\)"
+# ... whose Exchange reads the fragment cut (through at most a Project)
+CUT_THEN_WALK = KEY_WALK + r"(\n\s*\+- Project \(\d+\))?\n\s*\+- MapInPandas \(\d+\)"
+
+
+def key_exchange(*keys):
+    """The walk's Exchange: hash partitioning on exactly ``keys``, with
+    the explicit partition count."""
+    ks = ", ".join(rf"{k}#\d+L?" for k in keys)
+    return rf"hashpartitioning\({ks}, \d+\), REPARTITION_BY_NUM"
+
+
 def audit(name, df, expect, out):
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     checks = []
@@ -160,8 +174,9 @@ def main():
         out,
     )
 
-    # 8. direct pyramid: ONE exchange total (scan -> mapInPandas ->
-    # tile-key shuffle -> compose); no per-level barriers
+    # 8. direct pyramid: ONE exchange total (scan -> mapInPandas cut ->
+    # tile-key shuffle -> sort -> mapInPandas compose walk); no
+    # per-level barriers, no grouped-map node
     from gdal_spark.operators.tile import tile_pyramid_direct
 
     pyr = tile_pyramid_direct(imgs8, levels_below=1)
@@ -169,15 +184,19 @@ def main():
         "direct_pyramid_single_shuffle",
         pyr,
         [
-            ("single_exchange", lambda p: p.count("Exchange") <= 2),  # 1 shuffle (+AQE read)
-            ("map_then_group", r"MapInPandas[\s\S]*FlatMapGroupsInPandas"),
+            ("one_exchange",
+             lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1),
+            ("cut_then_walk", CUT_THEN_WALK),
+            ("tile_key_exchange", key_exchange("z", "tx", "ty")),
+            ("no_grouped_map", lambda p: "FlatMapGroupsInPandas" not in p),
             ("no_inmemory_scan", lambda p: "InMemoryTableScan" not in p),
         ],
         out,
     )
 
     # 9. line algebra clip: the same salted cell equi-join feeding ONE
-    # grouped pandas pass — no cartesian, no Python before the join
+    # walk keyed by fid (the features' own rows unioned with their
+    # candidates) — no cartesian, no aggregate, no anti-join
     import numpy as np
 
     from gdal_spark.operators.line_algebra import line_layer_clip
@@ -204,8 +223,11 @@ def main():
                  r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", p
              ) is not None and "cell#" in p),
             ("no_cartesian", lambda p: "CartesianProduct" not in p),
-            # grouped collect_list agg feeding one Arrow pass
-            ("agg_then_arrow", r"HashAggregate[\s\S]*MapInPandas|ObjectHashAggregate[\s\S]*MapInPandas"),
+            ("walk_over_union", KEY_WALK + r"\n\s*\+- Union \(\d+\)"),
+            ("fid_exchange", key_exchange("fid")),
+            ("no_agg_no_anti_join",
+             lambda p: "collect_list" not in p and "ObjectHashAggregate" not in p
+             and "LeftAnti" not in p),
         ],
         out,
     )
@@ -444,9 +466,11 @@ def main():
         "mosaic_tilekey_shuffle",
         mz,
         [
-            ("map_then_group", r"MapInPandas[\s\S]*FlatMapGroupsInPandas"),
             ("one_exchange",
              lambda p: len(re.findall(r"\(\d+\) Exchange", p)) == 1),
+            ("cut_then_walk", CUT_THEN_WALK),
+            ("tile_key_exchange", key_exchange("tx", "ty")),
+            ("no_grouped_map", lambda p: "FlatMapGroupsInPandas" not in p),
             ("no_cartesian", lambda p: "CartesianProduct" not in p),
         ],
         out,
