@@ -24,6 +24,7 @@ import os
 
 import numpy as np
 
+from ._raw import read_band
 from ._util import glob_paths, raster_row, scan_files
 
 CRT_IMAGE_FDR = 0x3FC01212
@@ -79,20 +80,13 @@ def read_ceos_window(buf: bytes, band: int, y0: int, ny: int,
         nx = h["pixels"] - x0
     bpp = h["bits"] // 8
     dt = {1: np.uint8, 2: np.dtype(">u2")}.get(bpp, np.uint8)
-    out = np.zeros((ny, nx), dtype=np.dtype(dt).newbyteorder("="))
+    # one record per (line, band) after the descriptor record; pixels
+    # follow the 12-byte record header and the prefix
     line_stride = h["bands"] * h["rec_len"]
-    for i in range(ny):
-        line = y0 + i
-        off = (h["fdr_len"] + (band - 1) * h["rec_len"] +
-               line * line_stride + 12 + h["prefix"] +
-               x0 * bpp)
-        end = off + nx * bpp
-        if off >= len(buf):
-            continue
-        chunk = buf[off:end]
-        vals = np.frombuffer(chunk, dt, count=len(chunk) // bpp)
-        out[i, :vals.size] = vals
-    return out
+    off = (h["fdr_len"] + (band - 1) * h["rec_len"] + y0 * line_stride
+           + 12 + h["prefix"] + x0 * bpp)
+    return read_band(buf, dt, nx, ny, off, np.dtype(dt).itemsize,
+                     line_stride)
 
 
 def scan_ceos(spark, path_glob: str, max_lines: int = 0):

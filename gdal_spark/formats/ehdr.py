@@ -37,6 +37,7 @@ import os
 
 import numpy as np
 
+from ._raw import write_raw
 from ._util import (glob_paths, local_path, raster_row, scan_files,
                     write_files)
 from .envi import OUT_SCHEMA, decode_envi
@@ -251,17 +252,10 @@ def write_ehdr(df, out_dir: str, layout: str = "bil") -> list[str]:
                          .get(dt.itemsize, np.uint32))
             dt = a.dtype
             ptype, nbits = "UNSIGNEDINT", dt.itemsize * 8
-        a = a.astype(dt.newbyteorder("<"))
-        if layout == "bil":
-            cube = a.transpose(0, 2, 1)
-        elif layout == "bsq":
-            cube = a.transpose(2, 0, 1)
-        else:
-            cube = a
         ext = ".flt" if ptype == "FLOAT" and nb == 1 else ".bil"
         base = os.path.join(out_dir, str(r.image_id))
         with open(base + ext, "wb") as f:
-            f.write(np.ascontiguousarray(cube).tobytes())
+            f.write(write_raw(a, dt.newbyteorder("<"), layout))
         rowbytes = ww * dt.itemsize
         hdr = [
             "BYTEORDER      I",

@@ -41,6 +41,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 from .. import codecs
 
@@ -145,22 +146,12 @@ def decode_envi(data: bytes, hdr: dict):
     need = off + w * h * nb * dt.itemsize
     if len(data) < need:
         raise ValueError(f"ENVI cube {len(data)} bytes < expected {need}")
-    flat = np.frombuffer(data, dtype=dt, count=w * h * nb, offset=off)
-    il = hdr.get("interleave", "bsq").lower()
-    if il == "bsq":
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    elif il == "bil":
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    elif il == "bip":
-        arr = flat.reshape(h, w, nb)
-    else:
-        raise ValueError(f"interleave {il!r} unsupported")
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
+    arr = read_raw(data, dt, w, h, nb, hdr.get("interleave", "bsq"), off)
     gt, srid = _georef_from_map_info(hdr)
     nodata = None
     if "data ignore value" in hdr:
         nodata = float(hdr["data ignore value"])
-    return arr.astype(dt.newbyteorder("=")), gt, srid, nodata
+    return arr, gt, srid, nodata
 
 
 def header_path_for(data_path: str) -> str:
@@ -187,24 +178,15 @@ def format_envi(arr: np.ndarray, gt, srid: int = 0,
     """array (+ georef) -> (cube bytes, .hdr text), little-endian. A
     rotated geotransform must be a pure rotation+scale (the ``map
     info`` rotation model — the reference writes the same form)."""
-    a = np.ascontiguousarray(arr)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, nb = a.shape
+    a = np.asarray(arr)
+    h, w = a.shape[:2]
+    nb = a.shape[2] if a.ndim == 3 else 1
     dt = a.dtype.newbyteorder("<")
     if dt.base.str[1:] not in _DTYPE_CODES:
         raise ValueError(f"dtype {arr.dtype} unsupported")
     code = _DTYPE_CODES[dt.base.str[1:]]
-    a = a.astype(dt, copy=False)
     il = interleave.lower()
-    if il == "bsq":
-        cube = a.transpose(2, 0, 1)
-    elif il == "bil":
-        cube = a.transpose(0, 2, 1)
-    elif il == "bip":
-        cube = a
-    else:
-        raise ValueError(f"interleave {interleave!r} unsupported")
+    data = write_raw(a, dt, il)
 
     dx = float(np.hypot(gt[1], gt[2]))
     dy = float(np.hypot(gt[4], gt[5]))
@@ -244,7 +226,7 @@ def format_envi(arr: np.ndarray, gt, srid: int = 0,
     )
     if nodata is not None:
         hdr += f"data ignore value = {float(nodata):.17g}\n"
-    return cube.tobytes(), hdr
+    return data, hdr
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _find_ci
 
@@ -154,16 +155,7 @@ def parse_ers(header_text: str, data: bytes):
     endian = ">" if kv.get("byteorder", "MSBFirst").upper().startswith(
         "MSB") else "<"
     off = int(float(kv.get("headeroffset", "0") or "0"))
-    itemsize = int(code[1])
-    need = w * h * nb * itemsize
-    body = data[off:off + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    flat = np.frombuffer(body, endian + code)
-    arr = flat.reshape(h, nb, w).transpose(0, 2, 1)  # BIL
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(data, endian + code, w, h, nb, "bil", off)
 
     xdim = float(kv.get("rasterinfo.cellinfo.xdimension", "1.0"))
     ydim = float(kv.get("rasterinfo.cellinfo.ydimension", "1.0"))
@@ -258,9 +250,7 @@ def format_ers(arr: np.ndarray, gt=None, nodata=None,
                   '\t\t\tValue\t\t= "Band%d"' % (i + 1),
                   "\t\tBandId End"]
     lines += ["\tRasterInfo End", "DatasetHeader End", ""]
-    data = np.ascontiguousarray(
-        arr.transpose(0, 2, 1)).astype("<" + code, copy=False).tobytes()
-    return "\n".join(lines), data
+    return "\n".join(lines), write_raw(arr, "<" + code, "bil")
 
 
 def scan_ers(spark, path_glob: str, srid: int = 0):

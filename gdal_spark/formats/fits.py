@@ -37,6 +37,7 @@ import os
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 BLOCK = 2880
@@ -119,7 +120,6 @@ def _hdu_arrays(buf: bytes):
         nelem = 1
         for d in dims:
             nelem *= d
-        nbytes = abs(bitpix) // 8 * nelem if naxis else 0
         # tables reserve PCOUNT/GCOUNT extra bytes
         pcount = int(cards.get("PCOUNT", "0"))
         gcount = int(cards.get("GCOUNT", "1"))
@@ -129,18 +129,11 @@ def _hdu_arrays(buf: bytes):
                     and xt in ("", "IMAGE") and bitpix in _BITPIX)
         arr = None
         if is_image:
-            code = _BITPIX[bitpix]
-            body = buf[data_off:data_off + nbytes]
-            if len(body) < nbytes:
-                body = body + b"\0" * (nbytes - len(body))
-            flat = np.frombuffer(body, ">" + code)
             w, h = dims[0], dims[1]
             nb = dims[2] if len(dims) > 2 else 1
-            arr = flat.reshape((nb, h, w))
             # FITS rows are bottom-up
-            arr = arr[:, ::-1, :].transpose(1, 2, 0)
-            arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-            arr = arr.astype(arr.dtype.newbyteorder("="))
+            arr = read_raw(buf, ">" + _BITPIX[bitpix], w, h, nb, "bsq",
+                           data_off, bottom_up=True)
             # unsigned-shift convention folded into the dtype
             bzero = float(cards.get("BZERO", "0") or "0")
             if bitpix == 16 and bzero == 32768.0:
@@ -283,9 +276,7 @@ def format_fits(arr: np.ndarray, gt=None, nodata=None,
     header = b"".join(cards) + b"END".ljust(80)
     header = header.ljust(
         ((len(header) + BLOCK - 1) // BLOCK) * BLOCK, b" ")
-    data = np.ascontiguousarray(
-        arr.transpose(2, 0, 1)[:, ::-1, :]).astype(
-            ">" + code, copy=False).tobytes()
+    data = write_raw(arr, ">" + code, "bsq", bottom_up=True)
     data = data.ljust(((len(data) + BLOCK - 1) // BLOCK) * BLOCK, b"\0")
     return header + data
 

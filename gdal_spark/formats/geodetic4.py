@@ -37,6 +37,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_band, read_raw, write_raw
 from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
 from .rawgrids import IMG_SCHEMA, _file_rows
@@ -75,13 +76,7 @@ def parse_ilwis(mpr_text: str, data: bytes, grf_text: str = ""):
         raise ValueError(f"ILWIS: store type {st!r}")
     endian = ">" if kv.get("mapstore.swapbytes",
                            "No").lower().startswith("y") else "<"
-    itemsize = np.dtype(code).itemsize
-    need = w * h * itemsize
-    body = data[:need] + b"\0" * max(0, need - len(data))
-    arr = np.frombuffer(body, endian + code).reshape(h, w)
-    arr = np.ascontiguousarray(arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(data, endian + code, w, h, 1, "bsq")
     gt = None
     if grf_text:
         gkv = _ini(grf_text)
@@ -123,9 +118,7 @@ def format_ilwis(arr: np.ndarray, gt):
            "[GeoRefCorners]\nCornersOfCorners=Yes\n"
            "MinX=%r\nMinY=%r\nMaxX=%r\nMaxY=%r\n"
            % (w, h, minx, miny, maxx, maxy))
-    data = np.ascontiguousarray(arr).astype("<" + code,
-                                            copy=False).tobytes()
-    return mpr, data, grf
+    return mpr, write_raw(arr, "<" + code), grf
 
 
 def scan_ilwis(spark, path_glob: str, srid: int = 0):
@@ -193,12 +186,9 @@ def parse_ngsgeoid(buf: bytes):
     if not (-90.0 <= slat and slat + nlat * dlat <= 90.0
             and -180.0 <= wlon and wlon + nlon * dlon <= 360.0):
         raise ValueError("NGSGEOID: bounds out of range")
-    need = nlat * nlon * 4
-    body = buf[44:44 + need] + b"\0" * max(0, need - len(buf) + 44)
-    arr = np.frombuffer(body, endian + "f4").reshape(nlat, nlon)
-    arr = np.ascontiguousarray(arr[::-1])  # south-first -> north-up
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    # south-first -> north-up
+    arr = read_raw(buf, endian + "f4", nlon, nlat, 1, "bsq", 44,
+                   bottom_up=True)
     gt = (wlon - dlon / 2.0, dlon, 0.0,
           slat + nlat * dlat - dlat / 2.0, 0.0, -dlat)
     return arr, gt, None, "little" if endian == "<" else "big"
@@ -217,8 +207,7 @@ def format_ngsgeoid(arr: np.ndarray, gt) -> bytes:
     wlon = float(gt[0]) + dlon / 2.0
     slat = float(gt[3]) - h * dlat + dlat / 2.0
     head = struct.pack("<ddddiii", slat, wlon, dlat, dlon, h, w, 1)
-    return head + np.ascontiguousarray(arr[::-1]).astype(
-        "<f4").tobytes()
+    return head + write_raw(arr, "<f4", bottom_up=True)
 
 
 def parse_loslas(buf: bytes):
@@ -233,15 +222,9 @@ def parse_loslas(buf: bytes):
     min_lon, dlon, min_lat, dlat, _ang = struct.unpack_from(
         "<fffff", buf, 76)
     rec = w * 4 + 4
-    arr = np.zeros((h, w), np.float32)
-    for i in range(h):
-        # records start after the header record; rows south-first;
-        # each record carries a 4-byte prefix
-        off = (i + 1) * rec + 4
-        row = buf[off:off + w * 4]
-        if len(row) < w * 4:
-            row = row + b"\0" * (w * 4 - len(row))
-        arr[h - 1 - i] = np.frombuffer(row, "<f4")
+    # records start after the header record; rows south-first; each
+    # record carries a 4-byte prefix
+    arr = read_band(buf, "<f4", w, h, h * rec + 4, 4, -rec)
     gt = (min_lon - dlon * 0.5, float(dlon), 0.0,
           min_lat + (h - 0.5) * dlat, 0.0, -float(dlat))
     return arr, gt, None, magic
@@ -270,12 +253,9 @@ def format_loslas(arr: np.ndarray, gt, kind: str = "NADGRD") -> bytes:
     struct.pack_into("<iii", head, 64, w, h, 1)
     struct.pack_into("<fffff", head, 76, min_lon, dlon, min_lat,
                      dlat, 0.0)
-    out = bytearray(head)
-    for i in range(h):
-        out += b"\0\0\0\0"
-        out += np.ascontiguousarray(arr[h - 1 - i]).astype(
-            "<f4").tobytes()
-    return bytes(out)
+    # a zero 4-byte prefix per record: a 0.0 column before each row
+    return bytes(head) + write_raw(np.pad(arr, ((0, 0), (1, 0))), "<f4",
+                                   bottom_up=True)
 
 
 def parse_sigdem(buf: bytes):
@@ -334,8 +314,7 @@ def format_sigdem(arr: np.ndarray, gt, scale: float = 1000.0,
     struct.pack_into(">dd", head, 116, float(gt[1]), float(-gt[5]))
     quant = np.where(np.isfinite(arr),
                      np.rint(arr * scale), SIGDEM_NODATA)
-    data = np.ascontiguousarray(quant[::-1]).astype(">i4").tobytes()
-    return bytes(head) + data
+    return bytes(head) + write_raw(quant, ">i4", bottom_up=True)
 
 
 def scan_ngsgeoid(spark, path_glob: str, srid: int = 4326):

@@ -36,6 +36,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 NODATA = 1.701410009187828e38
@@ -78,13 +79,12 @@ def parse_gsg(buf: bytes):
                         dtype=np.float64)
         if vals.size != nx * ny:
             raise ValueError("GSAG: truncated value section")
-        arr = vals.reshape(ny, nx)[::-1, :]
+        arr = np.ascontiguousarray(vals.reshape(ny, nx)[::-1, :])
     elif magic == b"DSBB":
         nx, ny = struct.unpack("<hh", buf[4:8])
         min_x, max_x, min_y, max_y = struct.unpack("<dddd", buf[8:40])
         # buf[40:56] = minZ/maxZ
-        arr = np.frombuffer(buf, "<f4", count=nx * ny,
-                            offset=56).reshape(ny, nx)[::-1, :]
+        arr = read_raw(buf, "<f4", nx, ny, 1, "bsq", 56, bottom_up=True)
     elif magic == b"DSRB":
         off = 4
         size = struct.unpack("<i", buf[off:off + 4])[0]
@@ -108,14 +108,12 @@ def parse_gsg(buf: bytes):
         tag, dsize = struct.unpack("<ii", buf[off:off + 8])
         if tag != _DATA_TAG:
             raise ValueError("GS7BG: GRID section not followed by DATA")
-        arr = np.frombuffer(buf, "<f8", count=nx * ny,
-                            offset=off + 8).reshape(ny, nx)[::-1, :]
+        arr = read_raw(buf, "<f8", nx, ny, 1, "bsq", off + 8,
+                       bottom_up=True)
     else:
         raise ValueError("not a Surfer grid (DSAA/DSBB/DSRB)")
     if nx < 2 or ny < 2:
         raise ValueError("Surfer grids need >= 2 nodes per axis")
-    arr = np.ascontiguousarray(arr)
-    arr = arr.astype(arr.dtype.newbyteorder("="))
     return arr, _georef(nx, ny, min_x, max_x, min_y, max_y)
 
 
@@ -150,8 +148,7 @@ def format_gsbg(arr: np.ndarray, gt) -> bytes:
     min_x, max_x, min_y, max_y, z0, z1 = _bounds(arr, gt)
     head = b"DSBB" + struct.pack("<hh", w, h) + struct.pack(
         "<dddddd", min_x, max_x, min_y, max_y, z0, z1)
-    return head + np.ascontiguousarray(
-        arr[::-1, :]).astype("<f4").tobytes()
+    return head + write_raw(arr, "<f4", bottom_up=True)
 
 
 def format_gs7bg(arr: np.ndarray, gt) -> bytes:
@@ -167,7 +164,7 @@ def format_gs7bg(arr: np.ndarray, gt) -> bytes:
            struct.pack("<dddddddd", min_x, min_y, dx, dy, z0, z1,
                        0.0, NODATA),
            struct.pack("<ii", _DATA_TAG, 8 * w * h),
-           np.ascontiguousarray(arr[::-1, :]).astype("<f8").tobytes()]
+           write_raw(arr, "<f8", bottom_up=True)]
     return b"".join(out)
 
 

@@ -31,6 +31,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 NODATA = -88.8888
@@ -46,14 +47,13 @@ def parse_gtx(buf: bytes):
         raise ValueError(f"GTX: invalid dimensions {cols}x{rows}")
     n = rows * cols
     if len(buf) - 40 >= 8 * n:
-        arr = np.frombuffer(buf, ">f8", count=n, offset=40)
+        dtype = ">f8"
     elif len(buf) - 40 >= 4 * n:
-        arr = np.frombuffer(buf, ">f4", count=n, offset=40)
+        dtype = ">f4"
     else:
         raise ValueError("GTX: truncated data section")
     # stored bottom-up -> north-up
-    arr = np.ascontiguousarray(arr.reshape(rows, cols)[::-1, :])
-    arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(buf, dtype, cols, rows, 1, "bsq", 40, bottom_up=True)
     gt = (lon0 - dlon * 0.5, dlon, 0.0,
           lat0 + dlat * (rows - 1) + dlat * 0.5, 0.0, -dlat)
     return arr, gt
@@ -72,8 +72,7 @@ def format_gtx(arr: np.ndarray, gt) -> bytes:
     lat0 = gt[3] + (h - 0.5) * gt[5]
     dtype = ">f8" if arr.dtype == np.float64 else ">f4"
     header = struct.pack(">ddddii", lat0, lon0, -gt[5], gt[1], h, w)
-    return header + np.ascontiguousarray(
-        arr[::-1, :]).astype(dtype).tobytes()
+    return header + write_raw(arr, dtype, bottom_up=True)
 
 
 def scan_gtx(spark, path_glob: str):

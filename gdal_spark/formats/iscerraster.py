@@ -26,6 +26,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
 from .rawgrids import IMG_SCHEMA, _file_rows
@@ -66,28 +67,17 @@ def parse_isce(data: bytes, xml_text: str):
     code = _ISCE_TYPES.get(kv["DATA_TYPE"].upper())
     if code is None:
         raise ValueError(f"ISCE: DATA_TYPE {kv['DATA_TYPE']!r}")
-    complex_pair = code.startswith("c")
-    base = code[1:] if complex_pair else code
     endian = ">" if kv.get("BYTE_ORDER", "l").lower().startswith(
         "b") else "<"
     scheme = kv.get("SCHEME", "BIL").upper()
-    itemsize = np.dtype(base).itemsize * (2 if complex_pair else 1)
-    need = w * h * nb * itemsize
-    body = data[:need] + b"\0" * max(0, need - len(data))
-    flat = np.frombuffer(body, endian + base)
-    if complex_pair:
-        flat = flat[0::2] + 1j * flat[1::2]
-    if scheme == "BIL":
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    elif scheme == "BIP":
-        arr = flat.reshape(h, w, nb)
-    elif scheme == "BSQ":
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    else:
+    if scheme not in ("BIL", "BIP", "BSQ"):
         raise ValueError(f"ISCE: SCHEME {scheme!r}")
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    if code.startswith("c"):  # (real, imaginary) pairs of the base type
+        base = endian + code[1:]
+        arr = read_raw(data, [("re", base), ("im", base)], w, h, nb, scheme)
+        arr = arr["re"] + 1j * arr["im"]
+    else:
+        arr = read_raw(data, endian + code, w, h, nb, scheme)
     return arr, None, None, kv.get("IMAGE_TYPE", "")
 
 
@@ -111,9 +101,7 @@ def format_isce(arr: np.ndarray):
                    f"        <value>{v}</value>\n"
                    f"    </property>")
     xml.append("</imageFile>\n")
-    data = np.ascontiguousarray(
-        arr.transpose(0, 2, 1)).astype("<" + code, copy=False).tobytes()
-    return data, "\n".join(xml)
+    return write_raw(arr, "<" + code, "bil"), "\n".join(xml)
 
 
 def scan_isce(spark, path_glob: str, srid: int = 0):
@@ -170,19 +158,8 @@ def parse_rraster(grd_text: str, gri: bytes):
     endian = ">" if kv.get("byteorder", "little").lower().startswith(
         "big") else "<"
     order = kv.get("bandorder", "BIL").upper()
-    itemsize = np.dtype(code).itemsize
-    need = w * h * nb * itemsize
-    body = gri[:need] + b"\0" * max(0, need - len(gri))
-    flat = np.frombuffer(body, endian + code)
-    if order == "BIL":
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    elif order == "BIP":
-        arr = flat.reshape(h, w, nb)
-    else:  # BSQ
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(gri, endian + code, w, h, nb,
+                   order if order in ("BIL", "BIP") else "BSQ")
     gt = None
     if all(k in kv for k in ("xmin", "xmax", "ymin", "ymax")):
         xmin = float(kv["xmin"])
@@ -239,9 +216,7 @@ def format_rraster(arr: np.ndarray, gt, nodata=None,
         f"layername={layername}",
         "",
     ]
-    data = np.ascontiguousarray(
-        arr.transpose(0, 2, 1)).astype("<" + code, copy=False).tobytes()
-    return "\n".join(lines), data
+    return "\n".join(lines), write_raw(arr, "<" + code, "bil")
 
 
 def scan_rraster(spark, path_glob: str, srid: int = 0):

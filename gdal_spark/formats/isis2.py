@@ -38,6 +38,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _find_ci, parse_label
 
@@ -121,18 +122,7 @@ def parse_isis2(buf: bytes, label_path: str = ""):
     else:
         raise ValueError(f"ISIS2: CORE_ITEM_BYTES {itype} unsupported")
 
-    need = ns * nl * nb * itype
-    body = data[skip:skip + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    flat = np.frombuffer(body, endian + code)
-    if org == "BSQ":
-        arr = flat.reshape(nb, nl, ns).transpose(1, 2, 0)
-    else:  # BIP
-        arr = flat.reshape(nl, ns, nb)
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(data, endian + code, ns, nl, nb, org, skip)
 
     pfx = "QUBE.IMAGE_MAP_PROJECTION."
     gt = None
@@ -224,8 +214,7 @@ def format_isis2(arr: np.ndarray, gt=None, target: str = "MARS") -> bytes:
             break
         lr = lr_new
     label = text.ljust(lr * record_bytes, " ").encode("ascii")
-    data = np.ascontiguousarray(
-        arr.transpose(2, 0, 1)).astype(">" + code, copy=False).tobytes()
+    data = write_raw(arr, ">" + code, "bsq")
     pad = (-len(data)) % record_bytes
     return label + data + b" " * pad
 

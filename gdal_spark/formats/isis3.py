@@ -38,6 +38,7 @@ import os
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _atof, _clean, _find_ci, _kw, parse_label
 
@@ -111,8 +112,8 @@ def parse_isis3(label_bytes: bytes, label_path: str = "",
             else:
                 with open(data_path, "rb") as f:
                     file_bytes = f.read()
-        item = dtype.itemsize
         if fmt.upper() == "TILE":
+            item = dtype.itemsize
             tw = int(_atof(_kw(kv, "IsisCube.Core.TileSamples",
                                str(w))))
             th = int(_atof(_kw(kv, "IsisCube.Core.TileLines", str(h))))
@@ -137,19 +138,10 @@ def parse_isis3(label_bytes: bytes, label_path: str = "",
                         plane[ty * th:(ty + 1) * th,
                               tx * tw:(tx + 1) * tw] = tile
                 planes.append(plane[:h, :w])
+            arr = planes[0] if bands == 1 else np.stack(planes, axis=-1)
         else:  # BandSequential
-            need = start + w * h * bands * item
-            data = file_bytes
-            if len(data) < need:
-                data = data + b"\x00" * (need - len(data))
-            raw = np.frombuffer(data, dtype=dtype, count=w * h * bands,
-                                offset=start)
-            planes = [
-                raw[b * w * h:(b + 1) * w * h]
-                .reshape(h, w).astype(np.float64)
-                for b in range(bands)
-            ]
-        arr = planes[0] if bands == 1 else np.stack(planes, axis=-1)
+            arr = read_raw(file_bytes, dtype, w, h, bands, "bsq",
+                           start).astype(np.float64)
 
     gt = (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)
     ulx = _kw(kv, "IsisCube.Mapping.UpperLeftCornerX")
@@ -191,9 +183,7 @@ def format_isis3(arr: np.ndarray, gt, target: str = "Mars",
         raise ValueError("ISIS3 writer requires a north-up grid")
     np_t = {"UnsignedByte": "u1", "SignedWord": "<i2",
             "UnsignedWord": "<u2", "Real": "<f4"}[ptype]
-    body = b"".join(
-        a[:, :, b].astype(np_t).tobytes() for b in range(bands)
-    )
+    body = write_raw(a, np_t, "bsq")
     label = "\n".join([
         "Object = IsisCube",
         "  Object = Core",

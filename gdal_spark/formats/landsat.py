@@ -32,6 +32,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
 from .rawgrids import IMG_SCHEMA, _file_rows
@@ -57,11 +58,7 @@ def parse_ndf(header_text: str, band_files: list[bytes]):
         raise ValueError("NDF: bad dimensions")
     if kv.get("PIXEL_FORMAT", "BYTE").upper() != "BYTE":
         raise ValueError("NDF: only BYTE products supported")
-    bands = []
-    for data in band_files:
-        need = w * h
-        body = data[:need] + b"\0" * max(0, need - len(data))
-        bands.append(np.frombuffer(body, np.uint8).reshape(h, w))
+    bands = [read_raw(data, "u1", w, h, 1, "bsq") for data in band_files]
     if not bands:
         raise ValueError("NDF: no band files")
     arr = bands[0] if len(bands) == 1 else np.stack(bands, axis=-1)
@@ -163,12 +160,8 @@ def parse_fast(header_text: str, band_files: list[bytes]):
     code = {8: "u1", 16: "u2"}.get(bpp)
     if code is None:
         raise ValueError(f"FAST: {bpp} bits per pixel unsupported")
-    itemsize = np.dtype(code).itemsize
-    bands = []
-    for data in band_files:
-        need = w * h * itemsize
-        body = data[:need] + b"\0" * max(0, need - len(data))
-        bands.append(np.frombuffer(body, "<" + code).reshape(h, w))
+    bands = [read_raw(data, "<" + code, w, h, 1, "bsq")
+             for data in band_files]
     if not bands:
         raise ValueError("FAST: no band files")
     arr = bands[0] if len(bands) == 1 else np.stack(bands, axis=-1)
@@ -236,8 +229,7 @@ def format_ndf(arr: np.ndarray, gt, band_name: str = "BAND"):
     for i in range(nb):
         lines.append(f"BAND{i + 1}_FILENAME={band_name}{i + 1}.I8;")
     lines.append("END_OF_HDR;")
-    bands = [np.ascontiguousarray(arr[:, :, i]).tobytes()
-             for i in range(nb)]
+    bands = [write_raw(arr[:, :, i], "u1") for i in range(nb)]
     return "\n".join(lines) + "\n", bands
 
 

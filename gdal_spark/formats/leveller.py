@@ -35,6 +35,7 @@ import struct
 import numpy as np
 import pandas as pd
 
+from ._raw import read_raw, write_raw
 from ._util import raster_row, schema_columns, write_files
 
 OUT_SCHEMA = (
@@ -124,11 +125,9 @@ def parse_leveller(data: bytes):
     if body is None or len(body) != w * h * 4:
         raise ValueError("Leveller: cannot locate elevation data")
     if version < 6:
-        arr = np.frombuffer(body, dtype="<i4").reshape(h, w) / 65536.0
+        arr = read_raw(body, "<i4", w, h, 1, "bsq") / 65536.0
     else:
-        arr = np.frombuffer(body, dtype="<f4").reshape(h, w).astype(
-            np.float64
-        )
+        arr = read_raw(body, "<f4", w, h, 1, "bsq").astype(np.float64)
     gt = (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)
     scale, offset = 1.0, 0.0
     wkt = None
@@ -189,7 +188,7 @@ def format_leveller(arr: np.ndarray, gt, scale: float = 1.0,
     out += _tag("coordsys_em_scale", struct.pack("<d", scale))
     out += _tag("coordsys_em_base", struct.pack("<d", offset))
     out += _tag("coordsys_em_units", struct.pack("<i", 9001))
-    out += _tag("hf_data", a.astype("<f4").tobytes())
+    out += _tag("hf_data", write_raw(a, "<f4"))
     return bytes(out)
 
 

@@ -47,6 +47,7 @@ import os
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 _PVTYPE = {
@@ -269,70 +270,41 @@ def _read_pixels(buf, off, h):
 
     full = np.zeros((nbpc * bh, nbpr * bw, nb),
                     np.dtype(code))
+    layout = {"P": "bip", "R": "bil"}.get(h["imode"], "bsq")
 
-    def read_block_band(pos):
-        raw = buf[pos:pos + block_band_bytes]
-        if len(raw) < block_band_bytes:
-            raw = raw + b"\0" * (block_band_bytes - len(raw))
-        if h["nbpp"] == 1:
-            bits = np.unpackbits(np.frombuffer(raw, np.uint8))
-            return bits[:bw * bh].reshape(bh, bw)
-        return np.frombuffer(raw, ">" + code).reshape(bh, bw)
+    def read_block(pos, nbands):
+        """nbands bands of one block at pos -> (bh, bw, nbands)."""
+        if h["nbpp"] == 1:  # bit-packed bands, one after another
+            bits = [np.unpackbits(np.frombuffer(
+                buf[p:p + block_band_bytes].ljust(block_band_bytes, b"\0"),
+                np.uint8))[:bw * bh] for p in range(
+                    pos, pos + nbands * block_band_bytes, block_band_bytes)]
+            return np.stack(bits, axis=-1).reshape(bh, bw, nbands)
+        return read_raw(buf, ">" + code, bw, bh, nbands, layout,
+                        pos).reshape(bh, bw, nbands)
 
-    bi = 0
+    # B/R/P (or one band): each block holds every band, interleaved
+    # per IMODE; S: all blocks of band 1, then all of band 2, ...
     if h["imode"] in ("B", "R", "P") or nb == 1:
-        for by in range(nbpc):
-            for bx in range(nbpr):
-                if block_offsets is not None:
-                    boff = block_offsets[bi]
-                    if boff == 0xFFFFFFFF:
-                        bi += 1
-                        continue
-                    pos = data_off + boff
-                else:
-                    pos = data_off + bi * block_band_bytes * nb
-                if h["imode"] == "P" and nb > 1:
-                    raw = buf[pos:pos + block_band_bytes * nb]
-                    if len(raw) < block_band_bytes * nb:
-                        raw += b"\0" * (block_band_bytes * nb
-                                        - len(raw))
-                    blk = np.frombuffer(raw, ">" + code) \
-                        .reshape(bh, bw, nb)
-                    full[by * bh:(by + 1) * bh,
-                         bx * bw:(bx + 1) * bw, :] = blk
-                elif h["imode"] == "R" and nb > 1:
-                    raw = buf[pos:pos + block_band_bytes * nb]
-                    if len(raw) < block_band_bytes * nb:
-                        raw += b"\0" * (block_band_bytes * nb
-                                        - len(raw))
-                    blk = np.frombuffer(raw, ">" + code) \
-                        .reshape(bh, nb, bw).transpose(0, 2, 1)
-                    full[by * bh:(by + 1) * bh,
-                         bx * bw:(bx + 1) * bw, :] = blk
-                else:  # B: band-interleaved within the block
-                    for b in range(nb):
-                        blk = read_block_band(pos
-                                              + b * block_band_bytes)
-                        full[by * bh:(by + 1) * bh,
-                             bx * bw:(bx + 1) * bw, b] = blk
-                bi += 1
+        groups = [(slice(None), nb)]
     elif h["imode"] == "S":
-        for b in range(nb):
-            for by in range(nbpc):
-                for bx in range(nbpr):
-                    idx = b * nblocks + by * nbpr + bx
-                    if block_offsets is not None:
-                        boff = block_offsets[idx]
-                        if boff == 0xFFFFFFFF:
-                            continue
-                        pos = data_off + boff
-                    else:
-                        pos = data_off + idx * block_band_bytes
-                    full[by * bh:(by + 1) * bh,
-                         bx * bw:(bx + 1) * bw, b] = \
-                        read_block_band(pos)
+        groups = [(slice(b, b + 1), 1) for b in range(nb)]
     else:
         raise ValueError(f"NITF: IMODE {h['imode']!r} unsupported")
+    bi = 0
+    for bands, n in groups:
+        for by in range(nbpc):
+            for bx in range(nbpr):
+                if block_offsets is None:
+                    pos = data_off + bi * block_band_bytes * n
+                elif block_offsets[bi] == 0xFFFFFFFF:
+                    bi += 1
+                    continue
+                else:
+                    pos = data_off + block_offsets[bi]
+                bi += 1
+                full[by * bh:(by + 1) * bh,
+                     bx * bw:(bx + 1) * bw, bands] = read_block(pos, n)
     arr = full[:h["nrows"], :h["ncols"], :]
     return np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
 
@@ -441,12 +413,7 @@ def format_nitf(arr: np.ndarray, gt=None) -> bytes:
     sub += b"00000"               # UDIDL
     sub += b"00000"               # IXSHDL
 
-    if nb > 1:
-        data = np.ascontiguousarray(arr).astype(
-            ">" + code, copy=False).tobytes()  # pixel interleaved
-    else:
-        data = np.ascontiguousarray(arr[:, :, 0]).astype(
-            ">" + code, copy=False).tobytes()
+    data = write_raw(arr, ">" + code, "bip")  # pixel interleaved
 
     head = bytearray()
     head += b"NITF02.10"

@@ -51,6 +51,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_band, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 _SHIFT_BANDS = 4
@@ -115,14 +116,12 @@ def parse_ntv2(buf: bytes):
             raise ValueError(
                 f"NTv2: GS_COUNT {gs_count} != {w}x{h} grid")
         data_off = off + 11 * recsize
-        raw = np.frombuffer(
-            buf, bo + "f4", count=gs_count * (recsize // 4),
-            offset=data_off,
-        ).reshape(gs_count, recsize // 4)[:, :nbands]
         # stored: first node at the SE corner, east->west scanlines,
-        # south->north rows -> flip both axes for north-up/west-east
-        arr = np.ascontiguousarray(
-            raw.reshape(h, w, nbands)[::-1, ::-1, :]).astype(np.float32)
+        # south->north rows -> walk back from the last node for
+        # north-up/west-east
+        arr = read_band(buf, bo + "f4", w, h,
+                        data_off + (gs_count - 1) * recsize, -recsize,
+                        -w * recsize, nbands, 4)
         grids.append({
             "name": _sval(g[0]), "parent": _sval(g[1]),
             "created": _sval(g[2]), "updated": _sval(g[3]),
@@ -195,10 +194,7 @@ def format_ntv2(grids, meta: dict | None = None,
             drec("LAT_INC", lat_inc), drec("LONG_INC", long_inc),
             irec("GS_COUNT", h * w),
         ]
-        stored = np.ascontiguousarray(arr[::-1, ::-1, :])
-        if bo == ">":
-            stored = stored.astype(">f4")
-        out.append(stored.tobytes())
+        out.append(write_raw(arr[::-1, ::-1, :], bo + "f4", "bip"))
     out.append(b"END " + b"\x00" * 12)
     return b"".join(out)
 

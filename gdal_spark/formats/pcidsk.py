@@ -48,6 +48,7 @@ import os
 
 import numpy as np
 
+from ._raw import read_band, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 SYS_BLOCK_SIZE = 8192
@@ -180,8 +181,7 @@ class _Pix:
                     pih = self._image_header(prev)
                     ppt = self._pixel_type(prev, pih)
                     off += np.dtype(_DTYPES[ppt]).itemsize * w * h
-            arr = np.frombuffer(self.buf, dt, count=w * h, offset=off)
-            return arr.reshape(h, w).astype(dt.newbyteorder("="))
+            return read_band(self.buf, dt, w, h, off)
         if self.interleave == "PIXEL":
             sizes = []
             for c in range(self.nchan):
@@ -193,15 +193,8 @@ class _Pix:
             if line % 512:
                 line += 512 - line % 512
             base = (self.image_start - 1) * 512
-            coff = sum(sizes[:ch])
-            out = np.empty((h, w), dtype=dt.newbyteorder("="))
-            for row in range(h):
-                lo = base + row * line
-                raw = np.frombuffer(
-                    self.buf[lo + coff:lo + coff + group * w],
-                    np.uint8).reshape(w, group)
-                out[row] = raw[:, :dt.itemsize].copy().view(dt)[:, 0]
-            return out
+            return read_band(self.buf, dt, w, h, base + sum(sizes[:ch]),
+                             group, line)
         if fname.startswith("/SIS="):
             image = int(fname[5:].split()[0])
             return self._read_tiled(image)
@@ -496,8 +489,7 @@ def format_pcidsk(bands, gt=None, geosys="METRE") -> bytes:
         seg[d + 2526 + 26 * k:d + 2526 + 26 * (k + 1)] = \
             f"{v:26.18E}".encode()
 
-    data = b"".join(
-        b.astype(b.dtype.newbyteorder("<")).tobytes() for b in bands)
+    data = b"".join(write_raw(b, b.dtype.newbyteorder("<")) for b in bands)
     pad = (-len(data)) % 512
     return bytes(fh + ihs + segptr + seg) + data + b"\x00" * pad
 

@@ -46,6 +46,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_band, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 OUT_SCHEMA = (
@@ -408,24 +409,9 @@ def parse_pds(label_bytes: bytes, label_path: str = "",
     else:
         with open(image_path, "rb") as f:
             data = f.read()
-    need = skip + band_off * (bands - 1) + line_off * (rows - 1) \
-        + pix_off * (cols - 1) + item
-    if len(data) < need:
-        # truncated products read as zeros past EOF, like RawRasterBand
-        data = data + b"\x00" * (need - len(data))
-    buf = np.frombuffer(data, dtype=np.uint8)
-    planes = []
-    for b in range(bands):
-        base = skip + band_off * b
-        idx = (base
-               + np.arange(rows)[:, None] * line_off
-               + np.arange(cols)[None, :] * pix_off)
-        cells = buf[idx[..., None] + np.arange(item)[None, None, :]]
-        planes.append(
-            cells.reshape(rows, cols, item).view(dtype)[..., 0]
-            .astype(np.float64)
-        )
-    arr = planes[0] if bands == 1 else np.stack(planes, axis=-1)
+    # truncated products read as zeros past EOF, like RawRasterBand
+    arr = read_band(data, dtype, cols, rows, skip, pix_off, line_off,
+                    bands, band_off).astype(np.float64)
 
     gt, proj = _parse_srs(kv, prefix, sample_offset_shift,
                           line_offset_shift, sample_offset_mult,
@@ -521,7 +507,7 @@ def format_pds(arr: np.ndarray, gt, nodata: float | None = None,
     st, bits = _DTYPE_OUT[dtype]
     item = np.dtype(dtype).itemsize
     record_bytes = w * item
-    body = a.astype(">" + dtype).tobytes()
+    body = write_raw(a, ">" + dtype)
     xdim = float(gt[1])
     ydim = float(gt[5])
     # invert: ulx = (soff + 0.5) * xdim * -1 ; uly = (loff+0.5)*-ydim

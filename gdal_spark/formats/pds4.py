@@ -31,6 +31,7 @@ import xml.etree.ElementTree as ET
 
 import numpy as np
 
+from ._raw import read_band
 from ._util import glob_paths, local_path, raster_row, scan_files
 
 _DTYPES = {
@@ -136,27 +137,20 @@ def read_pds4(xml_path: str):
     bands = []
     nodata = None
     for a in arrays:
+        # the stored axes are row-major, last fastest: each named
+        # Band/Line/Sample axis takes its byte stride from its place
         dims = [n for _, n in a["axes"]]
-        names = [str(nm) for nm, _ in a["axes"]]
-        count = int(np.prod(dims))
-        raw = np.frombuffer(payload, a["dtype"], count=count,
-                            offset=a["offset"]).reshape(dims)
-        # normalize axis order to (Band, Line, Sample)
-        order = []
-        for want in ("Band", "Line", "Sample"):
-            if want in names:
-                order.append(names.index(want))
-        rest = [i for i in range(len(names)) if i not in order]
-        raw = np.transpose(raw, order + rest)
-        if "Band" not in names:
-            raw = raw[None, ...]
-        nb = raw.shape[0]
+        step = [a["dtype"].itemsize * int(np.prod(dims[i + 1:]))
+                for i in range(len(dims))]
+        axes = {str(nm): (n, s) for (nm, n), s in zip(a["axes"], step)}
+        (w, pixel), (h, line) = axes["Sample"], axes["Line"]
+        nb, band = axes.get("Band", (1, 0))
         for b in range(nb):
-            arr = raw[b].astype(
-                a["dtype"].newbyteorder("="), copy=True)
+            arr = read_band(payload, a["dtype"], w, h,
+                            a["offset"] + b * band, pixel, line)
             if a["scale"] != 1 or a["off"] != 0:
                 arr = arr * a["scale"] + a["off"]
-            bands.append(np.ascontiguousarray(arr))
+            bands.append(arr)
         nodata = a["nodata"] if nodata is None else nodata
     gt = geo.get("gt", (0.0, 1.0, 0.0, 0.0, 0.0, -1.0))
     return bands, gt, {"nodata": nodata, "file_name": file_name}

@@ -49,6 +49,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_band, read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 from .pds import _find_ci
 
@@ -108,19 +109,9 @@ def parse_roipac(data: bytes, rsc_text: str, ext: str):
     if ext not in _ROIPAC_EXT:
         raise ValueError(f"ROI_PAC: unknown extension .{ext}")
     code, nb, inter = _ROIPAC_EXT[ext]
-    itemsize = np.dtype(code).itemsize
-    need = w * h * nb * itemsize
-    body = data[:need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    flat = np.frombuffer(body, "<" + code)
-    if nb == 1:
-        arr = flat.reshape(h, w)
-    elif inter == "pixel":
-        arr = flat.reshape(h, w, nb)
-    else:  # line interleave (RMG)
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    arr = np.ascontiguousarray(arr)
+    # line interleave = RMG
+    arr = read_raw(data, "<" + code, w, h, nb,
+                   "bip" if inter == "pixel" else "bil")
     gt = None
     if all(k in kv for k in ("X_FIRST", "X_STEP", "Y_FIRST", "Y_STEP")):
         gt = (float(kv["X_FIRST"]), float(kv["X_STEP"]), 0.0,
@@ -147,9 +138,7 @@ def format_roipac(arr: np.ndarray, gt=None,
                   "%-40s %s" % ("PROJECTION", projection),
                   "%-40s %s" % ("DATUM", datum)]
     code = arr.dtype.str.lstrip("<>=|")
-    data = np.ascontiguousarray(arr).astype("<" + code,
-                                            copy=False).tobytes()
-    return data, "\n".join(lines) + "\n"
+    return write_raw(arr, "<" + code), "\n".join(lines) + "\n"
 
 
 def scan_roipac(spark, path_glob: str, srid: int = 0):
@@ -216,14 +205,7 @@ def parse_byn(buf: bytes):
     h = int((n - s + 1.0) / dla + 1.0)
     code = "i2" if sizeof == 2 else "i4"
     endian = "<" if byteorder == 1 else ">"
-    need = w * h * sizeof
-    body = buf[80:80 + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    arr = np.frombuffer(body, endian + code).reshape(h, w)
-    arr = np.ascontiguousarray(arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(buf, endian + code, w, h, 1, "bsq", 80)
     gt = ((w_ - dlo / 2.0) / 3600.0, dlo / 3600.0, 0.0,
           (n + dla / 2.0) / 3600.0, 0.0, -dla / 3600.0)
     nodata = 32767.0 if sizeof == 2 else 9999.0 * (factor or 1.0)
@@ -257,8 +239,7 @@ def format_byn(arr: np.ndarray, gt, factor: float = 1.0) -> bytes:
     struct.pack_into("<d", head, 24, float(factor))
     struct.pack_into("<h", head, 32, arr.dtype.itemsize)
     struct.pack_into("<hh", head, 48, 1, 0)
-    return bytes(head) + np.ascontiguousarray(arr).astype(
-        "<" + code, copy=False).tobytes()
+    return bytes(head) + write_raw(arr, "<" + code)
 
 
 def scan_byn(spark, path_glob: str, srid: int = 4326):
@@ -323,28 +304,17 @@ def parse_lan(buf: bytes):
         code, packed = "i2", False
     else:
         raise ValueError(f"LAN: unsupported pixel type {ptype}")
-    itemsize = np.dtype(code).itemsize
     if packed:
+        # two 4-bit pixels a byte, high nibble first: unpack the BIL
+        # rows to one byte a pixel
         row_bytes = (w + 1) // 2
-    else:
-        row_bytes = w * itemsize
-    need = row_bytes * h * nbands
-    body = buf[128:128 + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    rows = np.frombuffer(body, np.uint8).reshape(h * nbands, row_bytes)
-    if packed:
+        rows = read_band(buf, "u1", row_bytes, h * nbands, 128)
         nib = np.empty((h * nbands, 2 * row_bytes), np.uint8)
         nib[:, 0::2] = rows >> 4
         nib[:, 1::2] = rows & 0x0F
-        planes = nib[:, :w]
+        arr = read_raw(nib[:, :w].tobytes(), code, w, h, nbands, "bil")
     else:
-        planes = np.ascontiguousarray(rows).reshape(-1).view(
-            endian + code).reshape(h * nbands, w)
-    arr = planes.reshape(h, nbands, w).transpose(0, 2, 1)  # BIL
-    arr = np.ascontiguousarray(arr[:, :, 0] if nbands == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+        arr = read_raw(buf, endian + code, w, h, nbands, "bil", 128)
     proj = struct.unpack_from(endian + "h", buf, 88)[0]
     return arr, gt, None, f"proj_code={proj}"
 
@@ -368,9 +338,7 @@ def format_lan(arr: np.ndarray, gt=None) -> bytes:
         struct.pack_into("<ffff", head, 112,
                          gt[0] + gt[1] * 0.5, gt[3] + gt[5] * 0.5,
                          gt[1], -gt[5])
-    data = np.ascontiguousarray(
-        arr.transpose(0, 2, 1)).astype("<" + code, copy=False).tobytes()
-    return bytes(head) + data
+    return bytes(head) + write_raw(arr, "<" + code, "bil")
 
 
 def scan_lan(spark, path_glob: str, srid: int = 0):
@@ -416,12 +384,7 @@ def parse_snodas(hdr_text: str, data: bytes):
     miny = float(kv["Minimum y-axis coordinate"])
     maxy = float(kv["Maximum y-axis coordinate"])
     nodata = float(kv.get("No data value", "-9999"))
-    need = w * h * 2
-    body = data[:need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    arr = np.ascontiguousarray(
-        np.frombuffer(body, ">i2").reshape(h, w)).astype(np.int16)
+    arr = read_raw(data, ">i2", w, h, 1, "bsq")
     gt = (minx, (maxx - minx) / w, 0.0, maxy, 0.0, -(maxy - miny) / h)
     meta = "|".join([kv.get("Description", ""),
                      kv.get("Data units", "")])
@@ -456,8 +419,7 @@ def format_snodas(arr: np.ndarray, gt, nodata: float = -9999.0):
         "Horizontal datum: WGS84",
         "",
     ]
-    return "\n".join(lines), np.ascontiguousarray(arr).astype(
-        ">i2").tobytes()
+    return "\n".join(lines), write_raw(arr, ">i2")
 
 
 def scan_snodas(spark, path_glob: str, srid: int = 4326):
@@ -523,13 +485,7 @@ def parse_lcp(buf: bytes):
         idx += [5, 6, 7]
     if ground:
         idx += [8, 9]
-    nb = len(idx)
-    need = w * h * nb * 2
-    body = buf[7316:7316 + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    arr = np.frombuffer(body, "<i2").reshape(h, w, nb)
-    arr = np.ascontiguousarray(arr)
+    arr = read_raw(buf, "<i2", w, h, len(idx), "bip", 7316)
     gt = (west, cellx, 0.0, north, 0.0, -celly)
     bandmeta = []
     for i in idx:
@@ -583,8 +539,7 @@ def format_lcp(arr: np.ndarray, gt, latitude: int = 0) -> bytes:
         band = arr[:, :, j]
         struct.pack_into("<iii", head, 44 + 412 * i,
                          int(band.min()), int(band.max()), -1)
-    return bytes(head) + np.ascontiguousarray(arr).astype(
-        "<i2", copy=False).tobytes()
+    return bytes(head) + write_raw(arr, "<i2", "bip")
 
 
 def scan_lcp(spark, path_glob: str, srid: int = 0):

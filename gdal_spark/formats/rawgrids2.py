@@ -47,6 +47,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_band, read_raw, write_raw
 from ._util import glob_paths, scan_files, write_files
 from .pds import _find_ci
 from .rawgrids import IMG_SCHEMA, _file_rows
@@ -113,33 +114,24 @@ def parse_mff(hdr_text: str, band_files: list[tuple[str, bytes]]):
         if code is None:
             raise ValueError(f"MFF: unknown band extension {ext!r}")
         complex_pair = code.startswith("c")
-        base = code[1:] if complex_pair else code
-        itemsize = np.dtype(base).itemsize * (2 if complex_pair else 1)
+        # complex = (real, imaginary) pairs of the base type
+        dt = ([("re", endian + code[1:]), ("im", endian + code[1:])]
+              if complex_pair else endian + code)
         if tiled and tx > 0 and ty > 0:
             ntx = (w + tx - 1) // tx
             nty = (h + ty - 1) // ty
-            need = ntx * nty * tx * ty * itemsize
-            body = data[:need] + b"\0" * max(0, need - len(data))
-            flat = np.frombuffer(body, endian + base)
-            if complex_pair:
-                flat = flat[0::2] + 1j * flat[1::2]
-            tiles = flat.reshape(nty, ntx, ty, tx)
-            full = tiles.transpose(0, 2, 1, 3).reshape(nty * ty,
-                                                       ntx * tx)
-            bands.append(full[:h, :w])
+            # row-major tiles, one after another
+            tiles = read_raw(data, dt, tx, ty * nty * ntx, 1, "bsq")
+            band = tiles.reshape(nty, ntx, ty, tx).transpose(
+                0, 2, 1, 3).reshape(nty * ty, ntx * tx)[:h, :w]
         else:
-            need = w * h * itemsize
-            body = data[:need] + b"\0" * max(0, need - len(data))
-            flat = np.frombuffer(body, endian + base)
-            if complex_pair:
-                flat = flat[0::2] + 1j * flat[1::2]
-            bands.append(flat.reshape(h, w))
+            band = read_raw(data, dt, w, h, 1, "bsq")
+        bands.append(band["re"] + 1j * band["im"] if complex_pair
+                     else band)
     if not bands:
         raise ValueError("MFF: no band files")
     arr = bands[0] if len(bands) == 1 else np.stack(bands, axis=-1)
     arr = np.ascontiguousarray(arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
     meta = "|".join(
         kv.get(k, "") for k in (
             "top_left_corner_latitude", "top_left_corner_longitude",
@@ -164,12 +156,8 @@ def format_mff(arr: np.ndarray):
            f"LINE_SAMPLES = {w}\n"
            "BYTE_ORDER = LSB\n"
            "END\n")
-    files = [
-        (f"{letter}{i:02d}",
-         np.ascontiguousarray(arr[:, :, i]).astype(
-             "<" + code, copy=False).tobytes())
-        for i in range(nb)
-    ]
+    files = [(f"{letter}{i:02d}", write_raw(arr[:, :, i], "<" + code))
+             for i in range(nb)]
     return hdr, files
 
 
@@ -262,25 +250,9 @@ def parse_paux(aux_text: str, raw: bytes):
         # 12816 pins it)
         swapped = len(spec) > 4 and spec[4].lower() == "swapped"
         endian = "<" if swapped else ">"
-        itemsize = np.dtype(code).itemsize
-        band = np.zeros((h, w), code)
-        for y in range(h):
-            start = off + y * lineoff
-            row = raw[start:start + (w - 1) * pixoff + itemsize]
-            if len(row) < (w - 1) * pixoff + itemsize:
-                row = row + b"\0" * ((w - 1) * pixoff + itemsize
-                                     - len(row))
-            rowarr = np.frombuffer(row, np.uint8)
-            if pixoff == itemsize:
-                band[y] = rowarr[:w * itemsize].view(endian + code)
-            else:
-                idx = np.arange(w) * pixoff
-                sel = rowarr[(idx[:, None]
-                              + np.arange(itemsize)).reshape(-1)]
-                band[y] = sel.view(endian + code)
-        bands.append(band)
+        bands.append(read_band(raw, endian + code, w, h, off, pixoff,
+                               lineoff))
     arr = bands[0] if nb == 1 else np.stack(bands, axis=-1)
-    arr = np.ascontiguousarray(arr)
     gt = None
     if "UpLeftX" in kv and "LoRightX" in kv:
         ulx = float(kv["UpLeftX"])
@@ -318,10 +290,7 @@ def format_paux(arr: np.ndarray, gt=None, target: str = "image.raw"):
         lines += [f"UpLeftX: {gt[0]!r}", f"UpLeftY: {gt[3]!r}",
                   f"LoRightX: {gt[0] + w * gt[1]!r}",
                   f"LoRightY: {gt[3] + h * gt[5]!r}"]
-    data = np.ascontiguousarray(
-        arr.transpose(2, 0, 1)).astype("<" + code,
-                                       copy=False).tobytes()
-    return "\n".join(lines) + "\n", data
+    return "\n".join(lines) + "\n", write_raw(arr, "<" + code, "bsq")
 
 
 def scan_paux(spark, path_glob: str, srid: int = 0):
@@ -404,15 +373,9 @@ def parse_doq2(buf: bytes):
             meta.setdefault(key, " ".join(toks[1:]).replace('"', ""))
     if w <= 0 or h <= 0 or skip <= 0:
         raise ValueError("DOQ2: missing dimensions/BYTE_COUNT")
-    bands = max(1, bands)
-    need = w * h * bands * bpp
-    body = buf[skip:skip + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
     if bpp != 1:
         raise ValueError("DOQ2: only 8-bit products supported")
-    arr = np.frombuffer(body, np.uint8).reshape(h, w, bands)
-    arr = np.ascontiguousarray(arr[:, :, 0] if bands == 1 else arr)
+    arr = read_raw(buf, "u1", w, h, max(1, bands), "bip", skip)
     gt = None
     if xo is not None and res:
         gt = (xo, res, 0.0, yo, 0.0, -res)
@@ -564,21 +527,8 @@ def parse_eir(hdr_text: str, raw: bytes):
         raise ValueError(f"EIR: unknown DATATYPE {kv.get('DATATYPE')}")
     fmt = kv.get("FORMAT", "BIL").upper()
     off = int(kv.get("DATA_OFFSET", "0") or "0")
-    itemsize = np.dtype(code).itemsize
-    need = w * h * nb * itemsize
-    body = raw[off:off + need]
-    if len(body) < need:
-        body = body + b"\0" * (need - len(body))
-    flat = np.frombuffer(body, "<" + code)
-    if fmt == "BIL":
-        arr = flat.reshape(h, nb, w).transpose(0, 2, 1)
-    elif fmt == "BIP":
-        arr = flat.reshape(h, w, nb)
-    else:  # BSQ
-        arr = flat.reshape(nb, h, w).transpose(1, 2, 0)
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+    arr = read_raw(raw, "<" + code, w, h, nb,
+                   fmt if fmt in ("BIL", "BIP") else "BSQ", off)
     return arr, None, None, fmt
 
 
@@ -602,9 +552,7 @@ def format_eir(arr: np.ndarray, pixel_file: str):
            f"DATATYPE {dt}\n"
            "DATA_OFFSET 0\n"
            "END_RAW_FILE\n")
-    data = np.ascontiguousarray(
-        arr.transpose(0, 2, 1)).astype("<" + code, copy=False).tobytes()
-    return hdr, data
+    return hdr, write_raw(arr, "<" + code, "bil")
 
 
 def scan_eir(spark, path_glob: str, srid: int = 0):

@@ -50,6 +50,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_band, read_raw, write_raw
 from ._util import glob_paths, local_path, raster_row, scan_files
 
 GRD_NODATA = -1.0e37
@@ -169,8 +170,9 @@ def parse_nwt_grd(buf: bytes):
     color-map bands (ColorMap[raw/16])."""
     h = _nwt_header(buf)
     nx, ny = h["nx"], h["ny"]
-    raw = np.frombuffer(buf, "<u2", count=nx * ny,
-                        offset=1024).reshape(ny, nx)
+    if len(buf) < 1024 + 2 * nx * ny:
+        raise ValueError("NWT_GRD: truncated grid")
+    raw = read_raw(buf, "<u2", nx, ny, 1, "bsq", 1024)
     scale = (h["zmax"] - h["zmin"]) / 65534.0
     z = np.where(raw == 0, np.float32(GRD_NODATA),
                  (h["zmin"] + (raw.astype(np.float64) - 1) *
@@ -199,10 +201,8 @@ def parse_nwt_grc(buf: bytes):
         if nx * ny * cand <= avail:
             bpp = cand
             break
-    dt = {1: np.uint8, 2: np.dtype("<u2"), 4: np.dtype("<u4")}[bpp]
-    arr = np.frombuffer(buf, dt, count=nx * ny,
-                        offset=1024).reshape(ny, nx)
-    return np.ascontiguousarray(arr), h["gt"]
+    dt = {1: "u1", 2: "<u2", 4: "<u4"}[bpp]
+    return read_raw(buf, dt, nx, ny, 1, "bsq", 1024), h["gt"]
 
 
 # -------------------------------------------------------------- MFF2
@@ -251,18 +251,10 @@ def parse_mff2(dirpath: str):
     with open(os.path.join(dirpath, "image_data"), "rb") as f:
         data = f.read()
     interleave = attr.get("channel.interleave", "pixel")
-    n = w * h * nb
-    arr = np.frombuffer(data, dt, count=min(n, len(data) //
-                                            dt.itemsize))
-    if arr.size < n:
-        arr = np.pad(arr, (0, n - arr.size))
-    if nb == 1:
-        bands = [arr.reshape(h, w)]
-    elif interleave == "pixel":
-        bands = [np.ascontiguousarray(
-            arr.reshape(h, w, nb)[:, :, i]) for i in range(nb)]
-    else:  # sequential (band) / tile unsupported -> band
-        bands = [arr.reshape(nb, h, w)[i] for i in range(nb)]
+    # sequential (band) / tile unsupported -> band
+    arr = read_raw(data, dt, w, h, nb,
+                   "bip" if interleave == "pixel" else "bsq")
+    bands = [arr] if nb == 1 else [arr[:, :, i] for i in range(nb)]
     georef = {}
     gpath = os.path.join(dirpath, "georef")
     if os.path.exists(gpath):
@@ -302,14 +294,9 @@ def write_mff2(dirpath: str, bands, georef=None):
     ]
     with open(os.path.join(dirpath, "attrib"), "w") as f:
         f.write("\n".join(attr) + "\n")
-    if nb == 1:
-        payload = b0.astype(dt.newbyteorder("<")).tobytes()
-    else:
-        stack = np.stack([np.ascontiguousarray(b) for b in bands],
-                         axis=2)
-        payload = stack.astype(dt.newbyteorder("<")).tobytes()
     with open(os.path.join(dirpath, "image_data"), "wb") as f:
-        f.write(payload)
+        f.write(write_raw(np.stack(bands, axis=-1), dt.newbyteorder("<"),
+                          "bip"))
     if georef:
         with open(os.path.join(dirpath, "georef"), "w") as f:
             for k, v in georef.items():
@@ -325,12 +312,8 @@ def parse_gsc(buf: bytes):
     full = reclen + 8
     hdr2 = struct.unpack_from("<8f", buf, full + 12)
     gt = (hdr2[2], hdr2[0], 0.0, hdr2[5], 0.0, -hdr2[1])
-    out = np.empty((nlines, npix), np.float32)
-    base = full * 2 + 4
-    for row in range(nlines):
-        off = base + row * full
-        out[row] = np.frombuffer(buf, "<f4", count=npix, offset=off)
-    return out, gt
+    # Fortran records: a 4-byte length before and after each row
+    return read_band(buf, "<f4", npix, nlines, full * 2 + 4, 4, full), gt
 
 
 def format_gsc(arr: np.ndarray, gt) -> bytes:
@@ -392,26 +375,13 @@ def parse_genbin(hdr_text: str, data: bytes, window=None):
     ph = float(kv.get("PIXEL_HEIGHT", 1.0))
     gt = (ulx - pw / 2, pw, 0.0, uly + ph / 2, 0.0, -ph)
     x0, y0, w, h = window or (0, 0, nx, ny)
-    bands = []
-    for b in range(nb):
-        out = np.zeros((h, w), dtype=dt.newbyteorder("="))
-        for row in range(h):
-            if interleave == "BSQ":
-                off = (b * ny + (y0 + row)) * nx + x0
-            elif interleave == "BIL":
-                off = ((y0 + row) * nb + b) * nx + x0
-            else:  # BIP
-                off = ((y0 + row) * nx + x0) * nb + b
-            off *= dt.itemsize
-            end = off + w * dt.itemsize
-            if off >= len(data):
-                continue
-            chunk = data[off:end]
-            vals = np.frombuffer(chunk, dt,
-                                 count=len(chunk) // dt.itemsize)
-            out[row, :vals.size] = vals
-        bands.append(out)
-    return bands, gt
+    isz = dt.itemsize
+    pixel, line, band = {
+        "BSQ": (isz, nx * isz, ny * nx * isz),
+        "BIL": (isz, nb * nx * isz, nx * isz),
+    }.get(interleave, (nb * isz, nb * nx * isz, isz))  # BIP
+    return [read_band(data, dt, w, h, b * band + y0 * line + x0 * pixel,
+                      pixel, line) for b in range(nb)], gt
 
 
 def write_genbin(path: str, bands, gt):
@@ -435,10 +405,8 @@ def write_genbin(path: str, bands, gt):
     with open(stem + ".hdr", "w") as f:
         f.write("\n".join(hdr) + "\n")
     with open(stem + ".bil", "wb") as f:
-        for row in range(h):
-            for b in bands:
-                f.write(np.ascontiguousarray(b)[row].astype(
-                    b0.dtype.newbyteorder("<")).tobytes())
+        f.write(write_raw(np.stack(bands, axis=-1),
+                          b0.dtype.newbyteorder("<"), "bil"))
 
 
 # ---------------------------------------------------------- NSIDCbin
@@ -457,13 +425,14 @@ def parse_nsidcbin(buf: bytes, south=None, name=""):
         south = "_s" in name or (nx, ny) == (316, 332)
     if nx <= 0 or ny <= 0:
         nx, ny = (316, 332) if south else (304, 448)
-    arr = np.frombuffer(buf, np.uint8, count=nx * ny,
-                        offset=300).reshape(ny, nx)
+    if len(buf) < 300 + nx * ny:
+        raise ValueError("NSIDCbin: truncated grid")
+    arr = read_raw(buf, "u1", nx, ny, 1, "bsq", 300)
     if south:
         gt = (-3950000.0, 25000.0, 0.0, 4350000.0, 0.0, -25000.0)
     else:
         gt = (-3837500.0, 25000.0, 0.0, 5837500.0, 0.0, -25000.0)
-    return np.ascontiguousarray(arr), gt
+    return arr, gt
 
 
 def format_nsidcbin(arr: np.ndarray, south=True) -> bytes:
@@ -474,7 +443,7 @@ def format_nsidcbin(arr: np.ndarray, south=True) -> bytes:
     hdr[6:12] = f"{w:<6d}".encode()
     hdr[12:18] = f"{h:<6d}".encode()
     hdr[24:28] = b"1.799"[:4]
-    return bytes(hdr) + arr.tobytes()
+    return bytes(hdr) + write_raw(arr, "u1")
 
 
 # -------------------------------------------------------------- scan
@@ -596,10 +565,9 @@ def parse_noaa_b(buf: bytes):
         start = 4 + 44 + 4
         if start + rows * line > len(buf) + 8:
             continue
-        out = np.empty((rows, cols), dt.newbyteorder("="))
-        for r in range(rows):
-            off = start + (rows - 1 - r) * line + 4
-            out[r] = np.frombuffer(buf, dt, count=cols, offset=off)
+        # bottom-up rows, each between 4-byte record markers
+        out = read_band(buf, dt, cols, rows,
+                        start + (rows - 1) * line + 4, dt.itemsize, -line)
         lon0 = sw_lon - 360 if sw_lon > 180 else sw_lon
         gt = (lon0 - dlon / 2,
               dlon, 0.0,

@@ -29,6 +29,7 @@ import re
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 _DTYPES = {"byte": "u1", "integer": "<i2", "real": "<f4"}
@@ -75,14 +76,10 @@ def decode_rst(buf: bytes, rdc: dict):
     flag = rdc.get("flag value", "none").lower()
     nodata = None if flag in ("none", "") else float(flag)
     if dt == "rgb24":
-        arr = np.frombuffer(buf, np.uint8,
-                            count=w * h * 3).reshape(h, w, 3)
-        arr = np.ascontiguousarray(arr[:, :, ::-1])  # BGR -> RGB
+        arr = np.ascontiguousarray(
+            read_raw(buf, "u1", w, h, 3, "bip")[:, :, ::-1])  # BGR -> RGB
     elif dt in _DTYPES:
-        arr = np.frombuffer(buf, _DTYPES[dt],
-                            count=w * h).reshape(h, w)
-        arr = np.ascontiguousarray(arr).astype(
-            np.dtype(_DTYPES[dt]).newbyteorder("="))
+        arr = read_raw(buf, _DTYPES[dt], w, h, 1, "bsq")
     else:
         raise ValueError(f"RST: unknown data type {dt!r}")
     return arr, gt, srid, nodata
@@ -99,15 +96,13 @@ def format_rst(arr: np.ndarray, gt, srid: int = 0, nodata=None,
         if arr.shape[2] != 3 or arr.dtype != np.uint8:
             raise ValueError("RST rgb24 needs (h, w, 3) uint8")
         dt = "rgb24"
-        data = np.ascontiguousarray(arr[:, :, ::-1]).tobytes()
+        data = write_raw(arr[:, :, ::-1], "u1", "bip")
         vmin, vmax = float(arr.min()), float(arr.max())
     else:
         if arr.dtype not in _DTYPE_NAMES:
             raise ValueError(f"RST cannot hold dtype {arr.dtype}")
         dt = _DTYPE_NAMES[arr.dtype]
-        le = arr.dtype.newbyteorder("<") if arr.dtype != np.uint8 \
-            else arr.dtype
-        data = np.ascontiguousarray(arr).astype(le).tobytes()
+        data = write_raw(arr, arr.dtype.newbyteorder("<"))
         vmin, vmax = float(arr.min()), float(arr.max())
     h, w = arr.shape[:2]
     min_x, max_x = gt[0], gt[0] + gt[1] * w

@@ -31,6 +31,7 @@ import os
 
 import numpy as np
 
+from ._raw import read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 _DTYPES = {
@@ -79,11 +80,7 @@ def decode_saga(buf: bytes, hdr: dict):
     off = int(hdr.get("DATAFILE_OFFSET", "0") or 0)
     bo = ">" if hdr.get("BYTEORDER_BIG", "FALSE").upper().startswith(
         "TRUE") else "<"
-    dt = np.dtype(bo + _DTYPES[fmt]) if _DTYPES[fmt] != "u1" \
-        else np.dtype("u1")
-    arr = np.frombuffer(buf, dt, count=w * h,
-                        offset=off).reshape(h, w)[::-1, :]
-    arr = np.ascontiguousarray(arr).astype(dt.newbyteorder("="))
+    arr = read_raw(buf, bo + _DTYPES[fmt], w, h, 1, "bsq", off, bottom_up=True)
     gt = (xmin - cell * 0.5, cell, 0.0,
           ymin + (h - 1) * cell + cell * 0.5, 0.0, -cell)
     nodata = (float(hdr["NODATA_VALUE"])
@@ -121,10 +118,8 @@ def format_saga(arr: np.ndarray, gt, nodata=None, name: str = ""):
         f"NODATA_VALUE\t= {nd:f}",
         "TOPTOBOTTOM\t= FALSE",
     ]) + "\n"
-    le = arr.dtype.newbyteorder("<") if arr.dtype.itemsize > 1 \
-        else arr.dtype
-    data = np.ascontiguousarray(arr[::-1, :]).astype(le).tobytes()
-    return data, hdr
+    return write_raw(arr, arr.dtype.newbyteorder("<"),
+                     bottom_up=True), hdr
 
 
 def scan_saga(spark, path_glob: str):

@@ -53,6 +53,7 @@ import struct
 
 import numpy as np
 
+from ._raw import read_band, read_raw, write_raw
 from ._util import glob_paths, raster_row, scan_files, write_files
 
 _FORMATS = {
@@ -340,24 +341,24 @@ def parse_vicar(buf: bytes):
             raise ValueError("VICAR BASIC compression requires BSQ")
         raw = _read_basic(buf, kv, lblsize, nl, ns, nb, itemsize,
                           compress)
-        flat = np.frombuffer(raw, "<" + code if itemsize > 1 else code)
-        arr = flat.reshape(nb, nl, ns).transpose(1, 2, 0)
+        arr = read_raw(raw, "<" + code if itemsize > 1 else code, ns, nl,
+                       nb, "bsq")
     else:
-        # records of recsize bytes; zero-fill truncated files
-        nrec = {"BSQ": nb * nl, "BIL": nl * nb, "BIP": nl * ns}[org]
-        start = lblsize + nlb * recsize
-        need = nrec * recsize
-        data = buf[start:start + need]
-        if len(data) < need:
-            data = data + b"\0" * (need - len(data))
-        rows = np.frombuffer(data, np.uint8).reshape(nrec, recsize)
-        # dims come from NL/NS/NB; RECSIZE may be wider than the
-        # pixel payload (the reference reads NS pixels per record
-        # regardless — pinned by test_vicar_truncated's N1 != NS)
-        rec_items = {"BSQ": ns, "BIL": ns, "BIP": nb}[org]
-        body = rows[:, nbb:nbb + rec_items * itemsize]
+        # records of recsize bytes, each opening with an nbb-byte
+        # binary prefix; bytes past EOF read as zero. Dims come from
+        # NL/NS/NB: RECSIZE may be wider than the pixel payload (the
+        # reference reads NS pixels per record regardless — pinned by
+        # test_vicar_truncated's N1 != NS)
+        start = lblsize + nlb * recsize + nbb
+        pixel, line, band = {
+            "BSQ": (itemsize, recsize, nl * recsize),  # (band, line)
+            "BIL": (itemsize, nb * recsize, recsize),  # (line, band)
+            "BIP": (recsize, ns * recsize, itemsize),  # (line, sample)
+        }[org]
+        arr = read_band(buf, f"V{itemsize}" if vax else endian + code,
+                        ns, nl, start, pixel, line, nb, band)
         if vax:
-            words = np.ascontiguousarray(body).reshape(-1).view("<u2")
+            words = arr.reshape(-1).view("<u2")
             if fmt == "REAL":
                 flat = _vax_f(words).astype(np.float32)
             elif fmt == "DOUB":
@@ -367,18 +368,7 @@ def parse_vicar(buf: bytes):
                 flat = f[0::2] + 1j * f[1::2]
             else:
                 raise ValueError("VICAR: VAX integer format")
-        else:
-            flat = np.ascontiguousarray(body).reshape(-1).view(
-                endian + code)
-        if org == "BSQ":
-            arr = flat.reshape(nb, nl, ns).transpose(1, 2, 0)
-        elif org == "BIL":
-            arr = flat.reshape(nl, nb, ns).transpose(0, 2, 1)
-        else:  # BIP
-            arr = flat.reshape(nl, ns, nb)
-    arr = np.ascontiguousarray(arr[:, :, 0] if nb == 1 else arr)
-    if arr.dtype.byteorder not in ("=", "|"):
-        arr = arr.astype(arr.dtype.newbyteorder("="))
+            arr = flat.reshape(arr.shape)
 
     # georef from the MAP property (PDS default offset pipeline)
     gt = None
@@ -476,10 +466,7 @@ def format_vicar(arr: np.ndarray, gt=None, target: str = "MARS") -> bytes:
     else:
         raise ValueError("VICAR writer: label does not fit")
     label = head.ljust(lblsize, " ").encode("ascii")
-    data = np.ascontiguousarray(
-        arr.transpose(2, 0, 1)).astype(
-            "<" + code, copy=False).tobytes()
-    return label + data
+    return label + write_raw(arr, "<" + code, "bsq")
 
 
 def scan_vicar(spark, path_glob: str, srid: int = 0):

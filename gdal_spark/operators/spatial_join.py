@@ -123,34 +123,6 @@ def with_envelope_cells(df: DataFrame, zoom: int, out: str = "cell") -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# phase-2 exact refine (Arrow-vectorized)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(BooleanType())
-def _pip_udf(xs: pd.Series, ys: pd.Series, wkbs: pd.Series) -> pd.Series:
-    """Exact point-in-polygon, vectorized per distinct polygon per batch."""
-    out = np.zeros(len(xs), dtype=bool)
-    if len(xs) == 0:
-        return pd.Series(out)
-    px = xs.to_numpy(dtype=float)
-    py = ys.to_numpy(dtype=float)
-    groups: dict[bytes, list[int]] = {}
-    for i, b in enumerate(wkbs):
-        groups.setdefault(bytes(b), []).append(i)
-    for wkb, idxs in groups.items():
-        g = geom.parse_wkb(wkb)
-        ii = pd.Index(idxs)
-        res = geom.points_in_geometry(px[ii], py[ii], g)
-        out[ii] = res
-    return pd.Series(out)
-
-
-def refine_pip(df: DataFrame, x: str = "x", y: str = "y", wkb: str = "wkb") -> DataFrame:
-    return df.where(_pip_udf(F.col(x), F.col(y), F.col(wkb)))
-
-
-# ---------------------------------------------------------------------------
 # the join operators
 # ---------------------------------------------------------------------------
 
@@ -165,7 +137,6 @@ def point_in_polygon_join(
     cell_zoom: int | None = None,
     point_key: str | None = None,
     first_match_order: str | None = None,
-    envelope_fast_accept: bool = True,
 ) -> DataFrame:
     """Join points to the polygons containing them.
 
@@ -174,7 +145,7 @@ def point_in_polygon_join(
     cell equi-join at ``cell_zoom`` for a large polygon layer.
     Phase 2: exact ray-cast refine; rectangles whose envelope equals the
     geometry skip it (``m_bFilterIsEnvelope`` fast accept,
-    ogrlayer.cpp:2287-2293) when ``envelope_fast_accept``.
+    ogrlayer.cpp:2287-2293).
 
     how: inner | left | left_semi | left_anti. ``left`` with
     ``first_match_order`` reproduces OGR SQL first-match-only LEFT JOIN
@@ -204,7 +175,7 @@ def point_in_polygon_join(
             if cell_zoom is None
             else points.join(polys, cond, "inner").drop("_pcell", "_pcell2")
         )
-        matched = _refine(matched, x, y, envelope_fast_accept)
+        matched = _refine(matched, x, y)
         keys = [point_key] if point_key else [x, y]
         m = matched.select(*keys).dropDuplicates(keys)
         return points.drop("_pcell") .join(m, keys, "left_semi" if how == "left_semi" else "left_anti")
@@ -214,7 +185,7 @@ def point_in_polygon_join(
         # a polygon can meet a point in several covering cells only if the
         # point sits in exactly its own cell -> cells are disjoint, no dup
         joined = joined.drop("_pcell", "_pcell2")
-    refined = _refine(joined, x, y, envelope_fast_accept)
+    refined = _refine(joined, x, y)
 
     if how == "inner":
         return refined
@@ -234,9 +205,12 @@ def point_in_polygon_join(
     raise ValueError(f"unsupported how={how!r}")
 
 
-def _refine(df: DataFrame, x: str, y: str, envelope_fast_accept: bool) -> DataFrame:
-    if not envelope_fast_accept:
-        return refine_pip(df, x, y)
+# ---------------------------------------------------------------------------
+# phase-2 exact refine (Arrow-vectorized)
+# ---------------------------------------------------------------------------
+
+
+def _refine(df: DataFrame, x: str, y: str) -> DataFrame:
     # rectangle-equals-envelope rows skip the exact test: the envelope
     # predicate already decided them (ogrlayer.cpp:2287-2293). One UDF
     # decides rect-ness ONCE per distinct polygon inside the batch and

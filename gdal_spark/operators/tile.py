@@ -4,12 +4,16 @@ Pipeline (SURVEY.md §3.3 mapping):
 
 1. **zoom planning** — per-image native zoom from pixel size
    (ZoomForPixelSize, gdal2tiles.py:503-509) as pure Column math.
-2. **tile assignment** — per-image covered (z, tx, ty) range
-   (gdal2tiles.py:2428-2435 tminmax build) as pure Column math +
-   ``explode(sequence(...))``; **no UDF, no pixel I/O** — this is the
-   work-list build of generate_base_tiles (2797-2962) pushed into Catalyst,
-   and the skip-no-source filter happens here, before any pixel work
-   (the "single biggest saver at scale", SURVEY.md §4).
+2. **tile assignment** — inside stage 3's one mapInPandas: each image's
+   covered (z, tx, ty) range per level comes from ``grid.tile_range``
+   over its bounds (gdal2tiles.py:2428-2435 tminmax build), after the
+   image is decoded once for all its tiles. Only tiles that some image
+   covers are ever cut, so the skip-no-source rule of
+   generate_base_tiles (2797-2962; the "single biggest saver at scale",
+   SURVEY.md §4) holds by construction. ``assign_tiles`` still builds
+   the same (image, tile) work list as Column math + ``explode(sequence
+   (...))`` for callers that want it without pixels; no pyramid builder
+   calls it.
 3. **fragment cut** — one mapInPandas over image rows for every tile
    grid and level range, keyed by a grid object (``MercatorGrid`` or
    ``GeodeticGrid``, built for the tile size): decode once per image, emit

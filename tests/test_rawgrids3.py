@@ -115,6 +115,33 @@ class TestGenBin:
         assert np.array_equal(bands[1], b2)
         assert gt2 == pytest.approx(gt)
 
+    @pytest.mark.parametrize("interleave", ["BIP", "BSQ", "BIL"])
+    def test_multiband_interleave(self, interleave):
+        # a (rows, cols, bands) = (3, 4, 2) cube stored three ways
+        cube = np.arange(24, dtype=np.uint8).reshape(3, 4, 2)
+        stored = {"BIP": cube, "BSQ": cube.transpose(2, 0, 1),
+                  "BIL": cube.transpose(0, 2, 1)}[interleave]
+        hdr = ("BANDS: 2\nROWS: 3\nCOLS: 4\n"
+               f"INTERLEAVING: {interleave}\nDATATYPE: U8\n")
+        bands, _ = R3.parse_genbin(hdr, stored.tobytes())
+        assert bands[0].tolist() == [[0, 2, 4, 6], [8, 10, 12, 14],
+                                     [16, 18, 20, 22]]
+        assert bands[1].tolist() == [[1, 3, 5, 7], [9, 11, 13, 15],
+                                     [17, 19, 21, 23]]
+        win, _ = R3.parse_genbin(hdr, stored.tobytes(),
+                                 window=(1, 1, 2, 2))
+        assert win[0].tolist() == [[10, 12], [18, 20]]
+        assert win[1].tolist() == [[11, 13], [19, 21]]
+
+    def test_multiband_bip_big_endian(self):
+        cube = (np.arange(30, dtype=np.int16) * 37 - 400).reshape(3, 5, 2)
+        hdr = ("BANDS: 2\nROWS: 3\nCOLS: 5\nINTERLEAVING: BIP\n"
+               "DATATYPE: S16\nBYTE_ORDER: MSBFIRST\n")
+        bands, _ = R3.parse_genbin(hdr, cube.astype(">i2").tobytes())
+        assert bands[0].dtype == np.int16
+        assert np.array_equal(bands[0], cube[:, :, 0])
+        assert np.array_equal(bands[1], cube[:, :, 1])
+
 
 class TestNsidc:
     def test_fixture(self):

@@ -7,7 +7,11 @@ plans and grep the properties the engine promises (SURVEY.md §4):
 - the PIP join phase 1 is a BroadcastHashJoin (or cell equi SortMerge)
 - aggregations have partial (map-side) aggregation
 
-Writes PLANS.md with the audit result per plan.
+Writes PLANS.md with the audit result per plan. Audit names given as
+arguments (``python3 tools/explain_plans.py envi_scan_task_per_cube``)
+re-run only those audits and rewrite only their ``## name`` sections,
+leaving every other section byte-identical; with no arguments every
+audit runs and the whole file is rewritten.
 """
 
 from __future__ import annotations
@@ -36,7 +40,13 @@ def key_exchange(*keys):
     return rf"hashpartitioning\({ks}, \d+\), REPARTITION_BY_NUM"
 
 
+# audit names to run; empty = all
+WANTED: set[str] = set()
+
+
 def audit(name, df, expect, out):
+    if WANTED and name not in WANTED:
+        return
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     checks = []
     for label, pattern in expect:
@@ -50,7 +60,33 @@ def audit(name, df, expect, out):
     print(f"{name}: {status}")
 
 
-def main():
+def render(name, checks, plan):
+    """One PLANS.md section."""
+    marks = "".join(f"- {label}: {'PASS' if ok else 'FAIL'}\n"
+                    for label, ok in checks)
+    return f"## {name}\n\n{marks}\n```\n{plan[:4000]}\n```\n\n"
+
+
+def write_plans(out):
+    """Rewrite PLANS.md: the whole file, or with WANTED only the named
+    sections (a name not yet in the file is appended)."""
+    path = os.path.join(ROOT, "PLANS.md")
+    new = {name: render(name, checks, plan) for name, checks, plan in out}
+    if WANTED:
+        with open(path) as f:
+            parts = re.split(r"(?m)^(?=## )", f.read())
+        names = [p[3:].split("\n", 1)[0] for p in parts]
+        parts = [new.pop(n, p) for n, p in zip(names, parts)]
+        parts += new.values()
+    else:
+        parts = ["# PLANS — physical-plan audit (.explain formatted)\n\n",
+                 *new.values()]
+    with open(path, "w") as f:
+        f.write("".join(parts))
+
+
+def main(names=()):
+    WANTED.update(names)
     from gdal_spark.session import get_spark
     from gdal_spark import fixtures
     from gdal_spark.operators.tile import assign_tiles
@@ -936,17 +972,12 @@ def main():
         out,
     )
 
-    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-        f.write("# PLANS — physical-plan audit (.explain formatted)\n\n")
-        for name, checks, plan in out:
-            f.write(f"## {name}\n\n")
-            for label, ok in checks:
-                f.write(f"- {label}: {'PASS' if ok else 'FAIL'}\n")
-            f.write("\n```\n")
-            f.write(plan[:4000])
-            f.write("\n```\n\n")
     spark.stop()
+    missing = WANTED - {name for name, _checks, _plan in out}
+    if missing:
+        sys.exit(f"unknown audit name(s): {', '.join(sorted(missing))}")
+    write_plans(out)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
