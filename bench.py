@@ -531,11 +531,11 @@ def _control_unit(args):
     control that measures THIS MACHINE's parallel-scaling ceiling."""
     i, = args
     import numpy as np
+    import pandas as pd
 
     from gdal_spark import codecs, fixtures
-    from gdal_spark.checksum import image_checksums
     from gdal_spark.grid import MercatorGrid
-    from gdal_spark.operators.tile import _cut_one
+    from gdal_spark.operators.tile import _compose_group, _cut_one, _fragment_row
 
     merc = MercatorGrid()
     rec = fixtures.image_record(int(i) % 512, tier="bench")
@@ -553,10 +553,10 @@ def _control_unit(args):
     ps = rec["gt1"] if rec["srid"] == 3857 else rec["gt1"] * (20037508.342789244 / 180)
     z = int(merc.zoom_for_pixel_size(ps))
     n = 0
-    # the FULL per-tile pipeline the engine runs (cut + fragment PNG
-    # encode/decode + compose + final encode + checksum), so the control
-    # ceiling reflects the real workload's memory traffic, not just the
-    # cut kernel
+    # the FULL per-tile pipeline the engine runs for a one-source tile
+    # (cut + final-form encode and checksum + compose pass-through), so
+    # the control ceiling reflects the real workload, not just the cut
+    # kernel
     for zz in (z, max(0, z - 1)):
         tminx, tminy, tmaxx, tmaxy = merc.tile_range(
             rec["minx"], rec["miny"], rec["maxx"], rec["maxy"], zz
@@ -569,26 +569,8 @@ def _control_unit(args):
                 )
                 if cut is None:
                     continue
-                tile, av = cut
-                frag = codecs.encode_png(tile, level=1)
-                opaque = av.min() == 255  # mirrors _fragment_row's skip
-                afrag = None if opaque else codecs.encode_png(av, level=1)
-                dec = codecs.decode_png(frag)
-                if dec.ndim == 2:
-                    dec = dec[:, :, None]
-                buf = np.zeros((256, 256, dec.shape[2]), dtype=np.uint8)
-                am = np.zeros((256, 256), dtype=np.uint8)
-                if opaque:
-                    buf[:, :, :] = dec
-                    am[:, :] = 255
-                else:
-                    adec = codecs.decode_png(afrag)
-                    m = adec > 0
-                    buf[m] = dec[m]
-                    am[m] = 255
-                rgba = np.dstack([buf, am])
-                png = codecs.encode_png(rgba, level=3)
-                image_checksums(rgba)
+                row = _fragment_row(r, zz, tx, ty, *cut)
+                _compose_group(pd.DataFrame([row]), 256)
                 n += 1
         if zz == 0:
             break

@@ -35,18 +35,24 @@ def _int_from_double(a: np.ndarray) -> np.ndarray:
     return out
 
 
-# uint8 fast path: value%prime is a (11, 256) lookup; the pixel-index
-# prime pattern per (h, w) is cached (tiles recur at a handful of shapes)
-_REM8: np.ndarray | None = None
+# the pixel-index prime pattern per (h, w) is cached (tiles recur at a
+# handful of shapes)
 _IDX_CACHE: dict[tuple[int, int], np.ndarray] = {}
+_PRIMES8 = PRIMES.astype(np.uint8)[:, None]
 
 
-def _rem8_table() -> np.ndarray:
-    global _REM8
-    if _REM8 is None:
-        v = np.arange(256, dtype=np.int64)
-        _REM8 = np.stack([v % p for p in PRIMES]).astype(np.int32)
-    return _REM8
+def _checksums_u8(arr: np.ndarray) -> list[int]:
+    """uint8 (h, w, c) fast path. Row-major pixels laid out in rows of 11
+    put every pixel of column j under prime j, so one broadcast uint8
+    remainder serves all bands (the zero padding adds nothing). The int32
+    sums may wrap on huge bands; the low 16 bits stay exact."""
+    h, w, c = arr.shape
+    flat = arr.reshape(h * w, c)
+    pad = -(h * w) % 11
+    if pad:
+        flat = np.concatenate([flat, np.zeros((pad, c), dtype=np.uint8)])
+    rem = np.remainder(flat.reshape(-1, 11, c), _PRIMES8)
+    return [int(v) & 0xFFFF for v in rem.sum(axis=0, dtype=np.int32).sum(axis=0)]
 
 
 def _idx11(h: int, w: int) -> np.ndarray:
@@ -67,8 +73,7 @@ def gdal_checksum(band: np.ndarray) -> int:
         raise ValueError("gdal_checksum expects a single 2-D band")
     h, w = band.shape
     if band.dtype == np.uint8:
-        rem = _rem8_table()[_idx11(h, w), band.astype(np.int64)]
-        return int(rem.sum(dtype=np.int64)) & 0xFFFF
+        return _checksums_u8(band[:, :, None])[0]
     if band.dtype.kind == "f":
         vals = _int_from_double(band.astype(np.float64))
     else:
@@ -81,13 +86,11 @@ def gdal_checksum(band: np.ndarray) -> int:
 
 
 def image_checksums(arr: np.ndarray) -> list[int]:
-    """Per-band checksums of an (h, w) or (h, w, c) array — one LUT
-    gather for all bands of a uint8 image."""
+    """Per-band checksums of an (h, w) or (h, w, c) array — one
+    remainder pass for all bands of a uint8 image."""
     arr = np.asarray(arr)
     if arr.ndim == 2:
         return [gdal_checksum(arr)]
     if arr.dtype == np.uint8:
-        h, w, c = arr.shape
-        rem = _rem8_table()[_idx11(h, w)[:, :, None], arr.astype(np.int64)]
-        return [int(s) & 0xFFFF for s in rem.sum(axis=(0, 1), dtype=np.int64)]
+        return _checksums_u8(arr)
     return [gdal_checksum(arr[:, :, b]) for b in range(arr.shape[2])]

@@ -203,6 +203,8 @@ def parse_byn(buf: bytes):
         raise ValueError("BYN: zero spacing")
     w = int((e - w_ + 1.0) / dlo + 1.0)
     h = int((n - s + 1.0) / dla + 1.0)
+    if w <= 0 or h <= 0:
+        raise ValueError(f"BYN: header bounds give a {w} x {h} grid")
     code = "i2" if sizeof == 2 else "i4"
     endian = "<" if byteorder == 1 else ">"
     arr = read_raw(buf, endian + code, w, h, 1, "bsq", 80)

@@ -15,13 +15,16 @@ Distributed shape:
    the pyramid's fragment pass (tile._map_fragments) decodes each source
    ONCE and warps it into each overlapped output tile with tile._warp_cut
    (same-CRS affine -> affine, exact mapping; the source alpha goes
-   through the same transform). Only PNG fragments leave the stage.
+   through the same transform). Fragments leave the stage in the
+   pyramid's final form: each is its edge-clipped tile as if it were
+   the only source, PNG-encoded with its checksums.
 3. (tx, ty) compose through plans.grouping.group_by_key (one tile-key
    shuffle, one sort, one mapInPandas walking the sorted runs) — the
-   tile-key shuffle IS the mosaic, one task per core; sources paint in
-   image_id order (buildvrt paints in command-line order; image_id is
-   the deterministic distributed equivalent) where valid, with the
-   pyramid's paint code.
+   tile-key shuffle IS the mosaic, one task per core. A one-source tile
+   passes through undecoded; elsewhere sources paint in image_id order
+   (buildvrt paints in command-line order; image_id is the deterministic
+   distributed equivalent) where valid, with the pyramid's compose
+   helper.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.grouping import group_by_key
 from .tile import (
-    _check_on_error, _map_fragments, _paint, _tile_frame, _warp_cut, log,
+    _check_on_error, _compose_frame, _map_fragments, _warp_cut, log,
 )
 
 MOSAIC_TILE_SCHEMA = (
@@ -162,11 +165,9 @@ def build_mosaic(
     def compose(pdf):
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
         th, tw = tile_shape(tx, ty)
-        rgba, src_ids = _paint(pdf, (th, tw))
         gts = dict(zip(("gt0", "gt1", "gt2", "gt3", "gt4", "gt5"), tile_gt(tx, ty)))
-        return _tile_frame(
-            rgba, MOSAIC_TILE_SCHEMA, tx=tx, ty=ty, w=tw, h=th,
-            n_src=len(src_ids), src_ids=src_ids, **gts,
+        return _compose_frame(
+            pdf, (th, tw), MOSAIC_TILE_SCHEMA, tx=tx, ty=ty, w=tw, h=th, **gts
         )
 
     frags = _map_fragments(ranged, on_error, cuts)

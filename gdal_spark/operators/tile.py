@@ -22,23 +22,28 @@ Pipeline (SURVEY.md §3.3 mapping):
    scale_query_to_tile path digit for digit (gdal2tiles.py:2964-3006,
    1334-1394); other sources take the exact per-tile warp (the
    gdalalg_raster_tile.cpp:647-649 per-tile WarpRegionToBuffer
-   formulation).
+   formulation). Each fragment leaves in final form: the tile this
+   source alone would compose to (pixels where its alpha is set, alpha
+   appended as 255/0, gdal2tiles.py:2815), encoded once as the tile PNG,
+   with its GDAL checksums (alg/gdalchecksum.cpp).
 4. **compose** — ``plans.grouping.group_by_key`` on (z, tx, ty): a key
    hash repartition into ``defaultParallelism`` partitions, a sort, then
    one mapInPandas walking the sorted runs, each tile's fragments as one
-   frame: paint them in image_id order (gdalbuildvrt placement,
-   apps/gdalbuildvrt_lib.cpp), append alpha (gdal2tiles.py:2815), encode
-   PNG, GDAL checksum (alg/gdalchecksum.cpp) + lineage columns. Tiles
-   leave in frames of at most the session's Arrow batch cap (each row
-   carries a PNG). The tile-key shuffle **is** the mosaic;
-   mosaic.build_mosaic groups and paints through the same helper.
+   frame. A one-fragment tile (most of them: gdal2tiles' create_base_tile
+   writes a tile straight from its source) passes through as cut, with
+   no decode or encode. Where sources overlap, the fragments are decoded
+   and painted in image_id order (gdalbuildvrt placement,
+   apps/gdalbuildvrt_lib.cpp), then encoded and checksummed. Tiles leave
+   with their lineage columns in frames of at most the session's Arrow
+   batch cap (each row carries a PNG). The tile-key shuffle **is** the
+   mosaic; mosaic.build_mosaic composes through the same helper.
 5. **overviews** — the same grouping keyed by the parent tile, children
    in (tx, ty) order: place <=4 children in a 2x2 buffer by (x%2,
    y-parity) (gdal2tiles.py:1536-1550), 2:1 average downsample with exact
    edge weights (gcore/overview.cpp), iterate z-1 .. tminz.
 
-Scale notes: fragments, not whole images, cross the shuffle (<= ts*ts*c
-bytes each). The compose shuffle has an explicit partition count, so AQE
+Scale notes: fragments, not whole images, cross the shuffle (one tile
+PNG each). The compose shuffle has an explicit partition count, so AQE
 cannot coalesce it: fragments are small PNGs, and a size-driven coalesce
 would put the whole CPU-bound mosaic into one task.
 """
@@ -131,10 +136,14 @@ def assign_tiles(images, zoom, tile_size: int = 256):
 # stage 3: fragment cut (mapInPandas — decode each image once)
 # ---------------------------------------------------------------------------
 
+# px: the fragment's final-form tile PNG (``_fragment_row``), c: its
+# color channels without alpha, checksums: the GDAL checksums of that
+# tile. alpha is always empty: the alpha is px's last channel.
 FRAGMENT_SCHEMA = (
-    "z int, tx long, ty long, image_id string, px binary, alpha binary, c int"
+    "z int, tx long, ty long, image_id string, px binary, alpha binary, c int, "
+    "checksums array<int>"
 )
-FRAGMENT_COLUMNS = ["z", "tx", "ty", "image_id", "px", "alpha", "c"]
+FRAGMENT_COLUMNS = ["z", "tx", "ty", "image_id", "px", "alpha", "c", "checksums"]
 
 
 def _native_zoom_col(grid):
@@ -280,20 +289,23 @@ def _check_on_error(on_error: str) -> None:
 
 
 def _fragment_row(r, z, tx, ty, tile, alpha):
-    # PNG, not raw: fragments cross a shuffle + a sort-based group
-    # iterator + an Arrow->pandas conversion — payload size IS the cost
-    # there (level-1 zlib: ~10x smaller, ~1ms each way). Fully-opaque
-    # fragments (the common case: image covers the whole tile) ship an
-    # EMPTY alpha instead of a constant-255 PNG — skips one encode here
-    # and one decode in compose.
+    # Final form: the tile this fragment alone composes to, encoded and
+    # checksummed as ``_tile_frame`` would. A one-fragment tile (the
+    # common case) then leaves compose as is, and an overlap decodes one
+    # PNG per fragment; painting reads only alpha > 0 and the pixels
+    # under it, which this form keeps.
+    m = alpha > 0
+    rgba = np.dstack([tile * m[:, :, None], np.where(m, np.uint8(255), np.uint8(0))])
+    png, sums = _encode_tile(rgba)
     return {
         "z": int(z),
         "tx": int(tx),
         "ty": int(ty),
         "image_id": r.image_id,
-        "px": codecs.encode_png(tile, level=1),
-        "alpha": b"" if alpha.min() == 255 else codecs.encode_png(alpha, level=1),
+        "px": png,
+        "alpha": b"",
         "c": int(tile.shape[2]),
+        "checksums": sums,
     }
 
 
@@ -371,47 +383,58 @@ def _paint(pdf, shape):
     alpha = np.zeros(shape, dtype=np.uint8)
     src_ids = []
     for r in pdf.sort_values("image_id").itertuples(index=False):
-        tile = codecs.decode_png(bytes(r.px))
-        if tile.ndim == 2:
-            tile = tile[:, :, None]
+        frag = codecs.decode_png(bytes(r.px))
+        tile, m = frag[:, :, :-1], frag[:, :, -1] > 0
         if tile.shape[2] < c:  # gray fragment into RGB mosaic: replicate
             tile = np.repeat(tile[:, :, :1], c, axis=2)
-        ab = bytes(r.alpha)
-        if len(ab) == 0:  # fully-opaque fragment marker
-            buf[:, :, :] = tile
-            alpha[:, :] = 255
-        else:
-            fa = codecs.decode_png(ab)
-            if fa.ndim == 3:
-                fa = fa[:, :, 0]
-            m = fa > 0
-            buf[m] = tile[m]
-            alpha[m] = 255
+        buf[m] = tile[m]
+        alpha[m] = 255
         src_ids.append(r.image_id)
     return np.dstack([buf, alpha]), src_ids
 
 
-def _tile_frame(rgba, schema: str, **cols):
-    """One row of ``schema`` (in its column order): ``cols`` plus the PNG
-    and GDAL checksums of ``rgba``."""
-    import pandas as pd
-
-    sums = image_checksums(rgba)
+def _encode_tile(rgba):
+    """The tile encoder: PNG bytes and GDAL checksums of ``rgba``."""
     # level 3: ~2x faster than the zlib default for ~2% larger tiles
     # (150 -> 154 KB measured on a photographic tile)
-    png = codecs.encode_png(rgba, level=3)
+    return codecs.encode_png(rgba, level=3), image_checksums(rgba)
+
+
+def _tile_row(schema: str, png, sums, **cols):
+    import pandas as pd
+
     return pd.DataFrame(
         [{**cols, "png": png, "checksum": sums[0], "checksums": sums}],
         columns=[f.split()[0] for f in schema.split(", ")],
     )
 
 
+def _tile_frame(rgba, schema: str, **cols):
+    """One row of ``schema`` (in its column order): ``cols`` plus the PNG
+    and GDAL checksums of ``rgba``."""
+    return _tile_row(schema, *_encode_tile(rgba), **cols)
+
+
+def _compose_frame(pdf, shape, schema: str, **cols):
+    """One composed tile of ``shape`` from its fragments ``pdf``: a row
+    of ``schema`` with ``cols``, the lineage columns, PNG and checksums.
+    A lone fragment is already the tile (``_fragment_row``) and passes
+    through undecoded; two or more are painted and encoded."""
+    if len(pdf) == 1:
+        r = next(pdf.itertuples(index=False))
+        return _tile_row(
+            schema, bytes(r.px), [int(v) for v in r.checksums],
+            n_src=1, src_ids=[r.image_id], **cols,
+        )
+    rgba, src_ids = _paint(pdf, shape)
+    return _tile_frame(rgba, schema, n_src=len(src_ids), src_ids=src_ids, **cols)
+
+
 def _compose_group(pdf, tile_size: int):
     z, tx, ty = (int(pdf[k].iloc[0]) for k in ("z", "tx", "ty"))
-    rgba, src_ids = _paint(pdf, (tile_size, tile_size))
-    return _tile_frame(
-        rgba, TILE_SCHEMA, z=z, tx=tx, ty=ty, y_xyz=int(xyz_flip(ty, z)),
-        w=tile_size, h=tile_size, n_src=len(src_ids), src_ids=src_ids,
+    return _compose_frame(
+        pdf, (tile_size, tile_size), TILE_SCHEMA, z=z, tx=tx, ty=ty,
+        y_xyz=int(xyz_flip(ty, z)), w=tile_size, h=tile_size,
     )
 
 

@@ -201,6 +201,19 @@ def test_checksum_float_and_negative():
     assert gdal_checksum(band) == want
 
 
+@pytest.mark.parametrize(
+    "shape", [(1, 1), (3, 4), (7, 13), (256, 256), (5, 9, 2), (17, 11, 3), (64, 33, 4)]
+)
+def test_checksum_uint8_matches_integer_path(shape):
+    # the uint8 fast path against the generic integer remainder path
+    rng = np.random.default_rng(sum(shape))
+    arr = rng.integers(0, 256, shape, dtype=np.uint8)
+    bands = [arr] if arr.ndim == 2 else [arr[:, :, b] for b in range(arr.shape[2])]
+    want = [gdal_checksum(b.astype(np.int16)) for b in bands]
+    assert image_checksums(arr) == want
+    assert [gdal_checksum(b) for b in bands] == want
+
+
 def test_checksum_multiband():
     arr = np.dstack([np.ones((4, 4), np.uint8) * 5, np.ones((4, 4), np.uint8) * 9])
     cs = image_checksums(arr)

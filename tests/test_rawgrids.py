@@ -82,6 +82,13 @@ class TestByn:
         assert g2 == pytest.approx(gt, abs=1e-12)
         assert nd == 32767.0
 
+    def test_rejects_bounds_with_no_cells(self):
+        # a PCraster file read as BYN: its bytes give a negative width
+        with open(os.path.join(os.path.dirname(DATA), "ldd.map"), "rb") as f:
+            buf = f.read()
+        with pytest.raises(ValueError, match="BYN"):
+            R.parse_byn(buf)
+
     def test_rejects_non_arcsecond(self):
         with pytest.raises(ValueError, match="arcseconds"):
             R.format_byn(np.zeros((2, 2), np.int16),

@@ -5,6 +5,7 @@ alignment (autotest/pyscripts/test_gdal2tiles.py:85-124) and caption
 passthrough through every shuffle (FIXTURES.md per-row invariant)."""
 
 import logging
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -15,10 +16,14 @@ from gdal_spark import codecs, fixtures
 from gdal_spark.checksum import image_checksums
 from gdal_spark.grid import MercatorGrid
 from gdal_spark.operators.tile import (
+    FRAGMENT_COLUMNS,
     FRAGMENT_SCHEMA,
     TILE_SCHEMA,
+    _compose_frame,
     _compose_group,
+    _fragment_row,
     _overview_group,
+    _tile_frame,
     assign_tiles,
     compose_tiles,
     cut_base_tiles,
@@ -220,8 +225,9 @@ GROUP_TS = 16
 def _fragment(rng, z, tx, ty, image_id, c=3, opaque=True):
     px = rng.integers(0, 256, (GROUP_TS, GROUP_TS, c), dtype=np.uint8)
     mask = np.where(rng.random((GROUP_TS, GROUP_TS)) < 0.5, 255, 0).astype(np.uint8)
-    alpha = b"" if opaque else codecs.encode_png(mask, level=1)
-    return (z, tx, ty, image_id, codecs.encode_png(px, level=1), alpha, c)
+    alpha = np.full_like(mask, 255) if opaque else mask
+    row = _fragment_row(SimpleNamespace(image_id=image_id), z, tx, ty, px, alpha)
+    return tuple(row[k] for k in FRAGMENT_COLUMNS)
 
 
 def _group_fragments():
@@ -277,7 +283,7 @@ class TestComposeGrouping:
         rows = _group_fragments()
         frags = spark.createDataFrame(rows, FRAGMENT_SCHEMA).repartition(3)
         got = _tile_rows(compose_tiles(frags, GROUP_TS).collect())
-        pdf = pd.DataFrame(rows, columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"])
+        pdf = pd.DataFrame(rows, columns=FRAGMENT_COLUMNS)
         want = _by_group(
             pdf, ["z", "tx", "ty"], ["image_id"], lambda g: _compose_group(g, GROUP_TS)
         )
@@ -285,9 +291,7 @@ class TestComposeGrouping:
         assert got[(5, 10, 10)][3:] == (7, [f"img{i}" for i in range(7)])
 
     def test_overview_matches_pandas_groupby(self, spark, arrow_batch):
-        pdf = pd.DataFrame(
-            _group_fragments(), columns=["z", "tx", "ty", "image_id", "px", "alpha", "c"]
-        )
+        pdf = pd.DataFrame(_group_fragments(), columns=FRAGMENT_COLUMNS)
         children = _by_group(
             pdf, ["z", "tx", "ty"], ["image_id"], lambda g: _compose_group(g, GROUP_TS)
         )
@@ -302,6 +306,21 @@ class TestComposeGrouping:
         )
         assert got == _tile_rows(want.to_dict("records"))
         assert set(got) == {(4, 5, 5)} and got[(4, 5, 5)][3] == 12
+
+    def test_direct_pyramid_cuts_once_through_one_shuffle(self, spark, world):
+        """The one-fragment pass-through lives inside the compose kernel:
+        a plan that routes one-fragment tiles around the shuffle (a count
+        window, then a union) makes Spark run the cut twice."""
+        import re
+
+        df = tile_pyramid_direct(world, 0, 1).agg(F.count("*"), F.sum("checksum"))
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        out = ", ".join(rf"{c}#\d+L?" for c in FRAGMENT_COLUMNS)
+        cuts = re.findall(rf"MapInPandas .*\[{out}\], false", final)
+        assert final.count("Exchange hashpartitioning") == 1, plan
+        assert len(cuts) == 1, plan
 
     def test_empty_input(self, spark):
         frags = spark.createDataFrame([], FRAGMENT_SCHEMA)
@@ -337,6 +356,109 @@ class TestComposeGrouping:
         assert f"compose_tiles: {n} partitions from defaultParallelism" in [
             r.getMessage() for r in caplog.records
         ]
+
+
+def _raw_fragment(rng, c, kind, shape=(GROUP_TS, GROUP_TS)):
+    """A cut's raw (tile, alpha): fully opaque, partial or sparse alpha,
+    with alpha values other than 0 and 255 where it is set."""
+    tile = rng.integers(0, 256, (*shape, c), dtype=np.uint8)
+    p = {"opaque": 1.0, "partial": 0.5, "sparse": 0.03}[kind]
+    alpha = np.where(rng.random(shape) < p, rng.integers(1, 256, shape), 0)
+    alpha.flat[0] = 255  # a cut never emits a fragment with no coverage
+    return tile, alpha.astype(np.uint8)
+
+
+def _painted(raw, shape=(GROUP_TS, GROUP_TS)):
+    """The compose reference from raw (image_id, tile, alpha) triples:
+    image_id order, pixels where alpha > 0 overwrite, gray replicated
+    into an RGB tile."""
+    c = max(t.shape[2] for _i, t, _a in raw)
+    buf = np.zeros((*shape, c), dtype=np.uint8)
+    cover = np.zeros(shape, dtype=np.uint8)
+    for _i, t, a in sorted(raw, key=lambda f: f[0]):
+        t = np.repeat(t[:, :, :1], c, axis=2) if t.shape[2] < c else t
+        buf[a > 0] = t[a > 0]
+        cover[a > 0] = 255
+    return np.dstack([buf, cover])
+
+
+def _frags(raw, z=3, tx=2, ty=5):
+    return pd.DataFrame(
+        [_fragment_row(SimpleNamespace(image_id=i), z, tx, ty, t, a) for i, t, a in raw],
+        columns=FRAGMENT_COLUMNS,
+    )
+
+
+def _no_decode(monkeypatch):
+    def boom(buf):
+        raise AssertionError("a one-fragment tile must not be decoded")
+
+    monkeypatch.setattr(codecs, "decode_png", boom)
+
+
+KINDS = ["opaque", "partial", "sparse"]
+
+
+class TestSingleFragmentPassThrough:
+    """Fragments leave the cut in final form, so a one-fragment tile is
+    the fragment's own PNG; it must equal composing the raw arrays."""
+
+    @pytest.mark.parametrize("c", [1, 3])
+    @pytest.mark.parametrize("kind", KINDS)
+    def test_single_fragment_equals_painting_raw(self, c, kind, monkeypatch):
+        rng = np.random.default_rng(100 * c + KINDS.index(kind))
+        for trial in range(4):
+            raw = [("img", *_raw_fragment(rng, c, kind))]
+            want = _tile_frame(_painted(raw), TILE_SCHEMA).iloc[0]
+            frags = _frags(raw)
+            _no_decode(monkeypatch)
+            got = _compose_group(frags, GROUP_TS).iloc[0]
+            monkeypatch.undo()
+            assert bytes(got["png"]) == bytes(want["png"])
+            assert list(got["checksums"]) == list(want["checksums"])
+            assert got["checksum"] == want["checksums"][0]
+            assert (got["n_src"], list(got["src_ids"])) == (1, ["img"])
+            assert (got["z"], got["tx"], got["ty"], got["y_xyz"]) == (3, 2, 5, 2)
+
+    @pytest.mark.parametrize("n", [2, 3, 5])
+    def test_multi_fragment_equals_painting_raw(self, n):
+        rng = np.random.default_rng(n)
+        for trial in range(4):
+            raw = [
+                (f"img{i}", *_raw_fragment(rng, int(rng.choice([1, 3])), str(rng.choice(KINDS))))
+                for i in rng.permutation(n)
+            ]
+            want = _painted(raw)
+            got = _compose_group(_frags(raw), GROUP_TS).iloc[0]
+            np.testing.assert_array_equal(codecs.decode_png(bytes(got["png"])), want)
+            assert bytes(got["png"]) == bytes(_tile_frame(want, TILE_SCHEMA).iloc[0]["png"])
+            assert list(got["checksums"]) == image_checksums(want)
+            assert got["n_src"] == n
+            assert list(got["src_ids"]) == sorted(i for i, _t, _a in raw)
+
+    def test_fragments_carry_an_empty_alpha(self):
+        rng = np.random.default_rng(3)
+        row = _frags([("img", *_raw_fragment(rng, 3, "partial"))]).iloc[0]
+        assert row["alpha"] == b"" and row["c"] == 3
+        assert codecs.decode_png(bytes(row["px"])).shape == (GROUP_TS, GROUP_TS, 4)
+
+    def test_mosaic_edge_tile_passes_through(self, monkeypatch):
+        from gdal_spark.operators.mosaic import MOSAIC_TILE_SCHEMA
+
+        rng = np.random.default_rng(11)
+        th, tw = 5, 9  # an edge tile clipped to the raster size
+        raw = [("src", *_raw_fragment(rng, 3, "partial", (th, tw)))]
+        want = _tile_frame(_painted(raw, (th, tw)), MOSAIC_TILE_SCHEMA).iloc[0]
+        gts = dict(zip(("gt0", "gt1", "gt2", "gt3", "gt4", "gt5"), (1.0, 2.0, 0.0, 9.0, 0.0, -2.0)))
+        frags = _frags(raw, z=0, tx=4, ty=1)
+        _no_decode(monkeypatch)
+        got = _compose_frame(
+            frags, (th, tw), MOSAIC_TILE_SCHEMA, tx=4, ty=1, w=tw, h=th, **gts
+        ).iloc[0]
+        assert bytes(got["png"]) == bytes(want["png"])
+        assert list(got["checksums"]) == list(want["checksums"])
+        assert (got["w"], got["h"], got["n_src"], list(got["src_ids"])) == (tw, th, 1, ["src"])
+        assert {k: got[k] for k in gts} == gts
 
 
 class TestWarpTranslateDF:
